@@ -468,6 +468,11 @@ def _sweep_nb(rule: DriftRule, edges: list) -> tuple[int, "Column"]:
     return len(inner) + 1, _bin_expr(F.col("_x"), inner, categorical=False)
 
 
+#: explicit reload schema of sweep_histogram_partials — never infer: a
+#: first batch with no non-NULL values writes a part-file-less directory
+SWEEP_PARTIALS_DDL = "partition_id int, _g string, _bin int, n bigint"
+
+
 def sweep_histogram_partials(
     df: DataFrame, rule: DriftRule, edges: list
 ) -> DataFrame:

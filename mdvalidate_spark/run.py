@@ -28,23 +28,78 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import statistics
 import tempfile
 import time
 import uuid
+import warnings
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import reduce
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BinaryType, BooleanType, NumericType
 from pyspark.storagelevel import StorageLevel
 
 from .compile import ConstraintProgram, compile_spec
 from .operators import agg_rules, drift as drift_ops, pixel as pixel_ops
-from .operators.ref_rules import ref_violations
+from .operators import sampling, smoke
+from .operators.association import association_rule_results
+from .operators.digits import (
+    BENFORD_PARTIALS_DDL,
+    benford_rule_partials,
+    benford_rule_results,
+    benford_rule_results_from_partials,
+)
+from .operators.gaps import gap_violations
+from .operators.outliers import outlier_violations
+from .operators.overlap import overlap_violations
+from .operators.reconcile import (
+    PARTITION_FINGERPRINT_DDL,
+    partition_fingerprint,
+    table_fingerprint,
+)
+from .operators.ref_rules import ref_fused_check, ref_violations
 from .operators.row_rules import row_violations, with_partition_id
+from .operators.schema_rules import schema_violations
+from .operators.sequence import monotonic_violations, sequence_violations
+from .operators.similarity import (
+    embedding_health_partials,
+    embedding_health_rule_results,
+    embedding_health_rule_results_from_partials,
+    health_partials_ddl,
+)
+from .operators.skew import (
+    CONCENTRATION_PARTIALS_DDL,
+    concentration_partials,
+    concentration_rule_results,
+    concentration_rule_results_from_partials,
+)
 from .errors import KIND_OVER_VOLUME, KIND_UNDER_VOLUME, SchemaError
 from .plans.manifest import FAILED, FINALIZED, Manifest, VALIDATED
-from .spec import Spec
+from .spec import (
+    NUMERIC_BOUND_METRICS,
+    AssociationRule,
+    BenfordRule,
+    ColumnStatsRule,
+    CompositeRegexRule,
+    ConcentrationRule,
+    CountRule,
+    DriftRule,
+    EmbeddingHealthRule,
+    ExprRule,
+    FreshnessRule,
+    FunctionalDependencyRule,
+    GapRule,
+    MonotonicRule,
+    OutlierRule,
+    Spec,
+    UniqueRule,
+    parse_bound_metric,
+)
+from .spec_io import spec_to_dict
 
 _VIOLATIONS_DDL = (
     "run_id string, partition_id int, rule_id string, image_id string, "
@@ -93,8 +148,6 @@ def _analyze_expr(df, rule_id, expr, label, context, required_type=None):
     Shared by every expr-bearing rule family (drift, outlier, ExprRule)
     so a typo'd expression is a SchemaError at run init, not an
     AnalysisException mid-job. Returns the resolved DataType."""
-    from .errors import SchemaError
-
     try:
         analyzed = df.select(F.expr(expr).alias("_x"))
     except Exception as e:
@@ -110,6 +163,154 @@ def _analyze_expr(df, rule_id, expr, label, context, required_type=None):
             f"(got {dt.simpleString()})"
         )
     return dt
+
+
+@dataclass(frozen=True)
+class _Partials:
+    """One incremental rule family: its mergeable per-partition partials.
+
+    A *unit* is one rule, or — for ``per_rule=False`` (stats) — the tuple
+    of every incremental rule of the family, sharing one partials frame.
+    Each validated batch appends ``partial(run, batch_df, unit)`` to the
+    run and persists it under ``{checkpoint}/{key(unit)}`` keyed by
+    partition_id (dynamic overwrite: re-validating a partition replaces
+    its partial). A resumed run reloads that directory with an explicit
+    schema — never inferred, because a batch with no in-scope rows writes
+    a directory without part files, which inference refuses. Finalize
+    turns the accumulated partials into the family's result with
+    ``merge``; a unit with none (e.g. a rule added to the spec after every
+    partition was validated) gets ``full``, the same result from a table
+    scan."""
+
+    rule_type: type
+    sink: str
+    per_rule: bool
+    partial: Callable  # (run, batch_df, unit) -> partials frame
+    merge: Callable  # (run, merged partials, unit) -> result
+    full: Callable  # (run, unit) -> result
+    ddl: Callable | None = None  # unit -> declared reload DDL
+
+    def units(self, prog: ConstraintProgram) -> tuple:
+        rules = tuple(
+            r for r in prog.all_rules
+            if isinstance(r, self.rule_type) and r.incremental
+        )
+        if self.per_rule:
+            return rules
+        return (rules,) if rules else ()
+
+    def key(self, unit) -> str:
+        return f"{self.sink}/{unit.id}" if self.per_rule else self.sink
+
+    def reload_schema(self, run: "ValidationRun", unit):
+        """The declared DDL, else the analyzed schema of the unit's partial
+        plan over the run's frame (driver-side analysis, no job)."""
+        if self.ddl is not None:
+            return self.ddl(unit)
+        return self.partial(run, run.df, unit).schema
+
+
+# Sweep drift's result is (violations, metrics, n_violations) like every
+# drift path; stats' is a metrics frame, or None when the rules have no
+# partials — finalize then fuses them into its one global aggregate; the
+# group families' is (violations, metrics).
+_DRIFT_PARTIALS = _Partials(
+    DriftRule, "drift_partials", per_rule=True,
+    partial=lambda run, df, r: drift_ops.sweep_histogram_partials(
+        df, r, run._frozen_edges(r, df)
+    ),
+    merge=lambda run, p, r: drift_ops.drift_sweep_from_partials(
+        run.spark, p, r, run.run_id, run._frozen_edges(r, None)
+    ),
+    full=lambda run, r: drift_ops.drift_check(run.df, r, run.run_id),
+    ddl=lambda r: drift_ops.SWEEP_PARTIALS_DDL,
+)
+_STATS_PARTIALS = _Partials(
+    ColumnStatsRule, "stats_partials", per_rule=False,
+    partial=lambda run, df, rules: agg_rules.column_stats_partials(
+        df, rules, run.run_id
+    ),
+    merge=lambda run, p, rules: agg_rules.column_stats_from_partials(
+        p, rules, run.run_id
+    ),
+    # no partials: finalize fuses the rules into its global aggregation
+    full=lambda run, rules: None,
+)
+_BENFORD_PARTIALS = _Partials(
+    BenfordRule, "benford_partials", per_rule=True,
+    partial=lambda run, df, r: benford_rule_partials(df, r),
+    merge=lambda run, p, r: benford_rule_results_from_partials(
+        p, r, run.run_id
+    ),
+    full=lambda run, r: benford_rule_results(run.df, r, run.run_id),
+    ddl=lambda r: BENFORD_PARTIALS_DDL,
+)
+_CONCENTRATION_PARTIALS = _Partials(
+    ConcentrationRule, "concentration_partials", per_rule=True,
+    partial=lambda run, df, r: concentration_partials(df, r),
+    merge=lambda run, p, r: concentration_rule_results_from_partials(
+        p, r, run.run_id
+    ),
+    full=lambda run, r: concentration_rule_results(run.df, r, run.run_id),
+    ddl=lambda r: CONCENTRATION_PARTIALS_DDL,
+)
+_HEALTH_PARTIALS = _Partials(
+    EmbeddingHealthRule, "health_partials", per_rule=True,
+    partial=lambda run, df, r: embedding_health_partials(df, r),
+    merge=lambda run, p, r: embedding_health_rule_results_from_partials(
+        p, r, run.run_id
+    ),
+    full=lambda run, r: embedding_health_rule_results(run.df, r, run.run_id),
+    ddl=lambda r: health_partials_ddl(r.dim),
+)
+#: every incremental family, in the order each batch builds its partials
+_INCREMENTAL_FAMILIES = (
+    _DRIFT_PARTIALS,
+    _STATS_PARTIALS,
+    _BENFORD_PARTIALS,
+    _CONCENTRATION_PARTIALS,
+    _HEALTH_PARTIALS,
+)
+
+#: finalize's evaluation of each global (group-stage) rule type →
+#: (violations, metrics or None); the incremental families go through
+#: their partials
+_GLOBAL_HANDLERS: dict[type, Callable] = {
+    UniqueRule: lambda run, r: (
+        agg_rules.unique_violations(run.df, r, run.run_id), None
+    ),
+    OutlierRule: lambda run, r: (
+        outlier_violations(run.df, r, run.run_id, run.spec.key_column), None
+    ),
+    MonotonicRule: lambda run, r: (
+        monotonic_violations(run.df, r, run.run_id, run.spec.key_column),
+        None,
+    ),
+    FunctionalDependencyRule: lambda run, r: (
+        agg_rules.fd_violations(run.df, r, run.run_id), None
+    ),
+    AssociationRule: lambda run, r: association_rule_results(
+        run.df, r, run.run_id
+    ),
+    FreshnessRule: lambda run, r: (
+        agg_rules.freshness_violations(run.df, r, run.run_id), None
+    ),
+    BenfordRule: lambda run, r: run._partials_result(_BENFORD_PARTIALS, r),
+    ConcentrationRule: lambda run, r: run._partials_result(
+        _CONCENTRATION_PARTIALS, r
+    ),
+    EmbeddingHealthRule: lambda run, r: run._partials_result(
+        _HEALTH_PARTIALS, r
+    ),
+    GapRule: lambda run, r: (gap_violations(run.df, r, run.run_id), None),
+    CountRule: lambda run, r: (
+        agg_rules.count_violations(
+            run.df, r, run.run_id,
+            universe=run.dims.get(r.universe) if r.universe else None,
+        ),
+        None,
+    ),
+}
 
 
 class ValidationRun:
@@ -162,11 +363,8 @@ class ValidationRun:
         # e.g. bytes-per-pixel) — analyze now and require a NUMERIC result,
         # so a typo'd expr or a string-typed metric fails before any job
         # instead of yielding an all-NULL envelope that flags nothing
-        from .spec import OutlierRule as _OutlierRuleInit
-        from pyspark.sql.types import BooleanType, NumericType
-
         for orr in self.program.group_rules:
-            if isinstance(orr, _OutlierRuleInit) and orr.expr:
+            if isinstance(orr, OutlierRule) and orr.expr:
                 _analyze_expr(
                     self.df, orr.id, orr.expr, "outlier expr",
                     "the input schema", required_type=NumericType,
@@ -175,10 +373,8 @@ class ValidationRun:
         # analyze each against the frame PRUNED to its declared columns so
         # an undeclared read (or a typo) is a SchemaError at init, and
         # require a boolean result; actual_expr only needs to resolve
-        from .spec import ExprRule as _ExprRule
-
         for er in self.program.row_rules:
-            if not isinstance(er, _ExprRule):
+            if not isinstance(er, ExprRule):
                 continue
             pruned = self.df.select(*[F.col(c) for c in er.columns])
             ctx = f"the declared columns {er.columns}"
@@ -202,21 +398,10 @@ class ValidationRun:
             *self.program.metric_bound_rules,
         ):
             w = getattr(rr, "when", "")
-            if not w:
-                continue
-            try:
-                analyzed = self.df.select(F.expr(w).alias("_w"))
-            except Exception as e:
-                raise SchemaError(
-                    f"rule {rr.id!r}: when predicate {w!r} does not resolve "
-                    f"against the input schema: {e}"
-                ) from e
-            from pyspark.sql.types import BooleanType
-
-            if not isinstance(analyzed.schema["_w"].dataType, BooleanType):
-                raise SchemaError(
-                    f"rule {rr.id!r}: when predicate {w!r} is not boolean "
-                    f"(got {analyzed.schema['_w'].dataType.simpleString()})"
+            if w:
+                _analyze_expr(
+                    self.df, rr.id, w, "when predicate", "the input schema",
+                    required_type=BooleanType,
                 )
         # moments of a non-numeric column would be silent all-NULL metrics
         # after the cast — SchemaError now, before any job
@@ -225,8 +410,6 @@ class ValidationRun:
                 agg_rules._require_numeric(self.df, sr, "moments")
         # numeric metrics of a non-numeric column would be silent all-NULL
         # (→ spurious 'no value' violations) after the cast — reject now
-        from .spec import NUMERIC_BOUND_METRICS, parse_bound_metric
-
         for mb in self.program.metric_bound_rules:
             family, _q = parse_bound_metric(mb.metric)
             if family == "quantile" or mb.metric in NUMERIC_BOUND_METRICS:
@@ -265,20 +448,14 @@ class ValidationRun:
         # in-memory accumulation (checkpointed runs also persist to parquet)
         self._violation_dfs: list[DataFrame] = []
         self._metric_dfs: list[DataFrame] = []
-        # mergeable per-partition stats partials (incremental=True stats
-        # rules): one tiny frame per batch; finalize merges them instead of
+        # mergeable per-partition partials of the incremental families
+        # (_INCREMENTAL_FAMILIES): one tiny frame per batch and unit, keyed
+        # by the unit's checkpoint path; finalize merges them instead of
         # rescanning the table
-        self._stats_partials: list[DataFrame] = []
+        self._partials: dict[str, list[DataFrame]] = {}
         # incremental sweep-drift: frozen bin edges per rule (first batch
-        # defines them; persisted so a resumed run bins identically) and
-        # accumulated per-batch histogram partial frames per rule
+        # defines them; persisted so a resumed run bins identically)
         self._drift_frozen_edges: dict[str, list] = {}
-        self._drift_partials: dict[str, list[DataFrame]] = {}
-        # accumulated per-batch Benford digit partials per incremental rule
-        self._benford_partials: dict[str, list[DataFrame]] = {}
-        self._concentration_partials: dict[str, list[DataFrame]] = {}
-        # accumulated per-batch embedding-matrix partials per incremental rule
-        self._health_partials: dict[str, list[DataFrame]] = {}
         self._finalized = False
         self._schema_checked = False
         self._schema_violations = 0
@@ -407,8 +584,6 @@ class ValidationRun:
         close that window."""
         if self._fingerprint_columns is not None:
             return sorted(self._fingerprint_columns)
-        from pyspark.sql.types import BinaryType
-
         skip = {self.spec.key_column, "partition_id"}
         return sorted(
             f.name
@@ -421,8 +596,6 @@ class ValidationRun:
         map-only scan reduced to #partitions rows; computed once and
         cached for the run)."""
         if self._fingerprint_df is None:
-            from .operators.reconcile import partition_fingerprint
-
             self._fingerprint_df = self._keep(
                 partition_fingerprint(
                     self.df,
@@ -433,8 +606,6 @@ class ValidationRun:
         return self._fingerprint_df
 
     def _spec_hash(self) -> str:
-        from .spec_io import spec_to_dict
-
         return hashlib.md5(
             json.dumps(spec_to_dict(self.spec), sort_keys=True).encode()
         ).hexdigest()
@@ -446,8 +617,6 @@ class ValidationRun:
         the life of a run (the gate relies on that), and the gate check at
         init plus the snapshot write at finalize would otherwise each pay
         one collect per dim."""
-        from .operators.reconcile import table_fingerprint
-
         if self._dim_fp_cache is not None:
             return self._dim_fp_cache
         out = {}
@@ -489,8 +658,6 @@ class ValidationRun:
         manifest (and overwritten per-partition violations), so pairing
         them would carry counters measured on content the snapshot does
         not describe."""
-        from .operators.reconcile import PARTITION_FINGERPRINT_DDL
-
         meta_path = os.path.join(self._fingerprint_dir(), "meta.json")
         if not os.path.exists(meta_path):
             return  # first gated run: finalize() writes the snapshot
@@ -588,8 +755,6 @@ class ValidationRun:
         self._schema_checked = True
         if not self.program.schema_rules:
             return 0
-        from .operators.schema_rules import schema_violations
-
         sv = _union(
             [schema_violations(self.df, r, self.run_id) for r in self.program.schema_rules],
             self.spark,
@@ -698,8 +863,6 @@ class ValidationRun:
         # (left broadcast join + fused checks — one pass over the fact table
         # instead of one per family). Huge dims (broadcast_dim=False) and
         # specs with no row rules keep the standalone anti-join path.
-        from .operators.ref_rules import ref_fused_check
-
         fused_refs = (
             [rr for rr in prog.ref_rules if rr.broadcast_dim]
             if prog.row_rules
@@ -730,8 +893,6 @@ class ValidationRun:
                     batch_df, cr, self.run_id, expected_partitions=partitions
                 )
             )
-        from .spec import CompositeRegexRule
-
         comp_caps = [
             r for r in prog.row_rules
             if isinstance(r, CompositeRegexRule) and r.capture
@@ -821,74 +982,18 @@ class ValidationRun:
             viols.append(dv)
             mets.append(dm)
 
-        for dr in (r for r in prog.drift_rules if r.incremental):
-            edges = self._frozen_edges(dr, batch_df)
-            partial = self._keep(
-                drift_ops.sweep_histogram_partials(batch_df, dr, edges)
-            )
-            self._drift_partials.setdefault(dr.id, []).append(partial)
-            if self.checkpoint_dir:
-                partial.write.mode("overwrite").partitionBy(
-                    "partition_id"
-                ).parquet(self._sink(f"drift_partials/{dr.id}"))
-
-        inc_stats = tuple(r for r in prog.stats_rules if r.incremental)
-        if inc_stats:
-            partials = self._keep(
-                agg_rules.column_stats_partials(batch_df, inc_stats, self.run_id)
-            )
-            self._stats_partials.append(partials)
-            if self.checkpoint_dir:
-                # dynamic partition overwrite → re-validating a partition
-                # replaces its partial (idempotent resume, same as lineage)
-                partials.write.mode("overwrite").partitionBy(
-                    "partition_id"
-                ).parquet(self._sink("stats_partials"))
-
-        from .spec import BenfordRule as _BenfordRule
-
-        for br in (
-            r for r in prog.group_rules
-            if isinstance(r, _BenfordRule) and r.incremental
-        ):
-            from .operators.digits import benford_rule_partials
-
-            bp = self._keep(benford_rule_partials(batch_df, br))
-            self._benford_partials.setdefault(br.id, []).append(bp)
-            if self.checkpoint_dir:
-                bp.write.mode("overwrite").partitionBy("partition_id").parquet(
-                    self._sink(f"benford_partials/{br.id}")
-                )
-
-        from .spec import ConcentrationRule as _ConcRule
-
-        for cr in (
-            r for r in prog.group_rules
-            if isinstance(r, _ConcRule) and r.incremental
-        ):
-            from .operators.skew import concentration_partials
-
-            cp = self._keep(concentration_partials(batch_df, cr))
-            self._concentration_partials.setdefault(cr.id, []).append(cp)
-            if self.checkpoint_dir:
-                cp.write.mode("overwrite").partitionBy("partition_id").parquet(
-                    self._sink(f"concentration_partials/{cr.id}")
-                )
-
-        from .spec import EmbeddingHealthRule as _EmbHealthRule
-
-        for hr in (
-            r for r in prog.group_rules
-            if isinstance(r, _EmbHealthRule) and r.incremental
-        ):
-            from .operators.similarity import embedding_health_partials
-
-            hp = self._keep(embedding_health_partials(batch_df, hr))
-            self._health_partials.setdefault(hr.id, []).append(hp)
-            if self.checkpoint_dir:
-                hp.write.mode("overwrite").partitionBy("partition_id").parquet(
-                    self._sink(f"health_partials/{hr.id}")
-                )
+        for fam in _INCREMENTAL_FAMILIES:
+            for unit in fam.units(prog):
+                key = fam.key(unit)
+                part = self._keep(fam.partial(self, batch_df, unit))
+                self._partials.setdefault(key, []).append(part)
+                if self.checkpoint_dir:
+                    # dynamic partition overwrite → re-validating a
+                    # partition replaces its partial (idempotent resume,
+                    # same as lineage)
+                    part.write.mode("overwrite").partitionBy(
+                        "partition_id"
+                    ).parquet(self._sink(key))
 
         cap = spec.max_violations_per_rule
         full_viol = _union(viols, self.spark, _VIOLATIONS_DDL)
@@ -900,8 +1005,6 @@ class ValidationRun:
             # evaluation of the rule expressions (one per pass) — at scale
             # that trade replaces materializing up to one violation row per
             # input row.
-            from .operators import sampling
-
             viol_totals = self._keep(
                 sampling.violation_count_metrics(full_viol, self.run_id)
             )
@@ -916,8 +1019,6 @@ class ValidationRun:
         # per-partition bookkeeping in ONE aggregation each; the two collects
         # are independent → submitted concurrently (row-count scan overlaps
         # the tail of the violation job instead of following it)
-        from concurrent.futures import ThreadPoolExecutor
-
         t0 = time.time()
 
         def _collect_counts(frame: DataFrame, label: str) -> dict:
@@ -1014,6 +1115,16 @@ class ValidationRun:
         _prof("batch violations + row counts (deferred join)", t0)
         self._mark_batch(None, viol_counts, row_counts, batch_t0)
 
+    def _partials_result(self, fam: _Partials, unit):
+        """``fam``'s finalize result for ``unit``: merged from the unit's
+        accumulated partials, or the family's full-scan result when it has
+        none."""
+        pieces = self._partials.get(fam.key(unit))
+        if pieces:
+            merged = reduce(lambda a, b: a.unionByName(b), pieces)
+            return fam.merge(self, merged, unit)
+        return fam.full(self, unit)
+
     def _frozen_edges(self, rule, batch_df: DataFrame) -> list:
         """Frozen bin edges for an incremental sweep rule: loaded from the
         checkpoint if a prior run froze them, else computed from the FIRST
@@ -1022,8 +1133,6 @@ class ValidationRun:
         bins — so first-batch quantiles are a sound bin definition."""
         if rule.id in self._drift_frozen_edges:
             return self._drift_frozen_edges[rule.id]
-        import json as _json
-
         path = (
             os.path.join(self.checkpoint_dir, f"drift_edges_{rule.id}.json")
             if self.checkpoint_dir
@@ -1031,13 +1140,13 @@ class ValidationRun:
         )
         if path and os.path.exists(path):
             with open(path) as f:
-                edges = _json.load(f)
+                edges = json.load(f)
         elif batch_df is not None:
             edges = drift_ops.compute_edges(batch_df, rule)
             if path:
                 os.makedirs(self.checkpoint_dir, exist_ok=True)
                 with open(path, "w") as f:
-                    _json.dump(edges, f)
+                    json.dump(edges, f)
         else:
             raise RuntimeError(
                 f"rule {rule.id!r}: drift partials exist but the frozen-edge "
@@ -1073,8 +1182,6 @@ class ValidationRun:
         ]
         if not to_submit:
             return
-        from concurrent.futures import ThreadPoolExecutor
-
         self._drift_pool = ThreadPoolExecutor(
             max_workers=len(to_submit),
             thread_name_prefix="mdv-drift-edges",
@@ -1121,8 +1228,6 @@ class ValidationRun:
         unique/count evaluation: the fixed latency of the global pass is the
         max of the two, not the sum. (Spark job submission from multiple
         driver threads is a supported, standard pattern.)"""
-        from concurrent.futures import ThreadPoolExecutor
-
         # idempotent: a caller may reach finalize() without validate_pending
         # (resume with nothing pending) — schema drift must still be checked
         if self._check_schema() > 0 and self.spec.fast_fail:
@@ -1134,121 +1239,10 @@ class ValidationRun:
         mets: list[DataFrame] = []
 
         for gr in prog.group_rules:
-            from .spec import CountRule, FunctionalDependencyRule, UniqueRule
-            from .spec import AssociationRule as _AssociationRule
-            from .spec import BenfordRule as _BenfordRule
-            from .spec import ConcentrationRule as _ConcentrationRule
-            from .spec import EmbeddingHealthRule as _EmbeddingHealthRule
-            from .spec import FreshnessRule as _FreshnessRule
-            from .spec import GapRule as _GapRule
-            from .spec import MonotonicRule as _MonotonicRule
-            from .spec import OutlierRule as _OutlierRule
-
-            if isinstance(gr, UniqueRule):
-                viols.append(
-                    agg_rules.unique_violations(self.df, gr, self.run_id)
-                )
-            elif isinstance(gr, _OutlierRule):
-                from .operators.outliers import outlier_violations
-
-                viols.append(
-                    outlier_violations(
-                        self.df, gr, self.run_id, self.spec.key_column
-                    )
-                )
-            elif isinstance(gr, _MonotonicRule):
-                from .operators.sequence import monotonic_violations
-
-                viols.append(
-                    monotonic_violations(
-                        self.df, gr, self.run_id, self.spec.key_column
-                    )
-                )
-            elif isinstance(gr, FunctionalDependencyRule):
-                viols.append(agg_rules.fd_violations(self.df, gr, self.run_id))
-            elif isinstance(gr, _AssociationRule):
-                from .operators.association import association_rule_results
-
-                a_viol, a_met = association_rule_results(
-                    self.df, gr, self.run_id
-                )
-                viols.append(a_viol)
-                mets.append(a_met)
-            elif isinstance(gr, _FreshnessRule):
-                viols.append(
-                    agg_rules.freshness_violations(self.df, gr, self.run_id)
-                )
-            elif isinstance(gr, _BenfordRule):
-                from .operators.digits import (
-                    benford_rule_results,
-                    benford_rule_results_from_partials,
-                )
-
-                pieces = self._benford_partials.get(gr.id, [])
-                if gr.incremental and pieces:
-                    # merge the persisted digit partials — O(#partitions),
-                    # never a table rescan (the incremental EOF pass)
-                    merged = reduce(lambda a, b: a.unionByName(b), pieces)
-                    b_viol, b_met = benford_rule_results_from_partials(
-                        merged, gr, self.run_id
-                    )
-                else:
-                    b_viol, b_met = benford_rule_results(
-                        self.df, gr, self.run_id
-                    )
-                viols.append(b_viol)
-                mets.append(b_met)
-            elif isinstance(gr, _ConcentrationRule):
-                from .operators.skew import (
-                    concentration_rule_results,
-                    concentration_rule_results_from_partials,
-                )
-
-                pieces = self._concentration_partials.get(gr.id, [])
-                if gr.incremental and pieces:
-                    # merge the persisted value-count partials —
-                    # O(partitions × values), never a table rescan
-                    merged = reduce(lambda a, b: a.unionByName(b), pieces)
-                    c_viol, c_met = concentration_rule_results_from_partials(
-                        merged, gr, self.run_id
-                    )
-                else:
-                    c_viol, c_met = concentration_rule_results(
-                        self.df, gr, self.run_id
-                    )
-                viols.append(c_viol)
-                mets.append(c_met)
-            elif isinstance(gr, _EmbeddingHealthRule):
-                from .operators.similarity import (
-                    embedding_health_rule_results,
-                    embedding_health_rule_results_from_partials,
-                )
-
-                pieces = self._health_partials.get(gr.id, [])
-                if gr.incremental and pieces:
-                    # merge the persisted matrix partials — O(#partitions),
-                    # never a table rescan (the incremental EOF pass)
-                    merged = reduce(lambda a, b: a.unionByName(b), pieces)
-                    e_viol, e_met = embedding_health_rule_results_from_partials(
-                        merged, gr, self.run_id
-                    )
-                else:
-                    e_viol, e_met = embedding_health_rule_results(
-                        self.df, gr, self.run_id
-                    )
-                viols.append(e_viol)
-                mets.append(e_met)
-            elif isinstance(gr, _GapRule):
-                from .operators.gaps import gap_violations
-
-                viols.append(gap_violations(self.df, gr, self.run_id))
-            elif isinstance(gr, CountRule):
-                viols.append(
-                    agg_rules.count_violations(
-                        self.df, gr, self.run_id,
-                        universe=self.dims.get(gr.universe) if gr.universe else None,
-                    )
-                )
+            g_viol, g_met = _GLOBAL_HANDLERS[type(gr)](self, gr)
+            viols.append(g_viol)
+            if g_met is not None:
+                mets.append(g_met)
 
         if prog.metric_bound_rules:
             # all bounds fuse into one aggregation pass; the 1-row result
@@ -1264,30 +1258,25 @@ class ValidationRun:
         # are pulled out of `mets` here and merged back after the fused job
         # resolves, so the whole global-metrics stage costs ONE table scan
         full_stats = tuple(r for r in prog.stats_rules if not r.incremental)
-        inc_stats = tuple(r for r in prog.stats_rules if r.incremental)
         vp = tuple(r for r in full_stats if r.top_values or r.entropy)
         if vp:  # exact value-distribution metrics: one shared grouped pass
             mets.append(agg_rules.value_profile_metrics(self.df, vp, self.run_id))
-        if inc_stats and self._stats_partials:
+        for inc_stats in _STATS_PARTIALS.units(prog):
             # merge the persisted per-partition partials — O(#partitions),
-            # never a table rescan (the incremental EOF pass)
-            merged = reduce(
-                lambda a, b: a.unionByName(b), self._stats_partials
-            )
-            mets.append(
-                agg_rules.column_stats_from_partials(merged, inc_stats, self.run_id)
-            )
+            # never a table rescan (the incremental EOF pass); without
+            # partials the rules join the fused global aggregation instead
+            inc_met = self._partials_result(_STATS_PARTIALS, inc_stats)
+            if inc_met is None:
+                full_stats += inc_stats
+            else:
+                mets.append(inc_met)
 
         for sq in prog.sequence_rules:  # groups may span engine partitions
-            from .operators.sequence import sequence_violations
-
             viols.append(
                 sequence_violations(self.df, sq, self.run_id, self.spec.key_column)
             )
 
         for ov in prog.overlap_rules:  # shard-pair distinct-set overlap
-            from .operators.overlap import overlap_violations
-
             # the engine knows its own group count when the audit groups by
             # partition_id — passing it keeps construction LAZY (no eager
             # guard job), so the sketch scan overlaps the other global
@@ -1309,8 +1298,6 @@ class ValidationRun:
             # O(#partitions) driver math over metadata the run already paid
             # for, including zero-row partitions. statistics.median matches
             # the operator/oracle interpolation (mean of middle two).
-            import statistics
-
             counted = sorted(
                 (pid, float(e["rows"]))
                 for pid, e in self.manifest.entries.items()
@@ -1392,8 +1379,6 @@ class ValidationRun:
             # global rules (uniqueness on a duplicate-heavy key, grouped
             # counts) can emit violation rows proportional to the input —
             # same bounded-sink treatment as the batch stage
-            from .operators import sampling
-
             uc_totals = self._keep(
                 sampling.violation_count_metrics(full_uc, self.run_id)
             )
@@ -1437,22 +1422,6 @@ class ValidationRun:
                     self.df, dr, self.run_id, self._drift_edges(dr)
                 )
 
-            def _run_drift_inc(dr):
-                # incremental sweep: merge the accumulated histogram
-                # partials — O(groups × bins), no table rescan
-                pieces = self._drift_partials.get(dr.id, [])
-                if not pieces:
-                    return (
-                        _empty(self.spark, _VIOLATIONS_DDL),
-                        _empty(self.spark, _METRICS_DDL),
-                        0,
-                    )
-                merged = reduce(lambda a, b: a.unionByName(b), pieces)
-                return drift_ops.drift_sweep_from_partials(
-                    self.spark, merged, dr, self.run_id,
-                    self._frozen_edges(dr, None),
-                )
-
             def _run_drift_ref(ref_name, drs):
                 # two-table rules sharing one reference frame FUSE into a
                 # single drift_vs_reference call: one stacked histogram scan
@@ -1493,11 +1462,9 @@ class ValidationRun:
                     viols.append(v)
                     mets.append(m)
                     n += k
-                from functools import reduce as _reduce
-
                 return (
-                    _reduce(lambda a, b: a.unionByName(b), viols),
-                    _reduce(lambda a, b: a.unionByName(b), mets),
+                    reduce(lambda a, b: a.unionByName(b), viols),
+                    reduce(lambda a, b: a.unionByName(b), mets),
                     n,
                 )
 
@@ -1563,7 +1530,11 @@ class ValidationRun:
                 else None
             )
             drift_futs = [
-                pool.submit(_run_drift_inc if dr.incremental else _run_drift, dr)
+                # incremental sweeps merge their histogram partials —
+                # O(groups × bins), no table rescan
+                pool.submit(self._partials_result, _DRIFT_PARTIALS, dr)
+                if dr.incremental
+                else pool.submit(_run_drift, dr)
                 for dr in plain_drift
                 if dr not in fusable_drift
             ] + [
@@ -1611,8 +1582,6 @@ class ValidationRun:
             self._join_deferred_counts()
             if viols:
                 if cap is not None:
-                    from .operators import sampling
-
                     uc_viol = self._keep(sampling.cap_violations(full_uc, cap))
                     pool.submit(
                         _desc, "finalize: capped global violations",
@@ -1693,8 +1662,6 @@ class ValidationRun:
                 # fully revalidates while the caller believes content
                 # gating is active (the same silent-stand-down class the
                 # smoke+gate combination is refused for)
-                import warnings
-
                 warnings.warn(
                     "fingerprint_gate: fast_fail aborted the run before "
                     "finalize, so no fingerprint snapshot was written — "
@@ -1828,86 +1795,30 @@ class ValidationRun:
             for p, e in self.manifest.entries.items()
             if e["status"] in (VALIDATED, FINALIZED)
         }
+        if not done:
+            return
+        validated = F.col("partition_id").isin(list(done))
         for name, ddl, target in (
             ("violations", _VIOLATIONS_DDL, self._violation_dfs),
             ("metrics", _METRICS_DDL, self._metric_dfs),
         ):
             path = self._sink(name)
-            if path and os.path.exists(path):
-                if done:
-                    df = self.spark.read.schema(ddl).parquet(path)
-                    target.append(
-                        df.where(F.col("partition_id").isin(list(done)))
+            if os.path.exists(path):
+                target.append(
+                    self.spark.read.schema(ddl).parquet(path).where(validated)
+                )
+        # incremental partials: explicit schema, never inference (see
+        # _Partials); only validated partitions' partials count
+        for fam in _INCREMENTAL_FAMILIES:
+            for unit in fam.units(self.program):
+                key = fam.key(unit)
+                path = self._sink(key)
+                if os.path.exists(path):
+                    self._partials.setdefault(key, []).append(
+                        self.spark.read.schema(fam.reload_schema(self, unit))
+                        .parquet(path)
+                        .where(validated)
                     )
-        # incremental stats partials: schema is spec-dependent (one column
-        # set per ruleset), so read with inference; only validated
-        # partitions' partials count toward the merged stats
-        sp_path = self._sink("stats_partials")
-        if sp_path and os.path.exists(sp_path) and done:
-            self._stats_partials.append(
-                self.spark.read.parquet(sp_path).where(
-                    F.col("partition_id").isin(list(done))
-                )
-            )
-        # incremental sweep-drift partials: one dir per rule
-        for dr in self.program.drift_rules:
-            if not dr.incremental:
-                continue
-            dp = self._sink(f"drift_partials/{dr.id}")
-            if dp and os.path.exists(dp) and done:
-                self._drift_partials.setdefault(dr.id, []).append(
-                    self.spark.read.parquet(dp).where(
-                        F.col("partition_id").isin(list(done))
-                    )
-                )
-        # incremental Benford digit partials: one dir per rule. Explicit
-        # schema (never infer): a `when`-scoped rule whose first validated
-        # batch had zero in-scope rows leaves a part-file-less directory
-        # that schema inference refuses, which would make the checkpoint
-        # unresumable.
-        from .operators.digits import BENFORD_PARTIALS_DDL
-        from .spec import BenfordRule as _BenfordRule
-
-        for br in self.program.group_rules:
-            if not (isinstance(br, _BenfordRule) and br.incremental):
-                continue
-            bp = self._sink(f"benford_partials/{br.id}")
-            if bp and os.path.exists(bp) and done:
-                self._benford_partials.setdefault(br.id, []).append(
-                    self.spark.read.schema(BENFORD_PARTIALS_DDL)
-                    .parquet(bp)
-                    .where(F.col("partition_id").isin(list(done)))
-                )
-        # incremental concentration value-count partials: one dir per
-        # rule, same explicit-schema reload contract as Benford
-        from .operators.skew import CONCENTRATION_PARTIALS_DDL
-        from .spec import ConcentrationRule as _ConcRule
-
-        for cr in self.program.group_rules:
-            if not (isinstance(cr, _ConcRule) and cr.incremental):
-                continue
-            cp = self._sink(f"concentration_partials/{cr.id}")
-            if cp and os.path.exists(cp) and done:
-                self._concentration_partials.setdefault(cr.id, []).append(
-                    self.spark.read.schema(CONCENTRATION_PARTIALS_DDL)
-                    .parquet(cp)
-                    .where(F.col("partition_id").isin(list(done)))
-                )
-        # incremental embedding-matrix partials: one dir per rule, same
-        # explicit-schema reload contract (the DDL is dim-dependent)
-        from .operators.similarity import health_partials_ddl
-        from .spec import EmbeddingHealthRule as _EmbHealthRule
-
-        for hr in self.program.group_rules:
-            if not (isinstance(hr, _EmbHealthRule) and hr.incremental):
-                continue
-            hp = self._sink(f"health_partials/{hr.id}")
-            if hp and os.path.exists(hp) and done:
-                self._health_partials.setdefault(hr.id, []).append(
-                    self.spark.read.schema(health_partials_ddl(hr.dim))
-                    .parquet(hp)
-                    .where(F.col("partition_id").isin(list(done)))
-                )
 
     def _save_manifest(self) -> None:
         if self.checkpoint_dir:
@@ -1960,8 +1871,6 @@ def smoke_validate(
     estimation layer appended as ordinary metric rows (``smoke_rate``,
     ``smoke_rate_lo``/``_hi``, ``smoke_est_total`` per rule;
     ``sample_fraction``/``sample_rows`` under rule_id ``__smoke__``)."""
-    from .operators import sampling, smoke
-
     run = ValidationRun(
         spark, spec, df.where(smoke.sample_predicate(spec.key_column, fraction)),
         dims=dims, run_id=run_id, checkpoint_dir=checkpoint_dir,

@@ -372,16 +372,6 @@ class HeaderRule(Rule):
             need = max(need, self.h_offset + 2)
         return max(need, self.min_length)
 
-    @property
-    def required_length(self) -> int:
-        """Worst-case bytes any row's checks read (static + longest
-        per-format magic) — documentation/lint value; the runtime truncation
-        gate is per-row (see static_required_length)."""
-        need = self.static_required_length
-        for _, hx in self.magic_by_fmt:
-            need = max(need, len(hx) // 2)
-        return need
-
 
 @dataclass(frozen=True)
 class ExprRule(Rule):

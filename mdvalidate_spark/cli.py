@@ -263,23 +263,24 @@ def main(argv=None) -> int:
         return _suggest_main(args)
     try:
         spec = load_spec(args.spec)
-        # lint now, before any Spark work (column check re-runs with the real
-        # schema inside ValidationRun)
+        if args.fast_fail or args.max_violations_per_rule is not None:
+            from dataclasses import replace
+
+            overrides = {}
+            if args.fast_fail:
+                overrides["fast_fail"] = True
+            if args.max_violations_per_rule is not None:
+                overrides["max_violations_per_rule"] = args.max_violations_per_rule
+            spec = replace(spec, **overrides)
+        # lint the spec the run will use (overrides applied) now, before any
+        # Spark work (column check re-runs with the real schema inside
+        # ValidationRun)
         from .compile import compile_spec
 
         compile_spec(spec)
     except SchemaError as e:
         print(f"schema error: {e}", file=sys.stderr)
         return 2
-    if args.fast_fail or args.max_violations_per_rule is not None:
-        from dataclasses import replace
-
-        overrides = {}
-        if args.fast_fail:
-            overrides["fast_fail"] = True
-        if args.max_violations_per_rule is not None:
-            overrides["max_violations_per_rule"] = args.max_violations_per_rule
-        spec = replace(spec, **overrides)
 
     from pyspark.sql import SparkSession
 

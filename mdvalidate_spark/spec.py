@@ -4,8 +4,11 @@ The reference declares constraints as a Markdown-shaped schema whose leaves are
 matchers ``` `id:/regex/`{min,max} ``` (reference: src/mdschema/validation/
 matchers/matcher.rs:92-109, matcher_extras.rs:112-122). Here the same roles are
 played by plain dataclasses: each rule has a deterministic id, a target, and
-params. A ``Spec`` is the analog of a parsed schema tree; ``compile_spec``
-(compile.py) is the analog of matcher compilation + schema lint.
+params. A ``Spec`` is the analog of a parsed schema tree. Like a reference
+matcher checking itself at parse time (matcher.rs:175-208), each rule class
+rejects its own malformed params in ``lint`` and names the execution stage
+that runs it in ``stage``; ``compile_spec`` (compile.py) adds the checks that
+span several rules, the analog of the schema-sanity walkers.
 
 Rule families and their reference ancestors:
 
@@ -29,8 +32,66 @@ Rule families and their reference ancestors:
 
 from __future__ import annotations
 
+import re
 from dataclasses import dataclass, field
-from typing import Optional, Sequence
+from datetime import datetime
+from typing import ClassVar, Optional, Sequence
+
+from pyspark.sql.types import (
+    ArrayType,
+    BinaryType,
+    DateType,
+    NumericType,
+    StringType,
+    StructType,
+    TimestampType,
+)
+
+from .errors import (
+    InvalidBoundsError,
+    MalformedRegexError,
+    MixedLiteralAndBoundsError,
+    SchemaError,
+)
+
+
+def _column_type(schema, path: str):
+    """Resolved DataType of a (possibly dotted) column path, or None when
+    ``schema`` is not a StructType or the path does not resolve. Dotted
+    paths step INTO nested structs (the reference validates inside nested
+    structure — QuoteVsQuote, walkers/validators/quotes.rs:21-66)."""
+    cur = schema
+    for part in path.split("."):
+        if not isinstance(cur, StructType):
+            return None
+        cur = next((f.dataType for f in cur.fields if f.name == part), None)
+    return cur
+
+
+def _require_type(rule, schema, column: str, types, what: str) -> None:
+    """Type-aware lint: when a typed ``schema`` resolves ``column``, its type
+    must be one of ``types``. ``what`` is the message template (fields
+    ``column``, ``got``, ``kind``). A plain name list or an unresolved path
+    passes — existence is compile_spec's column check."""
+    t = _column_type(schema, column)
+    if t is not None and not isinstance(t, types):
+        raise SchemaError(
+            f"rule {rule.id!r}: "
+            + what.format(column=repr(column), got=t.simpleString(), kind=rule.kind)
+        )
+
+
+def _compile_regex(rule_id: str, pattern: str):
+    # reject before touching data (matcher.rs:175-208)
+    try:
+        return re.compile(pattern)
+    except re.error as e:
+        raise MalformedRegexError(rule_id, pattern, str(e)) from e
+
+
+# text-shaped rules read characters: on a non-string column the regex/split
+# primitives would silently cast instead of failing loudly
+_STRING_COLUMN = "column {column} must be STRING for a {kind} rule, got {got}"
 
 
 @dataclass(frozen=True)
@@ -57,9 +118,31 @@ class Rule:
     # the sampled row frame.
     max_violation_rate: Optional[float] = None
 
+    #: the ConstraintProgram stage that runs this rule (field
+    #: ``f"{stage}_rules"``); every subclass declares one
+    stage: ClassVar[str]
+    #: why max_violation_rate cannot apply to this family ("" = it can)
+    rate_refusal: ClassVar[str] = ""
+
     def targets(self) -> tuple[str, ...]:
         """Columns this rule reads (for lint + column pruning)."""
         return ()
+
+    def lint(self, schema) -> None:
+        """Reject a malformed rule with a SchemaError before any data is
+        touched. ``schema`` is what compile_spec checks against: None, a
+        list of column names, or a StructType (type-aware checks run only
+        with a StructType). Subclasses extend this with their own checks;
+        checks spanning several rules live in compile_spec."""
+        if self.max_violation_rate is None:
+            return
+        if not (0.0 <= self.max_violation_rate < 1.0):
+            raise SchemaError(
+                f"rule {self.id!r}: max_violation_rate must be in [0, 1), "
+                f"got {self.max_violation_rate}"
+            )
+        if self.rate_refusal:
+            raise SchemaError(f"rule {self.id!r}: {self.rate_refusal}")
 
 
 # ---------------------------------------------------------------- row rules
@@ -76,6 +159,7 @@ class NotNullRule(Rule):
     #: where the predicate is FALSE or NULL are out of scope (pass).
     when: str = ""
     kind: str = field(default="not_null", init=False)
+    stage = "row"
 
     def targets(self):
         return (self.column,)
@@ -95,6 +179,11 @@ class RegexRule(Rule):
     full: bool = True
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="regex", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        _compile_regex(self.id, self.pattern)
 
     def targets(self):
         return (self.column,)
@@ -150,6 +239,13 @@ class CompositeRegexRule(Rule):
     capture_as_rows: bool = False
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="composite", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.pattern:
+            raise SchemaError(f"rule {self.id!r}: composite rule needs a pattern")
+        _compile_regex(self.id, self.pattern)
 
     def targets(self):
         return (self.column,)
@@ -175,6 +271,19 @@ class LiteralRule(Rule):
     other_column: Optional[str] = None  # column to equal (e.g. caption round-trip)
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="literal", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if (self.value is None) == (self.other_column is None):
+            raise SchemaError(
+                f"rule {self.id!r}: exactly one of value/other_column required"
+            )
+        # literal escape cannot carry bounds (matcher_extras.rs:163-170) —
+        # bounds live on CountRule; a LiteralRule with bounds is unrepresentable
+        # by construction, but a dict-built spec may smuggle them:
+        if getattr(self, "min", None) is not None or getattr(self, "max", None) is not None:
+            raise MixedLiteralAndBoundsError(self.id)
 
     def targets(self):
         t = [self.column]
@@ -190,6 +299,12 @@ class RangeRule(Rule):
     max: Optional[float] = None
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="range", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.min is not None and self.max is not None and self.min > self.max:
+            raise InvalidBoundsError(self.id, self.min, self.max)
 
     def targets(self):
         return (self.column,)
@@ -204,6 +319,12 @@ class DomainRule(Rule):
     values: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="domain", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.values:
+            raise SchemaError(f"rule {self.id!r}: empty domain")
 
     def targets(self):
         return (self.column,)
@@ -232,6 +353,25 @@ class VectorRule(Rule):
     forbid_nan: bool = True
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="vector", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.dim is None and not self.forbid_nan and (
+            self.min_norm is None and self.max_norm is None
+        ):
+            raise SchemaError(
+                f"rule {self.id!r}: vector rule checks nothing — set dim, "
+                "forbid_nan, and/or norm bounds"
+            )
+        if self.dim is not None and self.dim <= 0:
+            raise SchemaError(f"rule {self.id!r}: dim must be > 0, got {self.dim}")
+        if (
+            self.min_norm is not None
+            and self.max_norm is not None
+            and self.min_norm > self.max_norm
+        ):
+            raise InvalidBoundsError(self.id, self.min_norm, self.max_norm)
 
     def targets(self):
         return (self.column,)
@@ -264,6 +404,35 @@ class AlignmentRule(Rule):
     max_cos: Optional[float] = None
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="alignment", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.column_a or not self.column_b:
+            raise SchemaError(
+                f"rule {self.id!r}: alignment rule needs column_a and column_b"
+            )
+        if self.column_a == self.column_b:
+            raise SchemaError(
+                f"rule {self.id!r}: alignment of a column with itself is "
+                "vacuous (cos = 1 wherever defined)"
+            )
+        if self.min_cos is None and self.max_cos is None:
+            raise SchemaError(
+                f"rule {self.id!r}: alignment rule needs min_cos and/or "
+                "max_cos (a band-less cosine checks nothing)"
+            )
+        for name, v in (("min_cos", self.min_cos), ("max_cos", self.max_cos)):
+            if v is not None and not -1.0 <= v <= 1.0:
+                raise SchemaError(
+                    f"rule {self.id!r}: {name} must be in [-1, 1], got {v}"
+                )
+        if (
+            self.min_cos is not None
+            and self.max_cos is not None
+            and self.min_cos > self.max_cos
+        ):
+            raise InvalidBoundsError(self.id, self.min_cos, self.max_cos)
 
     def targets(self):
         return (self.column_a, self.column_b)
@@ -325,6 +494,86 @@ class HeaderRule(Rule):
     min_length: int = 0  # 0 = derived from the deepest offset any check reads
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="header", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.column:
+            raise SchemaError(f"rule {self.id!r}: header rule needs a column")
+        if not (
+            self.magic or self.magic_by_fmt or self.fmt_codes
+            or self.w_column or self.h_column
+        ):
+            raise SchemaError(
+                f"rule {self.id!r}: header rule checks nothing — set magic, "
+                "magic_by_fmt, fmt_codes, and/or w/h columns"
+            )
+        if self.magic and self.magic_by_fmt:
+            raise SchemaError(
+                f"rule {self.id!r}: magic and magic_by_fmt are exclusive "
+                "(one shared prefix OR per-format prefixes)"
+            )
+        if (self.magic_by_fmt or self.fmt_codes) and not self.fmt_column:
+            raise SchemaError(
+                f"rule {self.id!r}: per-format checks need fmt_column"
+            )
+        for hx in (self.magic, *(h for _, h in self.magic_by_fmt)):
+            if hx and (
+                len(hx) % 2 != 0
+                or any(ch not in "0123456789ABCDEF" for ch in hx)
+            ):
+                raise SchemaError(
+                    f"rule {self.id!r}: magic {hx!r} is not an even-length "
+                    "hex string"
+                )
+        for k, code in self.fmt_codes:
+            try:
+                ok = 0 <= int(code) <= 255
+            except (TypeError, ValueError):
+                ok = False
+            if not ok:
+                raise SchemaError(
+                    f"rule {self.id!r}: fmt code for {k!r} must be one "
+                    f"byte (0-255), got {code!r}"
+                )
+        for off in (self.code_offset, self.w_offset, self.h_offset):
+            if off < 0:
+                raise SchemaError(
+                    f"rule {self.id!r}: header offsets must be >= 0"
+                )
+        if self.w_column and self.h_column and abs(self.w_offset - self.h_offset) < 2:
+            raise SchemaError(
+                f"rule {self.id!r}: w/h u16 offsets overlap "
+                f"({self.w_offset}, {self.h_offset})"
+            )
+        # the code byte must not sit inside either u16 dim field — an
+        # overlapping layout reads the same bytes as two different
+        # things and one of the checks is then always wrong (ADVICE r3)
+        if self.fmt_codes:
+            for name, col, off in (
+                ("w", self.w_column, self.w_offset),
+                ("h", self.h_column, self.h_offset),
+            ):
+                if col and off <= self.code_offset < off + 2:
+                    raise SchemaError(
+                        f"rule {self.id!r}: code_offset {self.code_offset} "
+                        f"overlaps the {name} u16 field "
+                        f"[{off}, {off + 2})"
+                    )
+        if self.magic and self.fmt_codes and self.code_offset < len(self.magic) // 2:
+            raise SchemaError(
+                f"rule {self.id!r}: code_offset {self.code_offset} sits inside "
+                f"the {len(self.magic) // 2}-byte magic prefix — the code "
+                "byte would be constrained to a magic byte"
+            )
+        # header extraction is byte arithmetic: on a STRING column
+        # substring/hex operate per CHARACTER, so multibyte text
+        # silently mis-extracts instead of failing loudly (ADVICE r3)
+        _require_type(
+            self, schema, self.column, BinaryType,
+            "header rule column {column} must be BINARY, got {got} "
+            "(byte offsets are not character offsets)",
+        )
 
     def __post_init__(self):
         # accept dicts (ergonomic) and normalize to sorted tuple pairs so the
@@ -406,6 +655,20 @@ class ExprRule(Rule):
     actual_expr: str = ""
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="expr", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.expr:
+            raise SchemaError(f"rule {self.id!r}: expr rule needs an expression")
+        if not self.columns:
+            # the declared columns ARE the pruned-scan contract — an
+            # undeclared read would only surface as an AnalysisException
+            # against the pruned frame mid-run; demand the declaration
+            raise SchemaError(
+                f"rule {self.id!r}: expr rule must declare the columns its "
+                "expression reads (scan pruning + schema lint)"
+            )
 
     def targets(self):
         return self.columns
@@ -465,6 +728,20 @@ class FormatRule(Rule):
     format: str = "int"
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="format", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.format not in FORMATS:
+            raise SchemaError(
+                f"rule {self.id!r}: unknown format {self.format!r}; "
+                f"valid: {', '.join(FORMATS)}"
+            )
+        # format checks parse CHARACTERS: on an already-typed column the
+        # implicit cast would re-render the value (e.g. a real DATE column
+        # prints as yyyy-MM-dd and trivially passes) — that's a no-op
+        # check hiding a spec mistake, so demand STRING like PII/repetition
+        _require_type(self, schema, self.column, StringType, _STRING_COLUMN)
 
     def targets(self):
         return (self.column,)
@@ -489,6 +766,21 @@ class PiiRule(Rule):
     kinds: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="pii", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        from .operators.pii import PII_KINDS
+
+        super().lint(schema)
+        if self.max_total < 0:
+            raise SchemaError(f"rule {self.id!r}: max_total must be >= 0")
+        bad = [k for k in self.kinds if k not in PII_KINDS]
+        if bad:
+            raise SchemaError(
+                f"rule {self.id!r}: unknown PII kind(s) {bad}; "
+                f"valid: {', '.join(PII_KINDS)}"
+            )
+        _require_type(self, schema, self.column, StringType, _STRING_COLUMN)
 
     def targets(self):
         return (self.column,)
@@ -514,6 +806,26 @@ class RepetitionRule(Rule):
     min_words: int = 20
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="repetition", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        from .operators.text import REPETITION_METRIC_LIMITS, REPETITION_METRICS
+
+        super().lint(schema)
+        if self.metric not in REPETITION_METRICS:
+            raise SchemaError(
+                f"rule {self.id!r}: unknown repetition metric {self.metric!r}; "
+                f"valid: {', '.join(REPETITION_METRICS)}"
+            )
+        limit = REPETITION_METRIC_LIMITS[self.metric]
+        if not (0.0 <= self.max <= limit):
+            raise SchemaError(
+                f"rule {self.id!r}: max must be a fraction in [0, {limit}] "
+                f"for {self.metric}, got {self.max}"
+            )
+        if self.min_words < 0:
+            raise SchemaError(f"rule {self.id!r}: min_words must be >= 0")
+        _require_type(self, schema, self.column, StringType, _STRING_COLUMN)
 
     def targets(self):
         return (self.column,)
@@ -538,6 +850,27 @@ class TextQualityRule(Rule):
     max: Optional[float] = None
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="text_quality", init=False)
+    stage = "row"
+
+    def lint(self, schema) -> None:
+        from .operators.text import _QUALITY_COLS
+
+        super().lint(schema)
+        metrics = tuple(m for m in _QUALITY_COLS if m != "n_lines")
+        if self.metric not in metrics:
+            raise SchemaError(
+                f"rule {self.id!r}: unknown quality metric {self.metric!r}; "
+                f"valid: {', '.join(metrics)}"
+            )
+        if self.min is None and self.max is None:
+            raise SchemaError(
+                f"rule {self.id!r}: a quality gate needs min and/or max"
+            )
+        if self.min is not None and self.max is not None and self.min > self.max:
+            raise SchemaError(
+                f"rule {self.id!r}: min {self.min} > max {self.max}"
+            )
+        _require_type(self, schema, self.column, StringType, _STRING_COLUMN)
 
     def targets(self):
         return (self.column,)
@@ -557,6 +890,12 @@ class UniqueRule(Rule):
     columns: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="unique", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.columns:
+            raise SchemaError(f"rule {self.id!r}: unique rule needs >=1 column")
 
     def targets(self):
         return self.columns
@@ -587,6 +926,38 @@ class CountRule(Rule):
     # a group/partition with zero IN-SCOPE rows counts as 0
     when: str = ""
     kind: str = field(default="count", init=False)
+
+    @property
+    def stage(self) -> str:
+        return "group" if self.group_by else "count"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        lo, hi = self.min, self.max
+        if lo is not None and hi is not None and lo > hi:
+            raise InvalidBoundsError(self.id, lo, hi)
+        if (lo is not None and lo < 0) or (hi is not None and hi < 0):
+            raise InvalidBoundsError(self.id, lo, hi)
+        if self.universe:
+            if not self.group_by:
+                raise SchemaError(
+                    f"rule {self.id!r}: universe needs group_by (per-"
+                    "partition rules use the run's own partition set)"
+                )
+            if self.min is None:
+                raise SchemaError(
+                    f"rule {self.id!r}: universe without min is vacuous — "
+                    "a zero-row group can only violate a lower bound"
+                )
+            if (
+                self.universe_columns
+                and len(self.universe_columns) != len(self.group_by)
+            ):
+                raise SchemaError(
+                    f"rule {self.id!r}: universe_columns arity "
+                    f"({len(self.universe_columns)}) != group_by arity "
+                    f"({len(self.group_by)})"
+                )
 
     def targets(self):
         return self.group_by
@@ -619,6 +990,23 @@ class FunctionalDependencyRule(Rule):
     dependents: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="fd", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.determinants or not self.dependents:
+            raise SchemaError(
+                f"rule {self.id!r}: fd rule needs >=1 determinant and "
+                ">=1 dependent column"
+            )
+        overlap = set(self.determinants) & set(self.dependents)
+        if overlap:
+            # a dependent that is also a determinant is trivially
+            # functional — the rule can never fire; reject the vacuity
+            raise SchemaError(
+                f"rule {self.id!r}: column(s) {sorted(overlap)} appear as "
+                "both determinant and dependent (vacuously satisfied)"
+            )
 
     def targets(self):
         return self.determinants + self.dependents
@@ -647,6 +1035,23 @@ class MonotonicRule(Rule):
     strict: bool = False
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="monotonic", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.direction not in ("nondecreasing", "nonincreasing"):
+            raise SchemaError(
+                f"rule {self.id!r}: unknown direction {self.direction!r}; "
+                "valid: nondecreasing, nonincreasing"
+            )
+        if not self.group_by or not self.order_column or not self.column:
+            # an ungrouped (corpus-wide) window is one partition — a
+            # single-task bottleneck at any real scale; demand a group
+            raise SchemaError(
+                f"rule {self.id!r}: monotonic needs column, order_column "
+                "and a non-empty group_by (check global ordering per "
+                "partition/day group, never in one window)"
+            )
 
     def targets(self):
         return (self.column, self.order_column, *self.group_by)
@@ -694,6 +1099,32 @@ class OutlierRule(Rule):
     exact: bool = False
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="outlier", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.method not in ("iqr", "mad"):
+            raise SchemaError(
+                f"rule {self.id!r}: unknown outlier method {self.method!r}; "
+                "valid: iqr, mad"
+            )
+        if self.k <= 0:
+            raise SchemaError(f"rule {self.id!r}: k must be > 0, got {self.k}")
+        if bool(self.column) == bool(self.expr):
+            raise SchemaError(
+                f"rule {self.id!r}: outlier rule needs exactly one of "
+                "column or expr"
+            )
+        # quantiles of strings are meaningless; a silent cast("double")
+        # would yield an all-NULL envelope that flags nothing
+        # (expr-typed rules are analyzed at run init instead — the
+        # DriftRule.expr discipline)
+        if self.column:
+            _require_type(
+                self, schema, self.column, NumericType,
+                "column {column} must be numeric for an outlier rule, "
+                "got {got}",
+            )
 
     def __post_init__(self):
         if self.k == 0.0:
@@ -732,6 +1163,40 @@ class AssociationRule(Rule):
     max_v: float | None = None
     max_cells: int = 0  # 0 → operators.association.MAX_ASSOC_CELLS
     kind: str = field(default="association", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.col_a or not self.col_b or self.col_a == self.col_b:
+            raise SchemaError(
+                f"rule {self.id!r}: association needs two DISTINCT columns "
+                f"(got col_a={self.col_a!r}, col_b={self.col_b!r}) — a column "
+                "is perfectly associated with itself"
+            )
+        if self.min_v is None and self.max_v is None:
+            raise SchemaError(
+                f"rule {self.id!r}: association rule asserts nothing "
+                "without min_v and/or max_v (Cramér's V band)"
+            )
+        for name, bound in (("min_v", self.min_v), ("max_v", self.max_v)):
+            if bound is not None and not (0.0 <= bound <= 1.0):
+                raise SchemaError(
+                    f"rule {self.id!r}: {name} must be in [0, 1], "
+                    f"got {bound}"
+                )
+        if (
+            self.min_v is not None
+            and self.max_v is not None
+            and self.min_v > self.max_v
+        ):
+            raise SchemaError(
+                f"rule {self.id!r}: min_v {self.min_v} > max_v {self.max_v} — "
+                "an empty band can never pass"
+            )
+        if self.max_cells < 0:
+            raise SchemaError(
+                f"rule {self.id!r}: max_cells must be >= 0, got {self.max_cells}"
+            )
 
     def targets(self):
         return (self.col_a, self.col_b)
@@ -773,6 +1238,25 @@ class BenfordRule(Rule):
     # plus an O(#partitions) merge.
     incremental: bool = False
     kind: str = field(default="benford", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.column:
+            raise SchemaError(f"rule {self.id!r}: benford rule needs a column")
+        if not (0.0 < self.max_mad < 1.0):
+            raise SchemaError(
+                f"rule {self.id!r}: max_mad must be in (0, 1) (a share "
+                f"deviation), got {self.max_mad}"
+            )
+        if self.min_rows < 1:
+            raise SchemaError(
+                f"rule {self.id!r}: min_rows must be >= 1, got {self.min_rows}"
+            )
+        _require_type(
+            self, schema, self.column, NumericType,
+            "column {column} must be numeric for a benford rule, got {got}",
+        )
 
     def targets(self):
         return (self.column,)
@@ -800,6 +1284,28 @@ class GapRule(Rule):
     bucket_seconds: int = 86_400
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="gap", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.column:
+            raise SchemaError(f"rule {self.id!r}: gap rule needs a column")
+        if self.min_gap_seconds <= 0:
+            raise SchemaError(
+                f"rule {self.id!r}: min_gap_seconds must be > 0, got "
+                f"{self.min_gap_seconds} — every consecutive pair has "
+                "gap >= 0; a zero threshold reports the entire series"
+            )
+        if self.bucket_seconds <= 0:
+            raise SchemaError(
+                f"rule {self.id!r}: bucket_seconds must be > 0, "
+                f"got {self.bucket_seconds}"
+            )
+        _require_type(
+            self, schema, self.column, (DateType, TimestampType),
+            "column {column} must be a timestamp/date for a gap rule, "
+            "got {got}",
+        )
 
     def targets(self):
         return (self.column, *self.group_by)
@@ -861,6 +1367,45 @@ class ConcentrationRule(Rule):
     # (compile refuses; grouped partials would key on (group, value)).
     incremental: bool = False
     kind: str = field(default="concentration", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.column:
+            raise SchemaError(
+                f"rule {self.id!r}: concentration rule needs a column"
+            )
+        if self.max_top_share is None and self.max_hhi is None:
+            raise SchemaError(
+                f"rule {self.id!r}: concentration rule needs max_top_share "
+                "and/or max_hhi — with neither bound set the rule can "
+                "never fire"
+            )
+        for nm, b in (
+            ("max_top_share", self.max_top_share),
+            ("max_hhi", self.max_hhi),
+        ):
+            if b is not None and not (0.0 < b <= 1.0):
+                raise SchemaError(
+                    f"rule {self.id!r}: {nm} must be in (0, 1] (a share), "
+                    f"got {b}"
+                )
+        if self.min_rows < 1:
+            raise SchemaError(
+                f"rule {self.id!r}: min_rows must be >= 1, got {self.min_rows}"
+            )
+        if self.column in self.group_by:
+            raise SchemaError(
+                f"rule {self.id!r}: column {self.column!r} cannot also be a "
+                "group_by key — every group would be perfectly "
+                "concentrated by construction"
+            )
+        if self.incremental and self.group_by:
+            raise SchemaError(
+                f"rule {self.id!r}: incremental concentration does not "
+                "support group_by (partials are keyed per value; "
+                "grouped partials would need (group, value) keys)"
+            )
 
     def targets(self):
         return (self.column, *self.group_by)
@@ -911,6 +1456,52 @@ class EmbeddingHealthRule(Rule):
     # embedding_health_partials).
     incremental: bool = False
     kind: str = field(default="embedding_health", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        from .operators.similarity import _HEALTH_DIM_MAX
+
+        super().lint(schema)
+        if not self.column:
+            raise SchemaError(
+                f"rule {self.id!r}: embedding_health rule needs a column"
+            )
+        # dim <= 512 runs as one unrolled codegen'd aggregation;
+        # wider (768/1024/1536-class encoders) dispatches to the
+        # Arrow-kernel wide path — both one-scan. Beyond the absolute
+        # cap the column is not an embedding axis; refuse loudly.
+        if not 1 <= self.dim <= _HEALTH_DIM_MAX:
+            raise SchemaError(
+                f"rule {self.id!r}: dim must be in [1, {_HEALTH_DIM_MAX}]"
+                f", got {self.dim}"
+            )
+        if self.max_dead_dims is None and self.max_anisotropy is None:
+            raise SchemaError(
+                f"rule {self.id!r}: embedding_health rule needs "
+                "max_dead_dims and/or max_anisotropy — with neither "
+                "bound set the rule can never fire"
+            )
+        if self.max_dead_dims is not None and not 0 <= self.max_dead_dims <= self.dim:
+            raise SchemaError(
+                f"rule {self.id!r}: max_dead_dims must be in [0, dim="
+                f"{self.dim}], got {self.max_dead_dims}"
+            )
+        # anisotropy = ||mean vec|| / mean norm <= 1 by the triangle
+        # inequality — a bound above 1 is unsatisfiable-proof vacuity
+        if self.max_anisotropy is not None and not 0.0 < self.max_anisotropy <= 1.0:
+            raise SchemaError(
+                f"rule {self.id!r}: max_anisotropy must be in (0, 1], "
+                f"got {self.max_anisotropy}"
+            )
+        if self.min_rows < 1:
+            raise SchemaError(
+                f"rule {self.id!r}: min_rows must be >= 1, got {self.min_rows}"
+            )
+        _require_type(
+            self, schema, self.column, ArrayType,
+            "column {column} must be an array type for an embedding_health "
+            "rule, got {got}",
+        )
 
     def targets(self):
         return (self.column,)
@@ -942,6 +1533,30 @@ class FreshnessRule(Rule):
     group_by: tuple[str, ...] = ()
     when: str = ""  # optional row-scope predicate (see NotNullRule.when)
     kind: str = field(default="freshness", init=False)
+    stage = "group"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.column:
+            raise SchemaError(f"rule {self.id!r}: freshness rule needs a column")
+        if self.max_age_seconds < 0:
+            raise SchemaError(
+                f"rule {self.id!r}: max_age_seconds must be >= 0, "
+                f"got {self.max_age_seconds}"
+            )
+        if not self.as_of:
+            raise SchemaError(
+                f"rule {self.id!r}: freshness needs an explicit as_of "
+                "timestamp — the engine never reads the wall clock "
+                "(determinism/replay); pass the batch watermark"
+            )
+        try:
+            datetime.fromisoformat(self.as_of)
+        except ValueError as e:
+            raise SchemaError(
+                f"rule {self.id!r}: as_of {self.as_of!r} is not an ISO "
+                f"timestamp: {e}"
+            ) from e
 
     def targets(self):
         return (self.column, *self.group_by)
@@ -993,6 +1608,27 @@ class VolumeRule(Rule):
     universe: str = ""  # dims table enumerating expected partition ids
     universe_column: str = ""  # its id column; default = the partition col
     kind: str = field(default="volume", init=False)
+    stage = "volume"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.k <= 0:
+            raise SchemaError(f"rule {self.id!r}: k must be > 0, got {self.k}")
+        if self.abs_tol < 0:
+            raise SchemaError(
+                f"rule {self.id!r}: abs_tol must be >= 0, got {self.abs_tol}"
+            )
+        if self.min_partitions < 2:
+            raise SchemaError(
+                f"rule {self.id!r}: min_partitions must be >= 2 "
+                "(one partition has no distribution)"
+            )
+        if self.universe_column and not self.universe:
+            raise SchemaError(
+                f"rule {self.id!r}: universe_column without universe is "
+                "vacuous — name the dims table enumerating expected "
+                "partition ids"
+            )
 
 
 # --------------------------------------------------------- referential rules
@@ -1026,6 +1662,24 @@ class RefIntegrityRule(Rule):
     columns: tuple[str, ...] = ()
     dim_columns: tuple[str, ...] = ()
     kind: str = field(default="ref", init=False)
+    stage = "ref"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.columns and (self.column or self.dim_column):
+            raise SchemaError(
+                f"rule {self.id!r}: give either column/dim_column or "
+                "columns/dim_columns, not both"
+            )
+        if self.columns and len(self.columns) != len(self.dim_columns):
+            raise SchemaError(
+                f"rule {self.id!r}: columns ({len(self.columns)}) and "
+                f"dim_columns ({len(self.dim_columns)}) must pair up"
+            )
+        if not self.columns and not self.column:
+            raise SchemaError(
+                f"rule {self.id!r}: ref rule needs column or columns"
+            )
 
     def fact_keys(self) -> tuple[str, ...]:
         return self.columns or (self.column,)
@@ -1105,6 +1759,39 @@ class ColumnStatsRule(Rule):
     # into ONE aggregation pass (full-scan AND incremental-partials paths).
     when: str = ""
     kind: str = field(default="stats", init=False)
+    stage = "stats"
+
+    # metric-only rules never emit violations — a tolerance on them is
+    # vacuous and almost certainly a spec mistake
+    rate_refusal = (
+        "max_violation_rate is meaningless on a metric-only rule (it emits "
+        "no violations)"
+    )
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.incremental and (self.exact_distinct or self.exact_quantiles):
+            # incremental stats merge persisted per-partition partials —
+            # exact aggregates are not mergeable; keep exact modes on the
+            # full-scan path via a separate non-incremental rule.
+            # (quantiles ARE supported incrementally: KLL sketch partials.)
+            raise SchemaError(
+                f"rule {self.id!r}: incremental stats are sketch-based "
+                "(HLL cardinality, KLL quantiles) — exact_distinct and "
+                "exact_quantiles need the full-scan path"
+            )
+        if self.incremental and (self.top_values or self.entropy):
+            # exact top-k / entropy partials are O(distinct values) per
+            # partition — persisting them at key-like cardinality is the
+            # table again, so they stay on the full-scan path; the
+            # mergeable approximations are CMS heavy hitters (skew.py)
+            raise SchemaError(
+                f"rule {self.id!r}: top_values/entropy are exact value-"
+                "distribution metrics — full-scan path only (the mergeable "
+                "analog is the CMS heavy-hitter sketch in skew_stats)"
+            )
+        if self.top_values < 0:
+            raise SchemaError(f"rule {self.id!r}: top_values must be >= 0")
 
     def targets(self):
         return (self.column,)
@@ -1181,6 +1868,30 @@ class MetricBoundRule(Rule):
     #: Rules sharing a group_by fuse into one groupBy pass.
     group_by: str = ""
     kind: str = field(default="metric_bound", init=False)
+    stage = "metric_bound"
+
+    # ≤ one violation per rule regardless of table size — a per-row rate
+    # tolerance has no denominator here
+    rate_refusal = (
+        "max_violation_rate does not apply to metric bounds "
+        "(aggregate-level, not per-row)"
+    )
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        try:
+            parse_bound_metric(self.metric)
+        except ValueError as e:
+            raise SchemaError(f"rule {self.id!r}: {e}") from e
+        if self.min is None and self.max is None:
+            # a bound rule with no bound checks nothing — reject the
+            # vacuity (ColumnStatsRule is the report-only form)
+            raise SchemaError(
+                f"rule {self.id!r}: metric bound needs min and/or max "
+                "(metrics without bounds belong on ColumnStatsRule)"
+            )
+        if self.min is not None and self.max is not None and self.min > self.max:
+            raise InvalidBoundsError(self.id, self.min, self.max)
 
     def targets(self):
         return (self.column, self.group_by) if self.group_by else (self.column,)
@@ -1221,6 +1932,18 @@ class CaptureRule(Rule):
     # are unbounded (the 100x-safe variant, reachable from a spec).
     as_rows: bool = False
     kind: str = field(default="capture", init=False)
+    stage = "capture"
+
+    rate_refusal = ColumnStatsRule.rate_refusal
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        compiled = _compile_regex(self.id, self.pattern)
+        if self.group < 0 or self.group > compiled.groups:
+            raise SchemaError(
+                f"rule {self.id!r}: capture group {self.group} not in pattern "
+                f"({compiled.groups} group(s))"
+            )
 
     def targets(self):
         return (
@@ -1265,6 +1988,27 @@ class SequenceRule(Rule):
     order_column: str = ""
     steps: tuple[SequenceStep, ...] = ()
     kind: str = field(default="sequence", init=False)
+    stage = "sequence"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.steps:
+            raise SchemaError(f"rule {self.id!r}: sequence needs >=1 step")
+        if not self.group_by or not self.order_column:
+            raise SchemaError(
+                f"rule {self.id!r}: sequence needs group_by and order_column"
+            )
+        for i, s in enumerate(self.steps):
+            _compile_regex(self.id, s.pattern)
+            if s.min < 0 or (s.max is not None and s.max < s.min):
+                raise InvalidBoundsError(self.id, s.min, s.max)
+            # a variable-length step anywhere but last is unresolvable —
+            # RepeatingMatcherUnbounded (lists.rs:151-162)
+            if i < len(self.steps) - 1 and (s.max is None or s.max != s.min):
+                raise SchemaError(
+                    f"rule {self.id!r}: step {i} is variable-length "
+                    f"({s.min},{s.max}) — only the LAST step may be"
+                )
 
     def targets(self):
         return (self.column, self.order_column, *self.group_by)
@@ -1292,6 +2036,22 @@ class SchemaRule(Rule):
     expected: tuple[tuple[str, str], ...] = ()
     allow_extra: bool = False
     kind: str = field(default="schema", init=False)
+    stage = "schema"
+
+    # schema drift is metadata-level (≤ one violation per column,
+    # denominator-free) and fast-fails before any scan
+    rate_refusal = (
+        "max_violation_rate does not apply to schema rules "
+        "(metadata-level, not per-row)"
+    )
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if not self.expected:
+            raise SchemaError(f"rule {self.id!r}: schema rule needs >=1 expected column")
+        names = [n for n, _ in self.expected]
+        if len(names) != len(set(names)):
+            raise SchemaError(f"rule {self.id!r}: duplicate column in expected schema")
 
     def targets(self):
         # validated against df.schema metadata, never against row values —
@@ -1325,6 +2085,24 @@ class OverlapRule(Rule):
     lg_k: int = 12
     max_groups: int = 256
     kind: str = field(default="overlap", init=False)
+    stage = "overlap"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.max_jaccard is None and self.max_common is None:
+            raise SchemaError(
+                f"rule {self.id!r}: overlap rule needs max_jaccard and/or "
+                "max_common"
+            )
+        if self.max_jaccard is not None and not (0.0 <= self.max_jaccard <= 1.0):
+            raise SchemaError(
+                f"rule {self.id!r}: max_jaccard must be in [0, 1], "
+                f"got {self.max_jaccard}"
+            )
+        if self.max_common is not None and self.max_common < 0:
+            raise SchemaError(
+                f"rule {self.id!r}: max_common must be >= 0, got {self.max_common}"
+            )
 
     def targets(self):
         cols = (self.column,)
@@ -1390,6 +2168,63 @@ class DriftRule(Rule):
     # partition's histogram, never the full-table pass.
     incremental: bool = False
     kind: str = field(default="drift", init=False)
+    stage = "drift"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        if self.method not in ("ks", "psi"):
+            raise SchemaError(f"rule {self.id!r}: unknown drift method {self.method!r}")
+        if self.categorical and self.method != "psi":
+            # KS is a statement about an ORDERED ECDF; category order is
+            # arbitrary, so a categorical KS statistic would silently depend
+            # on the reference frequency ranking — reject at compile
+            raise SchemaError(
+                f"rule {self.id!r}: categorical drift requires method='psi'"
+            )
+        if self.expr and self.column:
+            raise SchemaError(
+                f"rule {self.id!r}: give either column or expr, not both"
+            )
+        if not self.expr and not self.column:
+            raise SchemaError(
+                f"rule {self.id!r}: drift rule needs a column or an expr"
+            )
+        if self.sweep_by and (self.group_column or self.group_value):
+            # a sweep compares EVERY group against the rest — a probe slice
+            # selection contradicts it and would be silently ignored
+            raise SchemaError(
+                f"rule {self.id!r}: sweep_by is mutually exclusive with "
+                "group_column/group_value"
+            )
+        if self.reference and (self.group_column or self.group_value):
+            # two-table drift compares against the reference table: a probe
+            # slice selection would be silently ignored — reject at compile.
+            # (reference + sweep_by IS meaningful: every group's candidate
+            # distribution vs the reference's SAME group — routed to
+            # drift_sweep_vs_reference in finalize.)
+            raise SchemaError(
+                f"rule {self.id!r}: reference (two-table drift) is mutually "
+                "exclusive with group_column/group_value"
+            )
+        if self.reference and self.incremental:
+            # incremental partials accumulate the CANDIDATE's histograms
+            # across batches; the reference side is a separate table read
+            # fresh each finalize — the combination has no partials story
+            raise SchemaError(
+                f"rule {self.id!r}: incremental drift does not combine with "
+                "reference (two-table) comparison"
+            )
+        if not self.sweep_by and not self.group_column and not self.reference:
+            raise SchemaError(
+                f"rule {self.id!r}: drift rule needs group_column (probe vs "
+                "rest), sweep_by (per-group sweep), or reference "
+                "(two-table drift)"
+            )
+        if self.incremental and not self.sweep_by:
+            raise SchemaError(
+                f"rule {self.id!r}: incremental drift is the per-group sweep "
+                "over mergeable histogram partials — set sweep_by"
+            )
 
     def targets(self):
         # with expr the drifting quantity is a SQL expression — its inputs
@@ -1398,6 +2233,18 @@ class DriftRule(Rule):
         if self.expr:
             return grp
         return (self.column, *grp)
+
+
+def _lint_sample_rate(r: Rule) -> None:
+    # lower bound 1e-6: the kernel's sample threshold is integer
+    # micro-units, so a smaller rate rounds to ZERO kept rows — a
+    # gate that can never fire while claiming a sampled verdict
+    if not 1e-6 <= r.sample_rate <= 1:
+        raise SchemaError(
+            f"rule {r.id!r}: sample_rate must be in [1e-6, 1], got "
+            f"{r.sample_rate} (1.0 decodes every row; the sample "
+            "threshold has micro-unit resolution)"
+        )
 
 
 @dataclass(frozen=True)
@@ -1427,6 +2274,11 @@ class PixelRule(Rule):
     # IO-level reduction validate a partition subset instead.
     sample_rate: float = 1.0
     kind: str = field(default="pixel", init=False)
+    stage = "pixel"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        _lint_sample_rate(self)
 
     def targets(self):
         return (
@@ -1471,6 +2323,31 @@ class DegenerateImageRule(Rule):
     # sample_rate governs (one decode pass, one sample).
     sample_rate: float = 1.0
     kind: str = field(default="degenerate", init=False)
+    stage = "degenerate"
+
+    def lint(self, schema) -> None:
+        super().lint(schema)
+        _lint_sample_rate(self)
+        if self.contrast_floor < 0:
+            raise SchemaError(
+                f"rule {self.id!r}: contrast_floor must be >= 0, got "
+                f"{self.contrast_floor}"
+            )
+        if not 0 < self.saturated_ceiling <= 1:
+            raise SchemaError(
+                f"rule {self.id!r}: saturated_ceiling must be in (0, 1], "
+                f"got {self.saturated_ceiling} (it is a fraction of samples)"
+            )
+        if self.grayscale_floor is not None and self.grayscale_floor < 0:
+            raise SchemaError(
+                f"rule {self.id!r}: grayscale_floor must be >= 0, got "
+                f"{self.grayscale_floor}"
+            )
+        _require_type(
+            self, schema, self.bytes_column, BinaryType,
+            "degenerate-image column {column} must be BINARY, got {got} "
+            "(the payload is decoded as image bytes)",
+        )
 
     def targets(self):
         return (self.bytes_column,)

@@ -2,11 +2,11 @@
 
 A spec file is JSON: {"key_column": ..., "n_partitions": ..., "fast_fail":
 ..., "max_violations_per_rule": ..., "rules": [{"kind": ..., "id": ...,
-...}, ...]}. Rule kinds: not_null, regex, composite, literal, range, domain,
-unique, count, ref, capture, sequence, stats, drift, overlap, pixel, schema,
-vector, expr, format, outlier, monotonic, header, volume, fd, freshness, metric_bound.
-Unknown kinds or params raise SchemaError at load (reference: matcher parse
-errors, matcher.rs:175-208 — reject before touching data).
+...}, ...]}. A rule's ``kind`` is its class's ``kind`` field (spec.py; every
+``Rule`` subclass is registered in ``RULE_KINDS``), its other keys are the
+class's init fields. Unknown kinds or params raise SchemaError at load
+(reference: matcher parse errors, matcher.rs:175-208 — reject before
+touching data).
 """
 
 from __future__ import annotations
@@ -15,85 +15,10 @@ import dataclasses
 import json
 
 from .errors import SchemaError
-from .spec import (
-    CaptureRule,
-    AssociationRule,
-    BenfordRule,
-    ConcentrationRule,
-    EmbeddingHealthRule,
-    GapRule,
-    ColumnStatsRule,
-    CompositeRegexRule,
-    CountRule,
-    DomainRule,
-    DriftRule,
-    ExprRule,
-    FormatRule,
-    FreshnessRule,
-    MetricBoundRule,
-    FunctionalDependencyRule,
-    HeaderRule,
-    LiteralRule,
-    MonotonicRule,
-    NotNullRule,
-    OutlierRule,
-    OverlapRule,
-    PiiRule,
-    DegenerateImageRule,
-    PixelRule,
-    RangeRule,
-    RefIntegrityRule,
-    RegexRule,
-    AlignmentRule,
-    RepetitionRule,
-    Rule,
-    TextQualityRule,
-    SchemaRule,
-    SequenceRule,
-    Spec,
-    UniqueRule,
-    VectorRule,
-    VolumeRule,
-)
+from .spec import Rule, SequenceStep, Spec
 
-RULE_KINDS: dict[str, type] = {
-    "not_null": NotNullRule,
-    "regex": RegexRule,
-    "composite": CompositeRegexRule,
-    "literal": LiteralRule,
-    "range": RangeRule,
-    "domain": DomainRule,
-    "unique": UniqueRule,
-    "count": CountRule,
-    "ref": RefIntegrityRule,
-    "capture": CaptureRule,
-    "sequence": SequenceRule,
-    "stats": ColumnStatsRule,
-    "drift": DriftRule,
-    "overlap": OverlapRule,
-    "pixel": PixelRule,
-    "degenerate": DegenerateImageRule,
-    "schema": SchemaRule,
-    "vector": VectorRule,
-    "alignment": AlignmentRule,
-    "expr": ExprRule,
-    "format": FormatRule,
-    "outlier": OutlierRule,
-    "monotonic": MonotonicRule,
-    "association": AssociationRule,
-    "benford": BenfordRule,
-    "concentration": ConcentrationRule,
-    "embedding_health": EmbeddingHealthRule,
-    "gap": GapRule,
-    "pii": PiiRule,
-    "repetition": RepetitionRule,
-    "text_quality": TextQualityRule,
-    "header": HeaderRule,
-    "volume": VolumeRule,
-    "fd": FunctionalDependencyRule,
-    "freshness": FreshnessRule,
-    "metric_bound": MetricBoundRule,
-}
+#: rule kind → class; each class declares its own ``kind``
+RULE_KINDS: dict[str, type] = {c.kind: c for c in Rule.__subclasses__()}
 
 
 def rule_from_dict(d: dict) -> Rule:
@@ -107,8 +32,6 @@ def rule_from_dict(d: dict) -> Rule:
     if unknown:
         raise SchemaError(f"rule kind {kind!r}: unknown params {sorted(unknown)}")
     if kind == "sequence" and "steps" in d:
-        from .spec import SequenceStep
-
         try:
             d["steps"] = tuple(
                 SequenceStep(**s) if isinstance(s, dict) else s for s in d["steps"]

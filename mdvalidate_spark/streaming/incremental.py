@@ -29,8 +29,19 @@ from ..compile import compile_spec
 from ..operators import agg_rules, drift as drift_ops, pixel as pixel_ops
 from ..operators.ref_rules import ref_violations
 from ..operators.row_rules import row_violations, with_partition_id
+from ..errors import SchemaError
 from ..run import _METRICS_DDL, _VIOLATIONS_DDL, _empty, _union
 from ..spec import CountRule, Spec, UniqueRule
+
+#: the stages poll() and finalize() evaluate (Rule.stage)
+_STAGES = ("schema", "row", "ref", "count", "pixel", "group", "stats", "drift")
+#: finalize's evaluation of each supported group-stage rule type
+_GROUP_HANDLERS = {
+    UniqueRule: lambda v, df, r: agg_rules.unique_violations(df, r, v.run_id),
+    CountRule: lambda v, df, r: agg_rules.count_violations(
+        df, r, v.run_id, universe=v.dims[r.universe] if r.universe else None
+    ),
+}
 
 
 class FileIncrementalValidator:
@@ -43,10 +54,23 @@ class FileIncrementalValidator:
         run_id: str = "incremental",
         checkpoint_dir: str | None = None,
     ):
+        self.dims = dims or {}
+        # a rule this validator never evaluates must not read as a pass
+        for r in spec.rules:
+            if r.stage not in _STAGES or (
+                r.stage == "group" and type(r) not in _GROUP_HANDLERS
+            ):
+                raise SchemaError(
+                    f"rule {r.id!r}: {r.kind} rules are not evaluated by "
+                    "FileIncrementalValidator — validate with ValidationRun"
+                )
+            if getattr(r, "universe", "") and r.universe not in self.dims:
+                raise SchemaError(
+                    f"rule {r.id!r}: universe table {r.universe!r} not provided"
+                )
         self.spark = spark
         self.spec = spec
         self.table_dir = table_dir
-        self.dims = dims or {}
         self.run_id = run_id
         self.checkpoint_dir = checkpoint_dir
         self._validated_files: set[str] = set()
@@ -123,7 +147,7 @@ class FileIncrementalValidator:
         raw = self.spark.read.parquet(*new)
         df = with_partition_id(raw, self.spec)
         if self.program is None:
-            self.program = compile_spec(self.spec, df.columns)
+            self.program = compile_spec(self.spec, df.schema)
         prog = self.program
 
         viols = []
@@ -185,10 +209,7 @@ class FileIncrementalValidator:
             df = with_partition_id(self.spark.read.parquet(*all_files), self.spec)
             prog = self.program
             for gr in prog.group_rules:
-                if isinstance(gr, UniqueRule):
-                    viols.append(agg_rules.unique_violations(df, gr, self.run_id))
-                elif isinstance(gr, CountRule):
-                    viols.append(agg_rules.count_violations(df, gr, self.run_id))
+                viols.append(_GROUP_HANDLERS[type(gr)](self, df, gr))
             if prog.stats_rules:
                 mets.append(
                     agg_rules.column_stats_metrics(df, prog.stats_rules, self.run_id)

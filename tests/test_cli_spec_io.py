@@ -613,3 +613,22 @@ def test_cli_suggest_embedding_health(spark, tmp_path, capsys):
     ])
     assert code == 2
     assert "schema error" in capsys.readouterr().err
+
+
+def test_cli_overrides_are_linted_before_spark(tmp_path, monkeypatch, capsys):
+    """--max-violations-per-rule is applied before the lint, so a negative
+    cap exits 2 without starting a Spark session."""
+    from mdvalidate_spark import cli
+
+    def no_spark(**_kw):
+        raise AssertionError("a Spark session was started")
+
+    monkeypatch.setattr(cli, "get_spark", no_spark)
+    specp = str(tmp_path / "spec.json")
+    with open(specp, "w") as f:
+        json.dump({"rules": [{"kind": "range", "id": "r", "column": "w", "max": 5}]}, f)
+    code = cli.main(
+        ["--spec", specp, "--table", "/nonexistent", "--max-violations-per-rule", "-1"]
+    )
+    assert code == 2
+    assert "max_violations_per_rule must be >= 0" in capsys.readouterr().err

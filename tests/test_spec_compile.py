@@ -295,3 +295,60 @@ def test_regex_alternation_full_match(spark):
     bad = {r["image_id"] for r in
            row_violations(with_partition_id(df, spec), prog, "t").collect()}
     assert bad == {"k3", "k4"}
+
+
+@pytest.mark.parametrize(
+    "spec_kw, match",
+    [
+        ({"n_partitions": 0}, "n_partitions must be >= 1"),
+        ({"n_partitions": -3}, "n_partitions must be >= 1"),
+        ({"max_violations_per_rule": -1}, "max_violations_per_rule must be >= 0"),
+    ],
+)
+def test_spec_level_settings_linted(spec_kw, match):
+    spec = Spec(rules=(RangeRule("rg", column="w", max=5),), **spec_kw)
+    with pytest.raises(SchemaError, match=match):
+        compile_spec(spec, COLS)
+
+
+def test_zero_partitions_refused_before_any_job(spark):
+    """n_partitions=0 used to validate zero partitions and report a clean
+    run over a table whose rows break the rule."""
+    from mdvalidate_spark.run import ValidationRun
+
+    df = spark.range(20).selectExpr("cast(id as string) as image_id", "id as w")
+    spec = Spec(rules=(RangeRule("rg", column="w", max=5),), n_partitions=0)
+    with pytest.raises(SchemaError, match="n_partitions"):
+        ValidationRun(spark, spec, df, run_id="zero-parts")
+    # max_violations_per_rule=0 stays legal: totals only, no sampled rows
+    compile_spec(Spec(rules=spec.rules, max_violations_per_rule=0), COLS)
+
+
+def test_every_rule_class_is_registered():
+    """Every Rule subclass round-trips through the spec JSON form, names a
+    ConstraintProgram stage field, and — when it can stage ``group`` — has a
+    finalize handler."""
+    import dataclasses
+    import json
+
+    from mdvalidate_spark.compile import ConstraintProgram
+    from mdvalidate_spark.run import _GLOBAL_HANDLERS
+    from mdvalidate_spark.spec import Rule
+    from mdvalidate_spark.spec_io import RULE_KINDS, spec_from_dict, spec_to_dict
+
+    classes = Rule.__subclasses__()
+    assert sorted(RULE_KINDS.values(), key=lambda c: c.__name__) == sorted(
+        classes, key=lambda c: c.__name__
+    )
+    samples = [c(f"r{i}") for i, c in enumerate(classes)]
+    samples.append(CountRule("grouped", group_by=("fmt",)))
+    spec = Spec(rules=tuple(samples))
+    assert spec_from_dict(json.loads(json.dumps(spec_to_dict(spec)))) == spec
+
+    stage_fields = {
+        f.name for f in dataclasses.fields(ConstraintProgram)
+        if f.name.endswith("_rules")
+    }
+    assert {f"{r.stage}_rules" for r in samples} == stage_fields
+    group_classes = {type(r) for r in samples if r.stage == "group"}
+    assert set(_GLOBAL_HANDLERS) == group_classes

@@ -12,7 +12,22 @@ from mdvalidate_spark.sources.synthetic import (
     expected_violation_counts,
     synthetic_images,
 )
-from mdvalidate_spark.spec import CountRule, DomainRule, RangeRule, RegexRule, Spec
+from mdvalidate_spark.errors import SchemaError
+from mdvalidate_spark.spec import (
+    CaptureRule,
+    CountRule,
+    DegenerateImageRule,
+    DomainRule,
+    FunctionalDependencyRule,
+    MetricBoundRule,
+    OverlapRule,
+    RangeRule,
+    RegexRule,
+    SequenceRule,
+    SequenceStep,
+    Spec,
+    VolumeRule,
+)
 from mdvalidate_spark.streaming.incremental import FileIncrementalValidator
 from mdvalidate_spark.streaming.structured import (
     stream_row_violations,
@@ -1141,3 +1156,55 @@ def test_stream_health_partials_accumulate_and_merge(spark, tmp_path):
     sv = sorted(r["expected"] for r in viol.collect())
     assert sv == sorted(r["expected"] for r in b_viol.collect())
     assert sv == ["dead_dims <= 0"]
+
+
+@pytest.mark.parametrize(
+    "rule",
+    [
+        FunctionalDependencyRule("fd", determinants=("fmt",), dependents=("w",)),
+        MetricBoundRule("mb", column="w", metric="null_rate", max=0.0),
+        CaptureRule("cap", column="caption", pattern=r"(\w+)"),
+        SequenceRule("seq", column="fmt", group_by=("fmt",), order_column="i",
+                     steps=(SequenceStep("png"),)),
+        OverlapRule("ov", column="phash", max_common=0),
+        VolumeRule("vol"),
+        DegenerateImageRule("deg"),
+    ],
+    ids=lambda r: r.kind,
+)
+def test_incremental_refuses_rules_it_never_evaluates(spark, tmp_path, rule):
+    """poll()/finalize() evaluate only some rule families; any other rule
+    used to be dropped and read as a pass (an fd rule with 3 violating rows
+    reported 0 violations)."""
+    spec = Spec(rules=(*spec_rows().rules, rule), key_column="image_id")
+    with pytest.raises(SchemaError, match="not evaluated by FileIncrementalValidator"):
+        FileIncrementalValidator(spark, spec, str(tmp_path), run_id="unsupported")
+
+
+def test_incremental_compiles_against_the_typed_schema(spark, tmp_path):
+    """Rules may target nested struct paths, as with ValidationRun."""
+    base = str(tmp_path / "nested")
+    spark.range(20).selectExpr(
+        "cast(id as string) as image_id", "named_struct('w', id) as meta"
+    ).write.parquet(os.path.join(base, "chunk0"))
+    spec = Spec(rules=(RangeRule("w_max", column="meta.w", max=5),), key_column="image_id")
+    v = FileIncrementalValidator(spark, spec, base, run_id="nested")
+    assert v.poll() == 14
+
+
+def test_incremental_count_universe_reports_absent_groups(spark, tmp_path):
+    """A grouped count's universe enumerates expected groups; an expected
+    group with no rows is a count-0 violation, as under ValidationRun."""
+    base = str(tmp_path / "groups")
+    spark.createDataFrame(
+        [("k1", "png"), ("k2", "png"), ("k3", "jpeg")], "image_id string, fmt string"
+    ).write.parquet(os.path.join(base, "chunk0"))
+    fmts = spark.createDataFrame([("png",), ("jpeg",), ("gif",)], "fmt string")
+    rule = CountRule("per_fmt", group_by=("fmt",), min=1, universe="fmts")
+    spec = Spec(rules=(rule,), key_column="image_id")
+    with pytest.raises(SchemaError, match="universe table 'fmts' not provided"):
+        FileIncrementalValidator(spark, spec, base, run_id="universe")
+    v = FileIncrementalValidator(spark, spec, base, dims={"fmts": fmts}, run_id="universe")
+    v.poll()
+    viols, _ = v.finalize()
+    assert [(r["image_id"], r["actual"]) for r in viols.collect()] == [("gif", "0")]

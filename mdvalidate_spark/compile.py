@@ -12,20 +12,29 @@ per rule. Like the reference's matchers, each rule checks itself
 (``Rule.lint``) and names its own stage (``Rule.stage``); only the checks that
 span several rules live here.
 
-Stage families (a sample; ``ConstraintProgram`` has one field per stage):
-  row    — NotNull/Regex/Literal/Range/Domain/...: ONE fused select over the scan
-  group  — Unique/grouped Count/...: global aggregations (salted where skew-prone)
-  ref    — RefIntegrity: broadcast left-anti joins
-  stats  — ColumnStats: one agg pass emitting metrics
-  pixel  — PixelRule: Arrow-batched mapInPandas decode stage (only stage that
-           reads the binary column — column pruning keeps it out of all others)
-  drift  — DriftRule: global finalize-only (needs full-table view)
+Stages (``ConstraintProgram`` has one ``<stage>_rules`` field per stage):
+  per batch of pending partitions —
+  schema     — SchemaRule: driver-side metadata compare, once, before any batch
+  row        — NotNull/Regex/Literal/Range/Domain/...: ONE fused select
+  count      — per-partition Count bounds
+  ref        — RefIntegrity: broadcast joins, fused into the row pass when
+               there is one
+  capture    — CaptureRule: per-partition capture arrays/rows
+  pixel      — PixelRule: Arrow-batched decode stage (only stage that reads
+               the binary column — column pruning keeps it out of all others)
+  degenerate — DegenerateImageRule: rides the pixel decode when it can
+  global, once in the finalize pass —
+  group        — Unique/grouped Count/FD/Sequence/Overlap/Volume/...: one
+                 finalize handler per rule class (run._GLOBAL_HANDLERS)
+  stats        — ColumnStats: one fused agg pass (or merged partials)
+  metric_bound — MetricBound: all bounds fuse into one aggregation
+  drift        — DriftRule: needs the full-table view (or merged partials)
 
-Incremental semantics (reference validator.rs:101-185): row/ref/stats/pixel
-stages are per-partition (evaluated only on pending partitions); group+drift
-are *global* and run in the finalize pass — the analog of the reference's
-EOF full revalidation (validator.rs:162-168) that produces the canonical
-error set once all input has arrived.
+Incremental semantics (reference validator.rs:101-185): the per-partition
+stages run on pending partitions only; the global stages run in the finalize
+pass — the analog of the reference's EOF full revalidation
+(validator.rs:162-168) that produces the canonical error set once all input
+has arrived.
 """
 
 from __future__ import annotations
@@ -48,15 +57,12 @@ from .spec import (
     DegenerateImageRule,
     DriftRule,
     MetricBoundRule,
-    OverlapRule,
     PixelRule,
     RefIntegrityRule,
     RegexRule,
     Rule,
     SchemaRule as SchemaDriftRule,
-    SequenceRule,
     Spec,
-    VolumeRule,
     _require_type,
     _column_type,
 )
@@ -70,7 +76,7 @@ class ConstraintProgram:
 
     spec: Spec
     row_rules: tuple[Rule, ...] = ()
-    group_rules: tuple[Rule, ...] = ()      # Unique + global Count
+    group_rules: tuple[Rule, ...] = ()      # one run._GLOBAL_HANDLERS entry each
     count_rules: tuple[CountRule, ...] = () # per-partition Count
     ref_rules: tuple[RefIntegrityRule, ...] = ()
     stats_rules: tuple[ColumnStatsRule, ...] = ()
@@ -78,10 +84,7 @@ class ConstraintProgram:
     pixel_rules: tuple[PixelRule, ...] = ()
     degenerate_rules: tuple[DegenerateImageRule, ...] = ()
     drift_rules: tuple[DriftRule, ...] = ()
-    overlap_rules: tuple[OverlapRule, ...] = ()
     capture_rules: tuple[CaptureRule, ...] = ()
-    sequence_rules: tuple[SequenceRule, ...] = ()
-    volume_rules: tuple[VolumeRule, ...] = ()
     schema_rules: tuple[SchemaDriftRule, ...] = ()
     # columns any per-partition stage needs (for pruned scans)
     scan_columns: tuple[str, ...] = field(default=())

@@ -25,8 +25,6 @@ derives violation rows and per-partition metrics from it in one pass.
 from __future__ import annotations
 
 import logging
-import os
-import time
 from collections.abc import Iterator
 
 import numpy as np
@@ -266,7 +264,6 @@ def pixel_check_results(
     frame and rule are fixed for a run by construction, so the decision
     cannot go stale within one cache's lifetime.
     """
-    t0 = time.time()
     _guard_sampled_key(df, rule, key_column)
     gate_df = scan_df if scan_df is not None else df
     # the decision depends on the RULE's column bindings too: a second
@@ -292,13 +289,6 @@ def pixel_check_results(
             gate = _gate_decision(gate_df, rule, key_column, need_pid=need_pid)
         if cache is not None:
             cache[gate_key] = gate
-        if os.environ.get("MDV_PROFILE"):
-            print(
-                f"    [mdv-profile] pixel native-gate probe "
-                f"({'native' if gate[0] else 'arrow'}): "
-                f"{time.time() - t0:.3f}s",
-                flush=True,
-            )
     ok, files, cols_in_file = gate
     if ok:
         return _pixel_native(

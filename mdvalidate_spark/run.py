@@ -95,8 +95,11 @@ from .spec import (
     GapRule,
     MonotonicRule,
     OutlierRule,
+    OverlapRule,
+    SequenceRule,
     Spec,
     UniqueRule,
+    VolumeRule,
     parse_bound_metric,
 )
 from .spec_io import spec_to_dict
@@ -122,12 +125,6 @@ class Report:
     def exit_code(self) -> int:
         """Reference main.rs:86-90 — 0 pass, 1 fail."""
         return 1 if self.errored else 0
-
-
-def _prof(label: str, t0: float) -> None:
-    """Opt-in stage timing (MDV_PROFILE=1) for scaling diagnostics."""
-    if os.environ.get("MDV_PROFILE"):
-        print(f"    [mdv-profile] {label}: {time.time() - t0:.2f}s", flush=True)
 
 
 def _empty(spark: SparkSession, ddl: str) -> DataFrame:
@@ -272,9 +269,62 @@ _INCREMENTAL_FAMILIES = (
     _HEALTH_PARTIALS,
 )
 
+
+def _volume_violations(run: "ValidationRun", vr: VolumeRule) -> DataFrame | None:
+    """Zero-scan volume check: the MAD envelope over the manifest's own
+    per-partition validated row counts (spec.VolumeRule docs) — O(#partitions)
+    driver math over metadata the run already paid for, including zero-row
+    partitions. statistics.median matches the operator/oracle interpolation
+    (mean of middle two). None when nothing is flagged."""
+    counted = sorted(
+        (pid, float(e["rows"]))
+        for pid, e in run.manifest.entries.items()
+        if e.get("rows") is not None
+    )
+    col = run.spec.partition_column or "partition_id"
+    rows_out = []
+    if vr.universe:
+        # wholly-missing partitions (data-derived ids never get a manifest
+        # entry — spec.VolumeRule docs): enumerate expected ids from the
+        # dims table, diff against the manifest. Absence is a fact, not an
+        # outlier — unconditional under_volume, independent of the MAD
+        # envelope and min_partitions. O(#partitions) rows.
+        ucol = vr.universe_column or col
+        expected_ids = {
+            int(r[0])
+            for r in run.dims[vr.universe]
+            .select(F.col(ucol).cast("long"))
+            .where(F.col(ucol).isNotNull())
+            .distinct()
+            .collect()
+        }
+        have = {int(pid) for pid, _ in counted}
+        rows_out += [
+            (run.run_id, int(pid), vr.id, str(pid), col,
+             "partition present (>= 1 row)", "missing", KIND_UNDER_VOLUME)
+            for pid in sorted(expected_ids - have)
+        ]
+    if len(counted) >= vr.min_partitions:
+        ns = [n for _, n in counted]
+        center = statistics.median(ns)
+        mad = statistics.median([abs(n - center) for n in ns])
+        bound = max(vr.abs_tol, vr.k * 1.4826 * mad)
+        rows_out += [
+            (run.run_id, int(pid), vr.id, str(pid), col,
+             f"rows in [{center - bound:.1f}, {center + bound:.1f}]",
+             str(int(n)),
+             KIND_OVER_VOLUME if n > center else KIND_UNDER_VOLUME)
+            for pid, n in counted
+            if abs(n - center) > bound
+        ]
+    if not rows_out:
+        return None
+    return run.spark.createDataFrame(rows_out, _VIOLATIONS_DDL)
+
+
 #: finalize's evaluation of each global (group-stage) rule type →
-#: (violations, metrics or None); the incremental families go through
-#: their partials
+#: (violations or None, metrics or None); the incremental families go
+#: through their partials
 _GLOBAL_HANDLERS: dict[type, Callable] = {
     UniqueRule: lambda run, r: (
         agg_rules.unique_violations(run.df, r, run.run_id), None
@@ -303,6 +353,22 @@ _GLOBAL_HANDLERS: dict[type, Callable] = {
         _HEALTH_PARTIALS, r
     ),
     GapRule: lambda run, r: (gap_violations(run.df, r, run.run_id), None),
+    # groups may span engine partitions
+    SequenceRule: lambda run, r: (
+        sequence_violations(run.df, r, run.run_id, run.spec.key_column), None
+    ),
+    # the engine knows its own group count when the audit groups by
+    # partition_id — passing it keeps construction LAZY (no eager guard
+    # job), so the sketch scan overlaps finalize's other global jobs
+    OverlapRule: lambda run, r: (
+        overlap_violations(
+            run.df, r, run.run_id, keep=run._keep,
+            n_groups=len(run.all_partitions())
+            if r.group_column == "partition_id" else None,
+        ),
+        None,
+    ),
+    VolumeRule: lambda run, r: (_volume_violations(run, r), None),
     CountRule: lambda run, r: (
         agg_rules.count_violations(
             run.df, r, run.run_id,
@@ -311,6 +377,34 @@ _GLOBAL_HANDLERS: dict[type, Callable] = {
         None,
     ),
 }
+
+
+def _require_dims(prog: ConstraintProgram, dims: dict) -> None:
+    """Every dims table a rule names must be provided — a SchemaError before
+    any job, not a KeyError mid-run. Shared by ValidationRun and the
+    file-incremental validator."""
+    for r in prog.ref_rules:
+        if r.dim_name not in dims:
+            raise SchemaError(
+                f"rule {r.id!r}: dimension table {r.dim_name!r} not provided"
+            )
+    for r in prog.group_rules:
+        if getattr(r, "universe", "") and r.universe not in dims:
+            raise SchemaError(
+                f"rule {r.id!r}: universe table {r.universe!r} not provided"
+            )
+    for r in prog.drift_rules:
+        if r.reference and r.reference not in dims:
+            raise SchemaError(
+                f"rule {r.id!r}: reference table {r.reference!r} not "
+                "provided (pass it in the dims dict)"
+            )
+        if r.reference and r.sweep_by and drift_ops.is_snapshot(dims[r.reference]):
+            raise SchemaError(
+                f"rule {r.id!r}: a profile snapshot is a whole-table "
+                "profile — sweep_by needs a live reference table with "
+                "the group column"
+            )
 
 
 class ValidationRun:
@@ -414,32 +508,7 @@ class ValidationRun:
             family, _q = parse_bound_metric(mb.metric)
             if family == "quantile" or mb.metric in NUMERIC_BOUND_METRICS:
                 agg_rules._require_numeric(self.df, mb, mb.metric)
-        for r in self.program.ref_rules:
-            if r.dim_name not in self.dims:
-                    raise SchemaError(
-                    f"rule {r.id!r}: dimension table {r.dim_name!r} not provided"
-                )
-        for r in (*self.program.group_rules, *self.program.volume_rules):
-            if getattr(r, "universe", "") and r.universe not in self.dims:
-                    raise SchemaError(
-                    f"rule {r.id!r}: universe table {r.universe!r} not provided"
-                )
-        for r in self.program.drift_rules:
-            if r.reference and r.reference not in self.dims:
-                    raise SchemaError(
-                    f"rule {r.id!r}: reference table {r.reference!r} not "
-                    "provided (pass it in the dims dict)"
-                )
-            if (
-                r.reference
-                and r.sweep_by
-                and drift_ops.is_snapshot(self.dims[r.reference])
-            ):
-                    raise SchemaError(
-                    f"rule {r.id!r}: a profile snapshot is a whole-table "
-                    "profile — sweep_by needs a live reference table with "
-                    "the group column"
-                )
+        _require_dims(self.program, self.dims)
         self.manifest = (
             Manifest.load(checkpoint_dir, self.run_id)
             if checkpoint_dir
@@ -810,8 +879,10 @@ class ValidationRun:
                 _defer_counts
                 and not self.spec.fast_fail
                 and self.spec.max_violations_per_rule is None
-                and not self.program.volume_rules
-                and not self.program.overlap_rules
+                and not any(
+                    isinstance(r, (VolumeRule, OverlapRule))
+                    for r in self.program.group_rules
+                )
             )
             n_viol = self._validate_batch(None, defer=defer)
             if self.spec.fast_fail and n_viol > 0:
@@ -923,17 +994,20 @@ class ValidationRun:
                     )
                 )
 
+        # the pixel and degenerate stages get the UNfiltered frame + this
+        # partition list (None: every partition): the native scan path
+        # re-reads files directly and must apply the batch filter itself (a
+        # .where() on batch_df would be silently ignored there)
+        part_arg = None
+        if (
+            not whole
+            and (prog.pixel_rules or prog.degenerate_rules)
+            and not set(partitions) >= set(self.all_partitions())
+        ):
+            part_arg = partitions
         pixel_checks = None
         quality_checks_by_bytes: dict = {}
         for pr in prog.pixel_rules:
-            # pass the UNfiltered frame + the partition list: the native scan
-            # path re-reads files directly and must apply the batch filter
-            # itself (a .where() on batch_df would be silently ignored there)
-            if whole:
-                part_arg = None
-            else:
-                all_parts = set(self.all_partitions())
-                part_arg = None if set(partitions) >= all_parts else partitions
             # decode-once: a DegenerateImageRule on the same bytes column
             # rides its quality stats on THIS rule's decode pass instead of
             # paying a second full decode of the corpus
@@ -965,13 +1039,6 @@ class ValidationRun:
                 # per bytes column so N degenerate rules on one payload
                 # still decode the corpus ONCE (compile guarantees they
                 # share one sample_rate)
-                if whole:
-                    part_arg = None
-                else:
-                    all_parts = set(self.all_partitions())
-                    part_arg = (
-                        None if set(partitions) >= all_parts else partitions
-                    )
                 checks = self._keep(
                     pixel_ops.quality_only_results(
                         self.df, dgr, spec.key_column, partitions=part_arg
@@ -1019,8 +1086,6 @@ class ValidationRun:
         # per-partition bookkeeping in ONE aggregation each; the two collects
         # are independent → submitted concurrently (row-count scan overlaps
         # the tail of the violation job instead of following it)
-        t0 = time.time()
-
         def _collect_counts(frame: DataFrame, label: str) -> dict:
             # job description is thread-local — label inside the pooled task
             self.spark.sparkContext.setJobDescription(label)
@@ -1059,12 +1124,11 @@ class ValidationRun:
             # whole-table deferral (see validate()): leave the two count
             # jobs in flight and let finalize's global jobs overlap them —
             # _join_deferred_counts() marks the manifest once they resolve
-            self._deferred_counts = (pool, viol_fut, rows_fut, batch_t0, t0)
+            self._deferred_counts = (pool, viol_fut, rows_fut, batch_t0)
             return 0
         viol_counts = viol_fut.result()
         row_counts = rows_fut.result()
         pool.shutdown(wait=False)
-        _prof("batch violations + row counts (row+ref+count+pixel)", t0)
         self._mark_batch(partitions, viol_counts, row_counts, batch_t0)
         return sum(viol_counts.values())
 
@@ -1108,11 +1172,10 @@ class ValidationRun:
         if deferred is None:
             return
         self._deferred_counts = None
-        pool, viol_fut, rows_fut, batch_t0, t0 = deferred
+        pool, viol_fut, rows_fut, batch_t0 = deferred
         viol_counts = viol_fut.result()
         row_counts = rows_fut.result()
         pool.shutdown(wait=False)
-        _prof("batch violations + row counts (deferred join)", t0)
         self._mark_batch(None, viol_counts, row_counts, batch_t0)
 
     def _partials_result(self, fam: _Partials, unit):
@@ -1240,7 +1303,8 @@ class ValidationRun:
 
         for gr in prog.group_rules:
             g_viol, g_met = _GLOBAL_HANDLERS[type(gr)](self, gr)
-            viols.append(g_viol)
+            if g_viol is not None:
+                viols.append(g_viol)
             if g_met is not None:
                 mets.append(g_met)
 
@@ -1271,103 +1335,6 @@ class ValidationRun:
             else:
                 mets.append(inc_met)
 
-        for sq in prog.sequence_rules:  # groups may span engine partitions
-            viols.append(
-                sequence_violations(self.df, sq, self.run_id, self.spec.key_column)
-            )
-
-        for ov in prog.overlap_rules:  # shard-pair distinct-set overlap
-            # the engine knows its own group count when the audit groups by
-            # partition_id — passing it keeps construction LAZY (no eager
-            # guard job), so the sketch scan overlaps the other global
-            # stages inside the concurrent block below
-            hint = (
-                len(self.all_partitions())
-                if ov.group_column == "partition_id"
-                else None
-            )
-            viols.append(
-                overlap_violations(
-                    self.df, ov, self.run_id, n_groups=hint, keep=self._keep
-                )
-            )
-
-        if prog.volume_rules:
-            # zero-scan stage: the MAD envelope over the manifest's own
-            # per-partition validated row counts (spec.VolumeRule docs) —
-            # O(#partitions) driver math over metadata the run already paid
-            # for, including zero-row partitions. statistics.median matches
-            # the operator/oracle interpolation (mean of middle two).
-            counted = sorted(
-                (pid, float(e["rows"]))
-                for pid, e in self.manifest.entries.items()
-                if e.get("rows") is not None
-            )
-            for vr in prog.volume_rules:
-                rows_out = []
-                if vr.universe:
-                    # wholly-missing partitions (data-derived ids never get
-                    # a manifest entry — spec.VolumeRule docs): enumerate
-                    # expected ids from the dims table, diff against the
-                    # manifest. Absence is a fact, not an outlier —
-                    # unconditional under_volume, independent of the MAD
-                    # envelope and min_partitions. O(#partitions) rows.
-                    ucol = (
-                        vr.universe_column
-                        or self.spec.partition_column
-                        or "partition_id"
-                    )
-                    expected_ids = {
-                        int(r[0])
-                        for r in self.dims[vr.universe]
-                        .select(F.col(ucol).cast("long"))
-                        .where(F.col(ucol).isNotNull())
-                        .distinct()
-                        .collect()
-                    }
-                    have = {int(pid) for pid, _ in counted}
-                    col = self.spec.partition_column or "partition_id"
-                    for pid in sorted(expected_ids - have):
-                        rows_out.append(
-                            (
-                                self.run_id,
-                                int(pid),
-                                vr.id,
-                                str(pid),
-                                col,
-                                "partition present (>= 1 row)",
-                                "missing",
-                                KIND_UNDER_VOLUME,
-                            )
-                        )
-                if len(counted) >= vr.min_partitions:
-                    ns = [n for _, n in counted]
-                    center = statistics.median(ns)
-                    mad = statistics.median([abs(n - center) for n in ns])
-                    bound = max(vr.abs_tol, vr.k * 1.4826 * mad)
-                    col = self.spec.partition_column or "partition_id"
-                    for pid, n in counted:
-                        if abs(n - center) > bound:
-                            rows_out.append(
-                                (
-                                    self.run_id,
-                                    int(pid),
-                                    vr.id,
-                                    str(pid),
-                                    col,
-                                    f"rows in [{center - bound:.1f}, "
-                                    f"{center + bound:.1f}]",
-                                    str(int(n)),
-                                    KIND_OVER_VOLUME if n > center
-                                    else KIND_UNDER_VOLUME,
-                                )
-                            )
-                if rows_out:
-                    viols.append(
-                        self.spark.createDataFrame(rows_out, _VIOLATIONS_DDL)
-                    )
-
-        t0 = time.time()
         drift_futs = []
         uc_viol = None
         pre_met = None
@@ -1608,7 +1575,6 @@ class ValidationRun:
                 pre_met = met_fut.result()
             bv_fut.result()
             bm_fut.result()
-        _prof("global pass (unique+count ∥ stats ∥ drift ∥ consolidate)", t0)
         if self._drift_pool is not None:
             self._drift_pool.shutdown(wait=False)
             self._drift_pool = None

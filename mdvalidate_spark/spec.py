@@ -1608,7 +1608,7 @@ class VolumeRule(Rule):
     universe: str = ""  # dims table enumerating expected partition ids
     universe_column: str = ""  # its id column; default = the partition col
     kind: str = field(default="volume", init=False)
-    stage = "volume"
+    stage = "group"
 
     def lint(self, schema) -> None:
         super().lint(schema)
@@ -1988,7 +1988,7 @@ class SequenceRule(Rule):
     order_column: str = ""
     steps: tuple[SequenceStep, ...] = ()
     kind: str = field(default="sequence", init=False)
-    stage = "sequence"
+    stage = "group"
 
     def lint(self, schema) -> None:
         super().lint(schema)
@@ -2085,7 +2085,7 @@ class OverlapRule(Rule):
     lg_k: int = 12
     max_groups: int = 256
     kind: str = field(default="overlap", init=False)
-    stage = "overlap"
+    stage = "group"
 
     def lint(self, schema) -> None:
         super().lint(schema)

@@ -10,38 +10,42 @@ files landing in a table directory (the Iceberg-snapshot pattern). Each
      (the read_input tail computation),
   2. runs the per-partition rule stages on ONLY the new files,
   3. appends violations/metrics idempotently.
-``finalize()`` is got_eof: the global rules (uniqueness, drift, grouped
-counts) run once over the full table — the EOF revalidation pass
-(validator.rs:162-168). ``fast_fail`` aborts polling once any batch goes red
-(cmd.rs:119-121).
+``finalize()`` is got_eof: the global stages (group, stats, metric_bound,
+drift) run once over the full table through ``ValidationRun.finalize`` — the
+one EOF revalidation pass (validator.rs:162-168) both validators share.
+``fast_fail`` aborts polling once any batch goes red (cmd.rs:119-121).
 """
 
 from __future__ import annotations
 
+import dataclasses
 import json
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..compile import compile_spec
-from ..operators import agg_rules, drift as drift_ops, pixel as pixel_ops
+from ..operators import agg_rules, pixel as pixel_ops
 from ..operators.ref_rules import ref_violations
 from ..operators.row_rules import row_violations, with_partition_id
+from ..operators.schema_rules import schema_violations
 from ..errors import SchemaError
-from ..run import _METRICS_DDL, _VIOLATIONS_DDL, _empty, _union
-from ..spec import CountRule, Spec, UniqueRule
+from ..run import (
+    _METRICS_DDL,
+    _VIOLATIONS_DDL,
+    ValidationRun,
+    _require_dims,
+    _union,
+)
+from ..spec import CaptureRule, DegenerateImageRule, Spec, VolumeRule
 
-#: the stages poll() and finalize() evaluate (Rule.stage)
-_STAGES = ("schema", "row", "ref", "count", "pixel", "group", "stats", "drift")
-#: finalize's evaluation of each supported group-stage rule type
-_GROUP_HANDLERS = {
-    UniqueRule: lambda v, df, r: agg_rules.unique_violations(df, r, v.run_id),
-    CountRule: lambda v, df, r: agg_rules.count_violations(
-        df, r, v.run_id, universe=v.dims[r.universe] if r.universe else None
-    ),
-}
+#: the stages ValidationRun.finalize evaluates; poll() runs the others
+_GLOBAL_STAGES = ("group", "stats", "metric_bound", "drift")
+#: rules neither pass evaluates: poll() never runs capture or degenerate
+#: rules, and a volume rule judges a partition manifest file mode never keeps
+_REFUSED = (CaptureRule, DegenerateImageRule, VolumeRule)
 
 
 class FileIncrementalValidator:
@@ -57,17 +61,12 @@ class FileIncrementalValidator:
         self.dims = dims or {}
         # a rule this validator never evaluates must not read as a pass
         for r in spec.rules:
-            if r.stage not in _STAGES or (
-                r.stage == "group" and type(r) not in _GROUP_HANDLERS
-            ):
+            if isinstance(r, _REFUSED):
                 raise SchemaError(
                     f"rule {r.id!r}: {r.kind} rules are not evaluated by "
                     "FileIncrementalValidator — validate with ValidationRun"
                 )
-            if getattr(r, "universe", "") and r.universe not in self.dims:
-                raise SchemaError(
-                    f"rule {r.id!r}: universe table {r.universe!r} not provided"
-                )
+        _require_dims(compile_spec(spec), self.dims)
         self.spark = spark
         self.spec = spec
         self.table_dir = table_dir
@@ -80,6 +79,7 @@ class FileIncrementalValidator:
         self._red = False
         self._load_state()
         self.program = None  # compiled lazily on first data
+        self._run: ValidationRun | None = None  # finalize's global pass
 
     def release(self) -> None:
         """Unpersist the accumulated per-batch violation frames (same
@@ -88,13 +88,16 @@ class FileIncrementalValidator:
         The frames stay in self._viols — finalize()'s report must still
         union every batch (they recompute from the source files lazily) —
         but a high-water mark keeps repeated release() calls from
-        re-issuing unpersist RPCs for every historical batch."""
+        re-issuing unpersist RPCs for every historical batch. Also frees the
+        frames finalize()'s global pass cached."""
         for frame in self._viols[self._released_upto:]:
             try:
                 frame.unpersist()
             except Exception:  # noqa: BLE001 - session may already be gone
                 pass
         self._released_upto = len(self._viols)
+        if self._run is not None:
+            self._run.release()
 
     # ------------------------------------------------------------ state
 
@@ -157,8 +160,6 @@ class FileIncrementalValidator:
         # this rule family exists for, and each poll may read a different
         # file set (driver-side metadata compare — no scan, no job)
         if prog.schema_rules:
-            from ..operators.schema_rules import schema_violations
-
             viols.extend(
                 schema_violations(df, sr, self.run_id) for sr in prog.schema_rules
             )
@@ -185,8 +186,6 @@ class FileIncrementalValidator:
             mets.append(pm)
 
         batch_v = _union(viols, self.spark, _VIOLATIONS_DDL)
-        from pyspark.storagelevel import StorageLevel
-
         batch_v = batch_v.persist(StorageLevel.MEMORY_AND_DISK)
         n = batch_v.count()
         self._viols.append(batch_v)
@@ -200,24 +199,27 @@ class FileIncrementalValidator:
     # ---------------------------------------------------------- finalize
 
     def finalize(self):
-        """EOF pass: global rules over the whole table; returns
-        (violations_df, metrics_df)."""
+        """EOF pass: the global rules over the whole table, evaluated by one
+        ValidationRun with the same dims and run_id; returns
+        (violations_df, metrics_df) — every poll's frames plus that run's
+        report."""
         all_files = self._list_files()
         viols = list(self._viols)
         mets = list(self._mets)
-        if all_files and self.program is not None:
-            df = with_partition_id(self.spark.read.parquet(*all_files), self.spec)
-            prog = self.program
-            for gr in prog.group_rules:
-                viols.append(_GROUP_HANDLERS[type(gr)](self, df, gr))
-            if prog.stats_rules:
-                mets.append(
-                    agg_rules.column_stats_metrics(df, prog.stats_rules, self.run_id)
-                )
-            for dr in prog.drift_rules:
-                dv, dm, _n = drift_ops.drift_check(df, dr, self.run_id)
-                viols.append(dv)
-                mets.append(dm)
+        global_rules = tuple(
+            r for r in self.spec.rules if r.stage in _GLOBAL_STAGES
+        )
+        if all_files and global_rules:
+            self._run = ValidationRun(
+                self.spark,
+                dataclasses.replace(self.spec, rules=global_rules),
+                self.spark.read.parquet(*all_files),
+                dims=self.dims,
+                run_id=self.run_id,
+            )
+            rep = self._run.finalize()
+            viols.append(rep.violations)
+            mets.append(rep.metrics)
         return (
             _union(viols, self.spark, _VIOLATIONS_DDL),
             _union(mets, self.spark, _METRICS_DDL),

@@ -13,19 +13,24 @@ from mdvalidate_spark.sources.synthetic import (
     synthetic_images,
 )
 from mdvalidate_spark.errors import SchemaError
+from mdvalidate_spark.run import ValidationRun
 from mdvalidate_spark.spec import (
     CaptureRule,
+    ColumnStatsRule,
     CountRule,
     DegenerateImageRule,
     DomainRule,
+    DriftRule,
     FunctionalDependencyRule,
     MetricBoundRule,
     OverlapRule,
     RangeRule,
+    RefIntegrityRule,
     RegexRule,
     SequenceRule,
     SequenceStep,
     Spec,
+    UniqueRule,
     VolumeRule,
 )
 from mdvalidate_spark.streaming.incremental import FileIncrementalValidator
@@ -1161,21 +1166,16 @@ def test_stream_health_partials_accumulate_and_merge(spark, tmp_path):
 @pytest.mark.parametrize(
     "rule",
     [
-        FunctionalDependencyRule("fd", determinants=("fmt",), dependents=("w",)),
-        MetricBoundRule("mb", column="w", metric="null_rate", max=0.0),
         CaptureRule("cap", column="caption", pattern=r"(\w+)"),
-        SequenceRule("seq", column="fmt", group_by=("fmt",), order_column="i",
-                     steps=(SequenceStep("png"),)),
-        OverlapRule("ov", column="phash", max_common=0),
         VolumeRule("vol"),
         DegenerateImageRule("deg"),
     ],
     ids=lambda r: r.kind,
 )
 def test_incremental_refuses_rules_it_never_evaluates(spark, tmp_path, rule):
-    """poll()/finalize() evaluate only some rule families; any other rule
-    used to be dropped and read as a pass (an fd rule with 3 violating rows
-    reported 0 violations)."""
+    """poll() never runs capture or degenerate rules, and a volume rule
+    needs a partition manifest file mode does not keep; such a rule used to
+    be dropped and read as a pass."""
     spec = Spec(rules=(*spec_rows().rules, rule), key_column="image_id")
     with pytest.raises(SchemaError, match="not evaluated by FileIncrementalValidator"):
         FileIncrementalValidator(spark, spec, str(tmp_path), run_id="unsupported")
@@ -1208,3 +1208,122 @@ def test_incremental_count_universe_reports_absent_groups(spark, tmp_path):
     v.poll()
     viols, _ = v.finalize()
     assert [(r["image_id"], r["actual"]) for r in viols.collect()] == [("gif", "0")]
+
+
+def _parity_table(spark, base):
+    """120 rows in three arrival chunks: duplicate keys, a rare fmt, per-group
+    tag sequences with injected mismatches, values shared across groups and
+    a widened group g3."""
+    df = spark.range(120).selectExpr(
+        "id as i",
+        "format_string('k%03d', if(id % 40 = 39, id - 1, id)) as image_id",
+        "concat('g', cast(id % 4 as string)) as grp",
+        "case when id % 30 = 7 then 'bmp' when id % 3 = 0 then 'png' "
+        "when id % 3 = 1 then 'jpeg' else 'webp' end as fmt",
+        "cast(if(id % 4 = 3, 2, 1) * (10 + id % 13) as int) as w",
+        "case when id < 4 then 'H' when id % 17 = 5 then 'zz' else 'b1' end as tag",
+        "cast(id % 30 as int) as val",
+    )
+    for c, (lo, hi) in enumerate([(0, 40), (40, 80), (80, 120)]):
+        df.where(f"i >= {lo} and i < {hi}").write.parquet(
+            os.path.join(base, f"chunk{c}")
+        )
+    return spark.createDataFrame(
+        [(f"g{k % 4}", 10 + (3 * k) % 17) for k in range(80)], "grp string, w int"
+    )
+
+
+@pytest.mark.parametrize("cap", [None, 2])
+def test_incremental_finalize_matches_validation_run(spark, tmp_path, cap):
+    """finalize() is ValidationRun's EOF pass: every global family reports
+    the violations and metrics a one-shot run reports, and a violation cap
+    samples them and adds violations_total metrics alike. File mode used to
+    run its own copy, which swept reference drift within the table, failed
+    on a whole-table reference drift and dropped top-k/entropy stats."""
+    base = str(tmp_path / "parity")
+    dims = {"yday": _parity_table(spark, base)}
+    spec = Spec(
+        rules=(
+            UniqueRule("uniq", columns=("image_id",)),
+            CountRule("per_fmt", group_by=("fmt",), min=10),
+            FunctionalDependencyRule("fd", determinants=("grp",), dependents=("fmt",)),
+            MetricBoundRule("w_mean", column="w", metric="mean", max=15.0),
+            SequenceRule("seq", column="tag", group_by=("grp",), order_column="i",
+                         steps=(SequenceStep("H"), SequenceStep(r"b\d", max=None))),
+            OverlapRule("ov", column="val", group_column="grp", max_common=3),
+            ColumnStatsRule("fmt_profile", column="fmt", top_values=2, entropy=True),
+            DriftRule("d_probe", column="w", group_column="grp", group_value="g3"),
+            DriftRule("d_sweep", column="w", sweep_by="grp"),
+            DriftRule("d_ref", column="w", reference="yday"),
+            DriftRule("d_ref_sweep", column="w", sweep_by="grp", reference="yday"),
+        ),
+        key_column="image_id",
+        max_violations_per_rule=cap,
+    )
+    v = FileIncrementalValidator(spark, spec, base, dims=dims, run_id="parity")
+    v.poll()
+    f_viols, f_mets = v.finalize()
+    rep = ValidationRun(
+        spark, spec, spark.read.option("recursiveFileLookup", "true").parquet(base),
+        dims=dims, run_id="parity",
+    ).validate()
+
+    def viol_set(df):
+        return sorted(
+            (r["rule_id"], r["kind"], r["image_id"], r["actual"])
+            for r in df.collect()
+        )
+
+    def metric_set(df):
+        return sorted(
+            (r["rule_id"], r["metric"],
+             None if r["value"] is None else round(r["value"], 9), r["value_str"])
+            for r in df.collect()
+        )
+
+    expected = viol_set(rep.violations)
+    assert {v[0] for v in expected} == {
+        r.id for r in spec.rules if r.id != "fmt_profile"
+    }
+    assert viol_set(f_viols) == expected
+    expected_m = metric_set(rep.metrics)
+    assert {"top_1", "top_2", "entropy"} <= {
+        m[1] for m in expected_m if m[0] == "fmt_profile"
+    }
+    assert metric_set(f_mets) == expected_m
+    assert any(m[1] == "violations_total" for m in expected_m) == (cap is not None)
+    v.release()
+
+
+def test_incremental_missing_dim_is_a_schema_error_at_init(spark, tmp_path):
+    """A referential rule whose dim table is not passed used to raise
+    KeyError in the middle of poll()."""
+    rule = RefIntegrityRule(
+        "src_ref", column="source_id", dim_name="dim_source", dim_column="source_id"
+    )
+    spec = Spec(rules=(rule,), key_column="image_id")
+    with pytest.raises(SchemaError, match="dimension table 'dim_source' not provided"):
+        FileIncrementalValidator(spark, spec, str(tmp_path), run_id="nodim")
+
+
+def test_incremental_global_pass_runs_only_for_global_rules(spark, tmp_path):
+    """finalize() builds its ValidationRun only when some rule is global, and
+    release() frees the frames that run cached."""
+    base = str(tmp_path / "keys")
+    spark.createDataFrame(
+        [("k1", 1), ("k1", 2), ("k2", 3)], "image_id string, w int"
+    ).write.parquet(os.path.join(base, "chunk0"))
+    row_only = Spec(rules=(RangeRule("w_max", column="w", max=2),), key_column="image_id")
+    v = FileIncrementalValidator(spark, row_only, base, run_id="rows")
+    assert v.poll() == 1
+    assert v.finalize()[0].count() == 1
+    assert v._run is None
+
+    spec = Spec(rules=(UniqueRule("uniq", columns=("image_id",)),), key_column="image_id")
+    v = FileIncrementalValidator(spark, spec, base, run_id="keys")
+    v.poll()
+    assert [r["image_id"] for r in v.finalize()[0].collect()] == ["k1"]
+    cached = list(v._run._persisted)
+    assert cached and all(f.is_cached for f in cached)
+    v.release()
+    assert not any(f.is_cached for f in cached)

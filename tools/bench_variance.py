@@ -31,7 +31,6 @@ def main() -> None:
         out = subprocess.run(
             [sys.executable, os.path.join(REPO, "bench.py")],
             capture_output=True, text=True, timeout=3600, cwd=REPO,
-            env={**os.environ, "MDV_PROFILE": "1"},
         )
         line = [l for l in out.stdout.splitlines() if l.startswith("{")]
         if not line:

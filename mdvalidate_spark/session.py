@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """min(48g, half of physical RAM), in MiB."""
+    half_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**21
+    return f"{min(48 * 1024, half_mb)}m"
+
+
 def get_spark(
     app_name: str = "mdvalidate-spark",
     master: str | None = None,
@@ -58,8 +64,12 @@ def get_spark(
         # local mode runs every task inside the driver JVM: size the heap for
         # cores × in-flight Arrow batches of binary payloads, or GC thrash
         # makes high parallelism SLOWER than low (observed 8g: local[32] ran
-        # 4x slower than local[8] on the pixel stage)
-        .config("spark.driver.memory", os.environ.get("MDV_DRIVER_MEM", "48g"))
+        # 4x slower than local[8] on the pixel stage) — but never more than
+        # half the host's RAM, or a heap grown to its cap is OOM-killed
+        .config(
+            "spark.driver.memory",
+            os.environ.get("MDV_DRIVER_MEM", _default_driver_mem()),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )

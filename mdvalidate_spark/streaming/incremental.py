@@ -8,12 +8,16 @@ files landing in a table directory (the Iceberg-snapshot pattern). Each
 ``poll()``:
   1. lists current files and diffs them against the checkpoint manifest
      (the read_input tail computation),
-  2. runs the per-partition rule stages on ONLY the new files,
-  3. appends violations/metrics idempotently.
+  2. runs ``ValidationRun``'s batch stage — the one per-partition pass both
+     validators share (row, referential, count, capture, pixel,
+     degenerate, schema) — on ONLY the new files,
+  3. keeps that run, so finalize() reports its violations and metrics.
 ``finalize()`` is got_eof: the global stages (group, stats, metric_bound,
 drift) run once over the full table through ``ValidationRun.finalize`` — the
 one EOF revalidation pass (validator.rs:162-168) both validators share.
 ``fast_fail`` aborts polling once any batch goes red (cmd.rs:119-121).
+Only volume rules are refused: they judge a partition manifest file mode
+does not keep.
 """
 
 from __future__ import annotations
@@ -24,13 +28,8 @@ import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
 
 from ..compile import compile_spec
-from ..operators import agg_rules, pixel as pixel_ops
-from ..operators.ref_rules import ref_violations
-from ..operators.row_rules import row_violations, with_partition_id
-from ..operators.schema_rules import schema_violations
 from ..errors import SchemaError
 from ..run import (
     _METRICS_DDL,
@@ -39,13 +38,12 @@ from ..run import (
     _require_dims,
     _union,
 )
-from ..spec import CaptureRule, DegenerateImageRule, Spec, VolumeRule
+from ..spec import Spec, VolumeRule
 
 #: the stages ValidationRun.finalize evaluates; poll() runs the others
 _GLOBAL_STAGES = ("group", "stats", "metric_bound", "drift")
-#: rules neither pass evaluates: poll() never runs capture or degenerate
-#: rules, and a volume rule judges a partition manifest file mode never keeps
-_REFUSED = (CaptureRule, DegenerateImageRule, VolumeRule)
+#: a volume rule judges a partition manifest file mode never keeps
+_REFUSED = (VolumeRule,)
 
 
 class FileIncrementalValidator:
@@ -73,31 +71,20 @@ class FileIncrementalValidator:
         self.run_id = run_id
         self.checkpoint_dir = checkpoint_dir
         self._validated_files: set[str] = set()
-        self._viols: list[DataFrame] = []
-        self._released_upto = 0  # release() high-water mark into _viols
-        self._mets: list[DataFrame] = []
         self._red = False
         self._load_state()
-        self.program = None  # compiled lazily on first data
+        self._runs: list[ValidationRun] = []  # one batch-stage run per poll
         self._run: ValidationRun | None = None  # finalize's global pass
 
     def release(self) -> None:
-        """Unpersist the accumulated per-batch violation frames (same
-        lifecycle contract as ValidationRun.release): a long-polling
-        validator would otherwise pin one cached frame per poll() forever.
-        The frames stay in self._viols — finalize()'s report must still
-        union every batch (they recompute from the source files lazily) —
-        but a high-water mark keeps repeated release() calls from
-        re-issuing unpersist RPCs for every historical batch. Also frees the
-        frames finalize()'s global pass cached."""
-        for frame in self._viols[self._released_upto:]:
-            try:
-                frame.unpersist()
-            except Exception:  # noqa: BLE001 - session may already be gone
-                pass
-        self._released_upto = len(self._viols)
-        if self._run is not None:
-            self._run.release()
+        """Unpersist every frame the poll runs and finalize()'s global pass
+        cached (same lifecycle contract as ValidationRun.release): a
+        long-polling validator would otherwise pin each poll's frames
+        forever. finalize() still unions every poll's frames — they
+        recompute from the source files lazily."""
+        for run in (*self._runs, self._run):
+            if run is not None:
+                run.release()
 
     # ------------------------------------------------------------ state
 
@@ -141,55 +128,29 @@ class FileIncrementalValidator:
 
     def poll(self) -> int:
         """Validate newly-arrived files; returns the number of new violation
-        rows. No-op (0) when nothing new or fast-fail already tripped."""
+        rows (exact under a violation cap). No-op (0) when nothing new or
+        fast-fail already tripped."""
         if self._red and self.spec.fast_fail:
             return 0
         new = self.pending_files()
         if not new:
             return 0
-        raw = self.spark.read.parquet(*new)
-        df = with_partition_id(raw, self.spec)
-        if self.program is None:
-            self.program = compile_spec(self.spec, df.schema)
-        prog = self.program
-
-        viols = []
-        mets = []
-        # schema drift is checked per poll, against the NEW files' frame: a
-        # late-arriving file with a drifted schema is exactly the condition
-        # this rule family exists for, and each poll may read a different
-        # file set (driver-side metadata compare — no scan, no job)
-        if prog.schema_rules:
-            viols.extend(
-                schema_violations(df, sr, self.run_id) for sr in prog.schema_rules
+        rules = tuple(r for r in self.spec.rules if r.stage not in _GLOBAL_STAGES)
+        n = 0
+        if rules:
+            # the whole-table batch over the new files: per-partition counts
+            # see only the partitions these files hold. Schema drift is
+            # checked per poll too — a late file with a drifted schema is
+            # what that rule family exists for.
+            run = ValidationRun(
+                self.spark,
+                dataclasses.replace(self.spec, rules=rules),
+                self.spark.read.parquet(*new),
+                dims=self.dims,
+                run_id=self.run_id,
             )
-        if prog.row_rules:
-            viols.append(row_violations(df, prog, self.run_id))
-        for rr in prog.ref_rules:
-            viols.append(
-                ref_violations(df, rr, self.dims[rr.dim_name], self.run_id, self.spec.key_column)
-            )
-        for cr in prog.count_rules:
-            viols.append(agg_rules.count_violations(df, cr, self.run_id))
-        for pr in prog.pixel_rules:
-            # scan_df = the pre-normalization frame, same contract as
-            # ValidationRun: probing the normalized frame would read the
-            # engine's own pid rewrite as a recomputed column and pin every
-            # poll on the ~5x-slower Arrow path. No gate cache across polls
-            # on purpose — each poll reads a DIFFERENT file set, so a
-            # memoized file list would go stale.
-            checks = pixel_ops.pixel_check_results(
-                df, pr, self.spec.key_column, scan_df=raw
-            )
-            pv, pm = pixel_ops.pixel_outputs(checks, pr, self.run_id)
-            viols.append(pv)
-            mets.append(pm)
-
-        batch_v = _union(viols, self.spark, _VIOLATIONS_DDL)
-        batch_v = batch_v.persist(StorageLevel.MEMORY_AND_DISK)
-        n = batch_v.count()
-        self._viols.append(batch_v)
-        self._mets.extend(mets)
+            self._runs.append(run)
+            n = run._check_schema() + run._validate_batch(None)
         self._validated_files.update(new)
         self._save_state()
         if n > 0:
@@ -204,8 +165,8 @@ class FileIncrementalValidator:
         (violations_df, metrics_df) — every poll's frames plus that run's
         report."""
         all_files = self._list_files()
-        viols = list(self._viols)
-        mets = list(self._mets)
+        viols = [f for run in self._runs for f in run._violation_dfs]
+        mets = [f for run in self._runs for f in run._metric_dfs]
         global_rules = tuple(
             r for r in self.spec.rules if r.stage in _GLOBAL_STAGES
         )

@@ -3,11 +3,12 @@
 Two surfaces:
 
 1. ``stream_row_violations`` — validate an unbounded stream with the fused
-   row-rule pass. Row rules are stateless column predicates, so they apply to
-   a streaming DataFrame unchanged (the same codegen'd select); violations
-   flow to any streaming sink. This is the true-streaming analog of the
-   reference's chunk loop: each micro-batch is a chunk, the sink is the
-   accumulated error list.
+   row-rule pass. Row rules are stateless column predicates, so the batch
+   executor's ``row_violations`` applies to a streaming DataFrame unchanged,
+   partition ids included (``with_partition_id``: ``spec.partition_column``
+   when set, else the key hash); violations flow to any streaming sink.
+   This is the true-streaming analog of the reference's chunk loop: each
+   micro-batch is a chunk, the sink is the accumulated error list.
 
 2. ``windowed_count_rule`` — the `{min,max}` cardinality bound over event-time
    tumbling windows with a watermark for late data (the streaming
@@ -22,53 +23,47 @@ tests) and continuous micro-batches on a cluster.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..compile import ConstraintProgram
-from ..operators.row_rules import _check
+from ..errors import KIND_CONCENTRATION, SchemaError
+from ..operators.agg_rules import (
+    column_stats_from_partials,
+    column_stats_partials,
+)
+from ..operators.drift import _EPS, _bin_expr
+from ..operators.pixel import (
+    _pixel_arrow,
+    degenerate_outputs,
+    pixel_outputs,
+    quality_only_results,
+)
+from ..operators.ref_rules import ref_violations
+from ..operators.row_rules import row_violations, with_partition_id
+from ..operators.similarity import (
+    embedding_health_partials,
+    embedding_health_rule_results_from_partials,
+    health_partials_ddl,
+)
+from ..operators.skew import (
+    micro_hhi_expr,
+    micro_share_expr,
+    volume_anomaly_from_counts,
+)
 from ..spec import CountRule
 
 
 def stream_row_violations(
     stream_df: DataFrame, program: ConstraintProgram, run_id: str
 ) -> DataFrame:
-    """Fused row pass on a streaming DataFrame → streaming violations.
-
-    Same expression tree as the batch executor (operators/row_rules.py); the
-    partition id is the micro-batch-stable hash of the key.
-    """
-    spec = program.spec
-    key = F.col(spec.key_column).cast("string")
-    checks = [_check(r) for r in program.row_rules]
-    return (
-        stream_df.withColumn(
-            "partition_id",
-            F.pmod(F.xxhash64(F.col(spec.key_column)), F.lit(spec.n_partitions)).cast("int"),
-        )
-        .select(
-            F.col("partition_id"),
-            key.alias("_key"),
-            F.array_compact(F.array(*checks)).alias("_v"),
-        )
-        .where(F.size("_v") > 0)
-        .select(
-            F.lit(run_id).alias("run_id"),
-            "partition_id",
-            F.explode("_v").alias("v"),
-            "_key",
-        )
-        .select(
-            "run_id",
-            "partition_id",
-            F.col("v.rule_id").alias("rule_id"),
-            F.col("_key").alias("image_id"),
-            F.col("v.column").alias("column"),
-            F.col("v.expected").alias("expected"),
-            F.col("v.actual").alias("actual"),
-            F.col("v.kind").alias("kind"),
-        )
-    )
+    """Fused row pass on a streaming DataFrame → streaming violations: the
+    batch executor's ``row_violations`` (operators/row_rules.py) over the
+    same ``with_partition_id`` ids, so a stream and a batch run over the
+    same rows report the same rows."""
+    return row_violations(with_partition_id(stream_df, program.spec), program, run_id)
 
 
 def stream_ref_violations(
@@ -87,8 +82,6 @@ def stream_ref_violations(
     implementation (operators/ref_rules.py) — the expression tree is
     stateless, so it applies to a streaming frame unchanged; only the
     partition id (micro-batch-stable key hash) is attached here."""
-    from ..operators.ref_rules import ref_violations
-
     with_pid = stream_df.withColumn(
         "partition_id",
         F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_partitions)).cast(
@@ -162,8 +155,6 @@ def stream_stats_partials(
     partition_id = batch_id, so a replayed micro-batch (foreachBatch
     replays after failure) overwrites its own partial instead of
     double-counting. Returns the started StreamingQuery."""
-    from ..operators.agg_rules import column_stats_partials
-
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         p = column_stats_partials(
             batch_df.withColumn("partition_id", F.lit(int(batch_id)).cast("int")),
@@ -188,8 +179,6 @@ def stream_stats_partials(
 def merged_stream_stats(spark, rules, partials_dir: str, run_id: str = "stream"):
     """Merge everything ``stream_stats_partials`` accumulated so far into
     the standard long metrics rows — O(#micro-batches), no stream replay."""
-    from ..operators.agg_rules import column_stats_from_partials
-
     partials = spark.read.parquet(partials_dir)
     return column_stats_from_partials(partials, tuple(rules), run_id)
 
@@ -214,10 +203,6 @@ def windowed_drift_rule(
     sums over literals) is pure column algebra on that row. Append mode: one
     final violation row per closed drifted window, no retraction, no Python.
     """
-    import math as _math
-
-    from ..operators.drift import _EPS, _bin_expr
-
     categorical = getattr(rule, "categorical", False)
     if categorical and rule.method != "psi":
         # same invariant compile_spec enforces for batch rules — this entry
@@ -244,7 +229,7 @@ def windowed_drift_rule(
     if rule.method == "psi":
         stat = sum(
             [
-                (p - F.lit(q)) * (F.log(p + F.lit(_EPS)) - F.lit(_math.log(q + _EPS)))
+                (p - F.lit(q)) * (F.log(p + F.lit(_EPS)) - F.lit(math.log(q + _EPS)))
                 for p, q in zip(dens, ref_hist)
             ],
             F.lit(0.0),
@@ -292,8 +277,6 @@ def stream_volume_anomaly(
     kind ∈ {over_volume, under_volume}); ``min_batches`` plays
     ``min_partitions``' role.
     """
-    from ..operators.skew import volume_anomaly_from_counts
-
     counts = spark.read.parquet(partials_dir).select(
         F.col("partition_id").cast("string").alias("partition"),
         F.col(f"{rule_id}__rows").cast("double").alias("n_rows"),
@@ -330,9 +313,6 @@ def windowed_concentration_rule(
     is the low-latency alert path; loud unmeasurability is the batch
     rule's finalize contract. Append mode: one violation row per closed
     window per exceeded bound, no Python anywhere."""
-    from ..errors import KIND_CONCENTRATION, SchemaError
-    from ..operators.skew import micro_hhi_expr, micro_share_expr
-
     if rule.max_top_share is None and rule.max_hhi is None:
         raise SchemaError(
             f"rule {rule.id!r}: concentration rule needs max_top_share "
@@ -521,8 +501,6 @@ def stream_degenerate_violations(
     Per-partition metrics are an aggregation (stateful on a stream) and are
     intentionally NOT emitted here — aggregate the sunk violations with the
     batch degenerate_outputs on a bounded replay instead."""
-    from ..operators.pixel import degenerate_outputs, quality_only_results
-
     with_pid = stream_df.withColumn(
         "partition_id",
         F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_partitions)).cast("int"),
@@ -549,8 +527,6 @@ def stream_pixel_violations(
     unchanged — content-keyed membership is engine- and batch-independent,
     so a sampled stream verdict matches the batch verdict on the same rows.
     Emits the batch stage's violation shape (kind=pixel)."""
-    from ..operators.pixel import _pixel_arrow, pixel_outputs
-
     with_pid = stream_df.withColumn(
         "partition_id",
         F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_partitions)).cast("int"),
@@ -582,8 +558,6 @@ def stream_health_partials(
     a replayed micro-batch (foreachBatch replays after failure) overwrites
     its own partial instead of double-counting (the stream_stats_partials
     contract). Returns the started StreamingQuery."""
-    from ..operators.similarity import embedding_health_partials
-
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         p = embedding_health_partials(
             batch_df.withColumn(
@@ -611,11 +585,6 @@ def merged_stream_health(spark, rule, partials_dir: str, run_id: str = "stream")
     the rule's standard (violations, metrics) frames — O(#micro-batches),
     no stream replay, same arithmetic as the batch paths (explicit
     dim-dependent schema so an empty first batch stays readable)."""
-    from ..operators.similarity import (
-        embedding_health_rule_results_from_partials,
-        health_partials_ddl,
-    )
-
     partials = spark.read.schema(health_partials_ddl(rule.dim)).parquet(
         partials_dir
     )

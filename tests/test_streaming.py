@@ -17,6 +17,7 @@ from mdvalidate_spark.run import ValidationRun
 from mdvalidate_spark.spec import (
     CaptureRule,
     ColumnStatsRule,
+    CompositeRegexRule,
     CountRule,
     DegenerateImageRule,
     DomainRule,
@@ -24,6 +25,7 @@ from mdvalidate_spark.spec import (
     FunctionalDependencyRule,
     MetricBoundRule,
     OverlapRule,
+    PixelRule,
     RangeRule,
     RefIntegrityRule,
     RegexRule,
@@ -1163,19 +1165,10 @@ def test_stream_health_partials_accumulate_and_merge(spark, tmp_path):
     assert sv == ["dead_dims <= 0"]
 
 
-@pytest.mark.parametrize(
-    "rule",
-    [
-        CaptureRule("cap", column="caption", pattern=r"(\w+)"),
-        VolumeRule("vol"),
-        DegenerateImageRule("deg"),
-    ],
-    ids=lambda r: r.kind,
-)
+@pytest.mark.parametrize("rule", [VolumeRule("vol")], ids=lambda r: r.kind)
 def test_incremental_refuses_rules_it_never_evaluates(spark, tmp_path, rule):
-    """poll() never runs capture or degenerate rules, and a volume rule
-    needs a partition manifest file mode does not keep; such a rule used to
-    be dropped and read as a pass."""
+    """A volume rule needs a partition manifest file mode does not keep;
+    such a rule used to be dropped and read as a pass."""
     spec = Spec(rules=(*spec_rows().rules, rule), key_column="image_id")
     with pytest.raises(SchemaError, match="not evaluated by FileIncrementalValidator"):
         FileIncrementalValidator(spark, spec, str(tmp_path), run_id="unsupported")
@@ -1327,3 +1320,98 @@ def test_incremental_global_pass_runs_only_for_global_rules(spark, tmp_path):
     assert cached and all(f.is_cached for f in cached)
     v.release()
     assert not any(f.is_cached for f in cached)
+
+
+@pytest.mark.parametrize("cap", [None, 2])
+def test_incremental_poll_matches_validation_run(spark, tmp_path, cap):
+    """poll() is ValidationRun's batch stage: captures, degenerate images,
+    the violation cap and its exact totals match a one-shot run. File mode
+    used to refuse capture and degenerate rules, drop composite captures
+    and ignore the cap."""
+    base = str(tmp_path / "images")
+    df = synthetic_images(spark, ROWS, with_bytes=True)
+    for c, (lo, hi) in enumerate([(0, 200), (200, 400), (400, 600)]):
+        df.where(f"i >= {lo} and i < {hi}").write.parquet(
+            os.path.join(base, f"chunk{c}")
+        )
+    dims = {"dim_source": dim_source(spark)}
+    spec = Spec(
+        rules=(
+            RangeRule("w_range", column="w", min=1, max=10000),
+            DomainRule("fmt_domain", column="fmt", values=("jpeg", "png", "webp")),
+            CompositeRegexRule("cap_comp", column="caption", prefix="A photo number ",
+                               pattern=r"\d+", suffix=" of cat", capture=True),
+            CaptureRule("cap_noun", column="caption", pattern=r"of (\w+)"),
+            RefIntegrityRule("src_ref", column="source_id", dim_name="dim_source",
+                             dim_column="source_id"),
+            CountRule("per_part", min=80),
+            PixelRule("px"),
+            DegenerateImageRule("degen"),
+        ),
+        key_column="image_id",
+        max_violations_per_rule=cap,
+    )
+    v = FileIncrementalValidator(spark, spec, base, dims=dims, run_id="batch")
+    n = v.poll()
+    f_viols, f_mets = v.finalize()
+    run = ValidationRun(
+        spark, spec, spark.read.option("recursiveFileLookup", "true").parquet(base),
+        dims=dims, run_id="batch",
+    )
+    rep = run.validate()
+
+    def viol_set(frame):
+        return sorted(
+            (r["rule_id"], r["kind"], r["image_id"], r["actual"])
+            for r in frame.collect()
+        )
+
+    def metric_set(frame):
+        return sorted(
+            (r["rule_id"], r["metric"],
+             None if r["value"] is None else round(r["value"], 9), r["value_str"])
+            for r in frame.collect()
+        )
+
+    expected = viol_set(rep.violations)
+    assert {v[0] for v in expected} >= {"w_range", "fmt_domain", "cap_comp",
+                                        "src_ref", "per_part", "px"}
+    assert viol_set(f_viols) == expected
+    expected_m = metric_set(rep.metrics)
+    assert {"cap_comp", "cap_noun", "degen"} <= {m[0] for m in expected_m}
+    assert metric_set(f_mets) == expected_m
+    assert any(m[1] == "violations_total" for m in expected_m) == (cap is not None)
+    assert n == run.manifest.total_violations == 666
+    v.release()
+
+
+def test_stream_row_violations_partition_ids_match_batch(spark, tmp_path):
+    """stream_row_violations attaches partition ids as the batch pass does:
+    from spec.partition_column when the spec names one. It used to hash the
+    key regardless."""
+    src = str(tmp_path / "stream-src")
+    df = synthetic_images(spark, ROWS, with_bytes=False).drop("partition_id")
+    df.withColumn("shard", (F.col("i") % 5).cast("int")).write.parquet(src)
+    spec = Spec(
+        rules=spec_rows().rules, key_column="image_id", partition_column="shard"
+    )
+    table = spark.read.parquet(src)
+    stream = spark.readStream.schema(table.schema).parquet(src)
+    q = (
+        stream_row_violations(stream, compile_spec(spec, table.schema), "s1")
+        .writeStream.format("memory")
+        .queryName("stream_pids")
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(120)
+    got = sorted(
+        (r["image_id"], r["partition_id"])
+        for r in spark.table("stream_pids").collect()
+    )
+    rep = ValidationRun(spark, spec, table, run_id="s1").validate()
+    expected = sorted(
+        (r["image_id"], r["partition_id"]) for r in rep.violations.collect()
+    )
+    assert got == expected
+    assert {p for _, p in got} <= set(range(5))

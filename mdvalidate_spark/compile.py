@@ -68,6 +68,11 @@ from .spec import (
 )
 
 
+#: the global stages above, evaluated once by ValidationRun.finalize; every
+#: other stage runs per batch (ValidationRun._validate_batch)
+_GLOBAL_STAGES = ("group", "stats", "metric_bound", "drift")
+
+
 @dataclass(frozen=True)
 class ConstraintProgram:
     """Compiled, validated constraint DAG grouped into stages: each

@@ -61,6 +61,7 @@ from ..spec import (
     Spec,
     TextQualityRule,
     VectorRule,
+    anchor_regex,
 )
 from .pii import PII_KINDS, pii_counts_for, pii_total_from_counts
 from .text import gopher_quality_metrics_for, repetition_metrics_for
@@ -177,9 +178,8 @@ def _check_applies(rule) -> Column:
     if isinstance(rule, RegexRule):
         c = F.col(rule.column)
         fail = c.isNotNull() & ~c.rlike(rule.anchored)
-        return F.when(
-            fail, _viol(rule.id, rule.column, F.lit(rule.anchored), c, KIND_MATCHER)
-        )
+        shown = F.lit(anchor_regex(rule.pattern, rule.full, end="$"))
+        return F.when(fail, _viol(rule.id, rule.column, shown, c, KIND_MATCHER))
     if isinstance(rule, CompositeRegexRule):
         # prefix → matcher → suffix pipeline (matchers.rs:38-431): a chained
         # WHEN reports only the FIRST failing segment ("one error once",

@@ -22,15 +22,12 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..errors import KIND_COUNT, KIND_MATCHER
-from ..spec import SequenceRule
+from ..spec import SequenceRule, anchor_regex
+
 
 def _anchored(p: str) -> str:
-    # sequence steps are always full-value matches: wrap the step pattern in
-    # a non-capturing group and anchor BOTH sides unconditionally (same
-    # rationale as RegexRule.anchored — sniffing user anchors mishandles
-    # alternations and escaped trailing dollars; redundant inner anchors are
-    # harmless)
-    return "^(?:" + p + ")$"
+    # sequence steps are always full-value matches (see spec.anchor_regex)
+    return anchor_regex(p)
 
 
 def sequence_violations(
@@ -62,12 +59,14 @@ def sequence_violations(
     # Each step's regex stays a FOLDABLE literal (compiled once by the JVM);
     # a column-valued rlike pattern would recompile per row.
     start = 1
-    seg_pattern: Column = F.lit(_anchored(last.pattern))  # tail default
+    seg_pattern: Column = F.lit(anchor_regex(last.pattern, end="$"))  # tail default
     row_fail: Column = F.lit(False)
     for s in fixed:
         end = start + s.min  # fixed ⇒ min == max
         in_seg = (F.col("_rank") >= start) & (F.col("_rank") < end)
-        seg_pattern = F.when(in_seg, F.lit(_anchored(s.pattern))).otherwise(seg_pattern)
+        seg_pattern = F.when(
+            in_seg, F.lit(anchor_regex(s.pattern, end="$"))
+        ).otherwise(seg_pattern)
         row_fail = row_fail | (in_seg & ~F.col("_val").rlike(_anchored(s.pattern)))
         start = end
     in_tail = F.col("_rank") >= start

@@ -112,6 +112,10 @@ _METRICS_DDL = (
     "run_id string, partition_id int, rule_id string, metric string, "
     "value double, value_str string"
 )
+_MANIFEST_DDL = (
+    "run_id string, partition_id int, status string, rows long, "
+    "violations long, started_at string, finished_at string, seconds double"
+)
 
 
 @dataclass
@@ -1650,10 +1654,7 @@ class ValidationRun:
         violations = _union(self._violation_dfs, self.spark, _VIOLATIONS_DDL)
         metrics = _union(self._metric_dfs, self.spark, _METRICS_DDL)
         manifest_df = self.spark.createDataFrame(
-            self.manifest.rows(),
-            "run_id string, partition_id int, status string, rows long, "
-            "violations long, started_at string, finished_at string, "
-            "seconds double",
+            self.manifest.rows(), _MANIFEST_DDL
         )
         soft = {
             r.id: r.max_violation_rate

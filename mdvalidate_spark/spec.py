@@ -37,6 +37,9 @@ from dataclasses import dataclass, field
 from datetime import datetime
 from typing import ClassVar, Optional, Sequence
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import IllegalArgumentException
+from pyspark.sql import SparkSession
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
@@ -82,11 +85,36 @@ def _require_type(rule, schema, column: str, types, what: str) -> None:
 
 
 def _compile_regex(rule_id: str, pattern: str):
-    # reject before touching data (matcher.rs:175-208)
+    """Reject a malformed pattern before touching data (matcher.rs:175-208)
+    — with ``java.util.regex`` too when a session is active, the dialect
+    ``rlike`` runs (``(?P<x>..)`` is Python-only). Returns the Python
+    pattern (CaptureRule.lint reads its groups)."""
     try:
-        return re.compile(pattern)
+        compiled = re.compile(pattern)
     except re.error as e:
         raise MalformedRegexError(rule_id, pattern, str(e)) from e
+    spark = SparkSession.getActiveSession()
+    if spark is not None:
+        try:
+            spark.sparkContext._jvm.java.util.regex.Pattern.compile(pattern)
+        except (IllegalArgumentException, Py4JJavaError) as e:
+            raise MalformedRegexError(rule_id, pattern, str(e)) from e
+    return compiled
+
+
+#: end of input in Java and Python ``re`` alike — ``$`` also matches before
+#: a final line terminator in both, and Python has no ``\z``
+END_OF_INPUT = r"(?![\s\S])"
+
+
+def anchor_regex(pattern: str, full: bool = True, end: str = END_OF_INPUT) -> str:
+    """``pattern`` as ONE unit: wrapped in a non-capturing group, always
+    start-anchored (matcher.rs:332) and, with ``full``, end-anchored by
+    ``end``. Sniffing the user's own anchors is wrong for alternations
+    ("^a|b") and escapes (a literal "\\$"); redundant inner anchors are
+    harmless. ``end="$"`` spells the violation's ``expected`` text — the
+    usual full-match notation — never a pattern to match with."""
+    return "^(?:" + pattern + ")" + (end if full else "")
 
 
 # text-shaped rules read characters: on a non-string column the regex/split
@@ -190,16 +218,7 @@ class RegexRule(Rule):
 
     @property
     def anchored(self) -> str:
-        # The user pattern is ONE UNIT: wrap it in a non-capturing group,
-        # start-anchor unconditionally (the reference always start-anchors,
-        # matcher.rs:332), end-anchor when full=True. Unconditional wrapping
-        # is the only variant that survives the property tests: sniffing the
-        # user's own anchors is wrong for alternations ("^a|b" leaks a
-        # half-anchored branch) AND for escapes (a trailing literal "\$"
-        # masquerades as an end anchor and the real one gets dropped).
-        # Redundant user anchors inside the group are harmless — "^" matches
-        # at position 0 and "$" at the end, exactly where the group sits.
-        return "^(?:" + self.pattern + ")" + ("$" if self.full else "")
+        return anchor_regex(self.pattern, self.full)
 
 
 @dataclass(frozen=True)

@@ -29,7 +29,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..compile import compile_spec
+from ..compile import _GLOBAL_STAGES, compile_spec
 from ..errors import SchemaError
 from ..run import (
     _METRICS_DDL,
@@ -40,8 +40,6 @@ from ..run import (
 )
 from ..spec import Spec, VolumeRule
 
-#: the stages ValidationRun.finalize evaluates; poll() runs the others
-_GLOBAL_STAGES = ("group", "stats", "metric_bound", "drift")
 #: a volume rule judges a partition manifest file mode never keeps
 _REFUSED = (VolumeRule,)
 

@@ -1,59 +1,210 @@
 """Structured Streaming validation.
 
-Two surfaces:
-
-1. ``stream_row_violations`` — validate an unbounded stream with the fused
-   row-rule pass. Row rules are stateless column predicates, so the batch
-   executor's ``row_violations`` applies to a streaming DataFrame unchanged,
-   partition ids included (``with_partition_id``: ``spec.partition_column``
-   when set, else the key hash); violations flow to any streaming sink.
-   This is the true-streaming analog of the reference's chunk loop: each
-   micro-batch is a chunk, the sink is the accumulated error list.
-
-2. ``windowed_count_rule`` — the `{min,max}` cardinality bound over event-time
-   tumbling windows with a watermark for late data (the streaming
-   re-expression of CountRule / repeated-matcher bounds,
-   reference: containers.rs:316-349). Emits one row per closed window whose
-   count left [min, max].
-
-Both keep everything in built-in operators — no Python in the hot path — so
-they run identically under `trigger(availableNow=True)` batch-drain (used in
-tests) and continuous micro-batches on a cluster.
+1. ``stream_validate`` runs ValidationRun's batch stage on every micro-batch
+   (the reference's chunk loop, validator.rs:101-185) into parquet sinks
+   keyed by batch id; ``stream_finalize`` merges them (the EOF pass) and
+   ``stream_volume_anomaly`` judges micro-batch sizes. Rules whose
+   per-micro-batch result is not their result are refused up front.
+2. ``stream_row_violations`` is the fused row pass as a streaming DataFrame
+   for any sink, with the batch pass's partition ids.
+3. Event-time rules with no batch analog — ``windowed_count_rule`` (the
+   streaming CountRule, reference: containers.rs:316-349),
+   ``windowed_drift_rule``, ``windowed_concentration_rule`` and
+   ``stream_session_stats`` — emit one row per closed watermarked window,
+   in built-in operators only, so they run identically under
+   `trigger(availableNow=True)` (tests) and continuous micro-batches.
 """
 
 from __future__ import annotations
 
+import dataclasses
+import json
 import math
+import os
+import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..compile import ConstraintProgram
+from ..compile import _GLOBAL_STAGES, ConstraintProgram, compile_spec
 from ..errors import KIND_CONCENTRATION, SchemaError
-from ..operators.agg_rules import (
-    column_stats_from_partials,
-    column_stats_partials,
-)
 from ..operators.drift import _EPS, _bin_expr
-from ..operators.pixel import (
-    _pixel_arrow,
-    degenerate_outputs,
-    pixel_outputs,
-    quality_only_results,
-)
-from ..operators.ref_rules import ref_violations
 from ..operators.row_rules import row_violations, with_partition_id
-from ..operators.similarity import (
-    embedding_health_partials,
-    embedding_health_rule_results_from_partials,
-    health_partials_ddl,
-)
 from ..operators.skew import (
     micro_hhi_expr,
     micro_share_expr,
     volume_anomaly_from_counts,
 )
-from ..spec import CountRule
+from ..run import (
+    _INCREMENTAL_FAMILIES,
+    _MANIFEST_DDL,
+    _METRICS_DDL,
+    _VIOLATIONS_DDL,
+    ValidationRun,
+    _require_dims,
+    _union,
+)
+from ..spec import CountRule, DriftRule, Spec
+
+#: per-batch stages whose result over one micro-batch is not the rule's
+#: result: a per-partition count bound or capture array would judge a slice
+#: of each partition, and the schema check runs once per run
+_RUN_SCOPED_STAGES = ("count", "capture", "schema")
+#: global rules the stream evaluates: the incremental families whose
+#: per-micro-batch partials merge into the rule's result. Not drift: an
+#: incremental sweep freezes its bin edges per run (run._frozen_edges), so
+#: every micro-batch would bin on its own edges.
+_MERGED_TYPES = tuple(
+    fam.rule_type for fam in _INCREMENTAL_FAMILIES if fam.rule_type is not DriftRule
+)
+
+
+def _refuse_unevaluated(spec: Spec) -> None:
+    for r in spec.rules:
+        if isinstance(r, _MERGED_TYPES):
+            ok = r.incremental
+        else:  # a capturing CompositeRegexRule is staged "row"
+            capture = getattr(r, "capture", False)
+            ok = r.stage not in (*_GLOBAL_STAGES, *_RUN_SCOPED_STAGES) and not capture
+        if not ok:
+            raise SchemaError(
+                f"rule {r.id!r}: {r.kind} rules are not evaluated by "
+                "stream_validate — one micro-batch's result is not the "
+                "rule's result; validate with ValidationRun"
+            )
+
+
+def _read_sink(spark, checkpoint_dir: str, name: str, schema) -> DataFrame:
+    """One ``stream_validate`` sink with its ``batch_id`` column, read with
+    an explicit schema — never inferred: a micro-batch with no rows for a
+    sink leaves no part files. Empty when no batch wrote the sink."""
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    schema = StructType([*schema.fields, StructField("batch_id", IntegerType())])
+    path = os.path.join(checkpoint_dir, name)
+    if not os.path.exists(path):
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(path)
+
+
+def stream_validate(
+    stream_df: DataFrame,
+    spec: Spec,
+    checkpoint_dir: str,
+    dims: dict[str, DataFrame] | None = None,
+    run_id: str = "stream",
+    trigger: dict | None = None,
+):
+    """Validate an unbounded stream with ValidationRun's batch stage; returns
+    the started StreamingQuery (``trigger`` defaults to availableNow).
+
+    Each micro-batch is one ValidationRun (same spec, ``dims`` and
+    ``run_id``, no checkpoint). Its ``violations``, ``metrics``,
+    incremental partials (``run._partials``) and — LAST, marking the batch
+    done — ``manifest`` go to ``{checkpoint_dir}/<name>`` partitioned by
+    ``batch_id`` with dynamic overwrite, so a replayed micro-batch
+    overwrites its own output. ``schema.json`` keeps the stream's schema
+    for ``stream_finalize``; ``query/`` is the query's checkpoint.
+
+    Evaluated: the row, ref, pixel and degenerate stages, plus incremental
+    stats, health, Benford and concentration rules. Any other rule is a
+    SchemaError before the query starts: counts and captures would judge
+    slices of a partition, the schema check and other global rules need
+    the whole input, and sweep drift freezes bin edges per run. Per-
+    partition metrics are per (batch, partition);
+    ``max_violations_per_rule`` samples per batch (``violations_total``
+    stays exact)."""
+    dims = dims or {}
+    _refuse_unevaluated(spec)
+    _require_dims(compile_spec(spec, with_partition_id(stream_df, spec).schema), dims)
+    os.makedirs(checkpoint_dir, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=checkpoint_dir, suffix=".tmp")
+    with os.fdopen(fd, "w") as f:
+        f.write(stream_df.schema.json())
+    os.replace(tmp, os.path.join(checkpoint_dir, "schema.json"))
+
+    def _sink(batch_df: DataFrame, batch_id: int) -> None:
+        run = ValidationRun(
+            batch_df.sparkSession, spec, batch_df, dims=dims, run_id=run_id
+        )
+        try:
+            run._validate_batch(None)
+            rep = run.report()
+            outputs = [("violations", rep.violations), ("metrics", rep.metrics)]
+            outputs += [(key, part) for key, (part,) in run._partials.items()]
+            outputs.append(("manifest", rep.manifest))  # last: batch done
+            for name, frame in outputs:
+                (
+                    frame.withColumn("batch_id", F.lit(batch_id).cast("int"))
+                    .write.mode("overwrite")
+                    .option("partitionOverwriteMode", "dynamic")
+                    .partitionBy("batch_id")
+                    .parquet(os.path.join(checkpoint_dir, name))
+                )
+        finally:
+            # a long stream would otherwise pin every batch's cached frames
+            run.release()
+
+    return (
+        stream_df.writeStream.foreachBatch(_sink)
+        .option("checkpointLocation", os.path.join(checkpoint_dir, "query"))
+        .trigger(**(trigger or {"availableNow": True}))
+        .start()
+    )
+
+
+def stream_finalize(spark, spec: Spec, checkpoint_dir: str, run_id: str = "stream"):
+    """Everything ``stream_validate`` finished so far as (violations_df,
+    metrics_df) — FileIncrementalValidator.finalize's shape — without
+    replaying the stream. Only batch ids in the manifest sink count. The
+    violation and metric sinks are unioned; the incremental rules merge
+    their partials through ``ValidationRun.finalize``: one run over an
+    empty frame of the stream's schema, its spec narrowed to those rules,
+    its ``_partials`` loaded from the sinks with each family's declared
+    reload schema."""
+    _refuse_unevaluated(spec)
+    done = [
+        r["batch_id"]
+        for r in _read_sink(spark, checkpoint_dir, "manifest", _MANIFEST_DDL)
+        .select("batch_id")
+        .distinct()
+        .collect()
+    ]
+
+    def finished(name, schema) -> DataFrame:
+        return (
+            _read_sink(spark, checkpoint_dir, name, schema)
+            .where(F.col("batch_id").isin(done))
+            .drop("batch_id")
+        )
+
+    viols = [finished("violations", _VIOLATIONS_DDL)]
+    mets = [finished("metrics", _METRICS_DDL)]
+    # after the refusal above, a global-stage rule is an incremental one
+    merged = tuple(r for r in spec.rules if r.stage in _GLOBAL_STAGES)
+    if merged:
+        with open(os.path.join(checkpoint_dir, "schema.json")) as f:
+            schema = StructType.fromJson(json.load(f))
+        run = ValidationRun(
+            spark,
+            dataclasses.replace(spec, rules=merged),
+            spark.createDataFrame([], schema),
+            run_id=run_id,
+        )
+        for fam in _INCREMENTAL_FAMILIES:
+            for unit in fam.units(run.program):
+                key = fam.key(unit)
+                run._partials[key] = [finished(key, fam.reload_schema(run, unit))]
+        rep = run.finalize()
+        viols.append(rep.violations)
+        mets.append(rep.metrics)
+        # the frames recompute from the sinks when read
+        run.release()
+    return (
+        _union(viols, spark, _VIOLATIONS_DDL),
+        _union(mets, spark, _METRICS_DDL),
+    )
 
 
 def stream_row_violations(
@@ -64,31 +215,6 @@ def stream_row_violations(
     same ``with_partition_id`` ids, so a stream and a batch run over the
     same rows report the same rows."""
     return row_violations(with_partition_id(stream_df, program.spec), program, run_id)
-
-
-def stream_ref_violations(
-    stream_df: DataFrame,
-    rule,
-    dim: DataFrame,
-    run_id: str,
-    key_column: str,
-    n_partitions: int = 8,
-) -> DataFrame:
-    """Referential integrity on an unbounded stream: a STREAM-STATIC
-    broadcast left-anti join — a stateless join shape (no watermark, no
-    state store: every micro-batch joins independently against the static
-    dimension, which Spark re-reads per batch so a refreshed dim table is
-    picked up). Single-column and composite-tuple keys ride the SAME batch
-    implementation (operators/ref_rules.py) — the expression tree is
-    stateless, so it applies to a streaming frame unchanged; only the
-    partition id (micro-batch-stable key hash) is attached here."""
-    with_pid = stream_df.withColumn(
-        "partition_id",
-        F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_partitions)).cast(
-            "int"
-        ),
-    )
-    return ref_violations(with_pid, rule, dim, run_id, key_column)
 
 
 def windowed_count_rule(
@@ -134,53 +260,6 @@ def windowed_count_rule(
         F.col("n").cast("string").alias("actual"),
         F.lit("count").alias("kind"),
     )
-
-
-def stream_stats_partials(
-    stream_df: DataFrame,
-    rules,
-    partials_dir: str,
-    checkpoint_dir: str,
-    run_id: str = "stream",
-    trigger: dict | None = None,
-):
-    """Continuous incremental stats: each micro-batch appends ONE mergeable
-    partials row (count / non-null / native min-max / HLL sketch / optional
-    KLL quantile sketch — same layout as the batch engine's
-    column_stats_partials) keyed by the micro-batch id. The accumulated
-    directory merges on demand with ``merged_stream_stats`` in O(#batches),
-    so "profile the stream so far" never replays the stream.
-
-    Exactly-once: the write is a dynamic partition overwrite on
-    partition_id = batch_id, so a replayed micro-batch (foreachBatch
-    replays after failure) overwrites its own partial instead of
-    double-counting. Returns the started StreamingQuery."""
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        p = column_stats_partials(
-            batch_df.withColumn("partition_id", F.lit(int(batch_id)).cast("int")),
-            tuple(rules),
-            run_id,
-        )
-        (
-            p.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_id")
-            .parquet(partials_dir)
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-    )
-    return writer.start()
-
-
-def merged_stream_stats(spark, rules, partials_dir: str, run_id: str = "stream"):
-    """Merge everything ``stream_stats_partials`` accumulated so far into
-    the standard long metrics rows — O(#micro-batches), no stream replay."""
-    partials = spark.read.parquet(partials_dir)
-    return column_stats_from_partials(partials, tuple(rules), run_id)
 
 
 def windowed_drift_rule(
@@ -257,29 +336,23 @@ def windowed_drift_rule(
 
 def stream_volume_anomaly(
     spark,
-    rule_id: str,
-    partials_dir: str,
+    checkpoint_dir: str,
     k: float = 3.0,
     abs_tol: float = 0.0,
     min_batches: int = 4,
 ) -> DataFrame:
-    """Per-MICRO-BATCH volume anomaly from the partials
-    ``stream_stats_partials`` already persisted — the streaming face of
-    ``operators.skew.volume_anomaly``: flag micro-batches whose row count
-    is abnormal for this stream's own batch-size history (a dead upstream
-    shard shows up as a starved batch, a replayed producer as a doubled
-    one), in O(#batches) without touching the stream or its source again.
-
-    ``rule_id`` names which ColumnStatsRule's ``__rows`` partial to read —
-    any rule registered in the partials works; an unscoped rule counts the
-    whole batch. Output shape and envelope semantics are exactly
-    ``volume_anomaly``'s (partition = the micro-batch id, MAD envelope,
-    kind ∈ {over_volume, under_volume}); ``min_batches`` plays
-    ``min_partitions``' role.
-    """
-    counts = spark.read.parquet(partials_dir).select(
-        F.col("partition_id").cast("string").alias("partition"),
-        F.col(f"{rule_id}__rows").cast("double").alias("n_rows"),
+    """Per-MICRO-BATCH volume anomaly from the manifests ``stream_validate``
+    persisted — ``operators.skew.volume_anomaly`` over each batch's row
+    count (``sum(rows)``): a dead upstream shard shows up as a starved
+    batch, a replayed producer as a doubled one, in O(#batches) without
+    touching the stream again. Same output and MAD envelope (partition =
+    the batch id, kind ∈ {over_volume, under_volume}); ``min_batches``
+    plays ``min_partitions``' role."""
+    counts = (
+        _read_sink(spark, checkpoint_dir, "manifest", _MANIFEST_DDL)
+        .groupBy("batch_id")
+        .agg(F.sum("rows").cast("double").alias("n_rows"))
+        .select(F.col("batch_id").cast("string").alias("partition"), "n_rows")
     )
     return volume_anomaly_from_counts(
         counts, k=k, abs_tol=abs_tol, min_partitions=min_batches
@@ -480,112 +553,3 @@ def stream_session_stats(
             - F.unix_micros(F.col("first_event"))
         ).alias("duration_us"),
     )
-
-
-def stream_degenerate_violations(
-    stream_df: DataFrame,
-    rule,
-    run_id: str,
-    key_column: str = "image_id",
-    n_partitions: int = 8,
-) -> DataFrame:
-    """Degenerate-image gate (DegenerateImageRule) on an unbounded stream of
-    image rows. The decode→stats kernel is a STATELESS Arrow mapInPandas (no
-    watermark, no state store — each micro-batch decodes independently), so
-    the batch engine's quality_only_results applies to a streaming frame
-    unchanged; only the micro-batch-stable partition id is attached here.
-    Emits the same violation shape as the batch stage (run_id, partition_id,
-    rule_id, image_id, column, expected, actual, kind=degenerate) so a
-    parquet/Kafka sink of stream and batch verdicts can be unioned.
-
-    Per-partition metrics are an aggregation (stateful on a stream) and are
-    intentionally NOT emitted here — aggregate the sunk violations with the
-    batch degenerate_outputs on a bounded replay instead."""
-    with_pid = stream_df.withColumn(
-        "partition_id",
-        F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_partitions)).cast("int"),
-    )
-    checks = quality_only_results(with_pid, rule, key_column)
-    violations, _ = degenerate_outputs(checks, rule, run_id)
-    return violations
-
-
-def stream_pixel_violations(
-    stream_df: DataFrame,
-    rule,
-    run_id: str,
-    key_column: str = "image_id",
-    n_partitions: int = 8,
-) -> DataFrame:
-    """PixelRule verify (decode + fmt + dims + phash + PSNR) on an unbounded
-    stream of image rows — the at-ingest twin of the batch pixel stage. The
-    verify kernel is a STATELESS Arrow mapInPandas, so each micro-batch
-    decodes independently (no watermark, no state store); the native
-    row-group scan path is a batch-only optimization (it re-reads parquet
-    files, which a stream has no stable set of), so the stream always takes
-    the Arrow exchange path explicitly. ``rule.sample_rate`` applies
-    unchanged — content-keyed membership is engine- and batch-independent,
-    so a sampled stream verdict matches the batch verdict on the same rows.
-    Emits the batch stage's violation shape (kind=pixel)."""
-    with_pid = stream_df.withColumn(
-        "partition_id",
-        F.pmod(F.xxhash64(F.col(key_column)), F.lit(n_partitions)).cast("int"),
-    )
-    checks = _pixel_arrow(with_pid, rule, key_column, None)
-    violations, _ = pixel_outputs(checks, rule, run_id)
-    return violations
-
-
-def stream_health_partials(
-    stream_df: DataFrame,
-    rule,
-    partials_dir: str,
-    checkpoint_dir: str,
-    trigger: dict | None = None,
-):
-    """Continuous embedding-matrix health: each micro-batch appends its
-    mergeable matrix-partials rows (usable/excluded counts, per-dimension
-    sum + sum-of-squares, row-norm sum — the EmbeddingHealthRule
-    incremental partial) keyed by the micro-batch id, so "is the encoder
-    drifting toward collapse on the live feed" merges on demand with
-    ``merged_stream_health`` in O(partial rows), never replaying the
-    stream. Narrow rules (dim ≤ 512) write one row per batch; wide rules
-    write one row per Arrow batch within it (the mapInPandas kernel —
-    deliberately never one pandas frame per batch), all summed by the
-    merge.
-
-    Exactly-once: dynamic partition overwrite on partition_id = batch_id —
-    a replayed micro-batch (foreachBatch replays after failure) overwrites
-    its own partial instead of double-counting (the stream_stats_partials
-    contract). Returns the started StreamingQuery."""
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        p = embedding_health_partials(
-            batch_df.withColumn(
-                "partition_id", F.lit(int(batch_id)).cast("int")
-            ),
-            rule,
-        )
-        (
-            p.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("partition_id")
-            .parquet(partials_dir)
-        )
-
-    writer = (
-        stream_df.writeStream.foreachBatch(_sink)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(**(trigger or {"availableNow": True}))
-    )
-    return writer.start()
-
-
-def merged_stream_health(spark, rule, partials_dir: str, run_id: str = "stream"):
-    """Merge everything ``stream_health_partials`` accumulated so far into
-    the rule's standard (violations, metrics) frames — O(#micro-batches),
-    no stream replay, same arithmetic as the batch paths (explicit
-    dim-dependent schema so an empty first batch stays readable)."""
-    partials = spark.read.schema(health_partials_ddl(rule.dim)).parquet(
-        partials_dir
-    )
-    return embedding_health_rule_results_from_partials(partials, rule, run_id)

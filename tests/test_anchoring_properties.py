@@ -6,6 +6,8 @@ the other side), so the semantics are pinned here as PROPERTIES over
 generated patterns instead of a handful of examples:
 
   full=True  ⇒ the compiled pattern accepts exactly the full-match language
+               (a trailing line terminator included: "$" would accept
+               "ab\\n" for "ab" in Python and Java alike)
   full=False ⇒ accepts exactly the start-anchored (prefix) language
 
 checked for literal cores, alternations of literals, and every combination
@@ -54,7 +56,12 @@ def test_literal_anchoring_matches_expected_language(lit, junk, variant, full):
             return s == lit
         return s.startswith(lit)
 
-    for s in (lit, lit + junk, junk + lit, junk, ""):
+    probes = [lit, lit + junk, junk + lit, junk, ""]
+    if full or not user_end:
+        # a trailing line terminator, which "$" would accept before; a
+        # user's own "$" keeps that meaning in prefix mode
+        probes += [lit + "\n", lit + "\r\n"]
+    for s in probes:
         assert bool(rx.search(s)) == accepts(s), (pattern, s, rule.anchored)
 
 
@@ -78,7 +85,10 @@ def test_alternation_anchoring_never_leaks_half_anchors(a, b, junk, variant, ful
             return s == a or s == b
         return s.startswith(a) or (s == b if end_on_b else s.startswith(b))
 
-    for s in (a, b, a + junk, junk + a, b + junk, junk + b, junk):
+    probes = [a, b, a + junk, junk + a, b + junk, junk + b, junk, a + "\n"]
+    if full or not end_on_b:
+        probes.append(b + "\n")
+    for s in probes:
         assert bool(rx.search(s)) == accepts(s), (pattern, s, rule.anchored)
 
 
@@ -91,7 +101,7 @@ def test_sequence_anchoring_is_always_full_match(lit, junk, variant):
     core = re.escape(lit)
     pattern = _variants(core)[variant]
     rx = re.compile(seq_anchored(pattern))
-    for s in (lit, lit + junk, junk + lit, junk, ""):
+    for s in (lit, lit + junk, junk + lit, junk, "", lit + "\n"):
         assert bool(rx.search(s)) == (s == lit), (pattern, s)
 
 
@@ -110,8 +120,8 @@ def test_escaped_trailing_dollar_is_a_literal_not_an_anchor(lit, junk, full):
             return s == target
         return s.startswith(target)
 
-    for s in (target, target + junk, junk + target, lit, junk):
+    for s in (target, target + junk, junk + target, lit, junk, target + "\n"):
         assert bool(rx.search(s)) == accepts(s), (pattern, s, rule.anchored)
     srx = re.compile(seq_anchored(pattern))
-    for s in (target, target + junk, junk + target, lit):
+    for s in (target, target + junk, junk + target, lit, target + "\n"):
         assert bool(srx.search(s)) == (s == target), (pattern, s)

@@ -278,29 +278,23 @@ def test_quality_native_arrow_parity(spark, tmp_path):
     assert qset(native) == qset(arrow)
 
 
-def test_stream_degenerate_violations_availablenow(spark, qimages, tmp_path):
+def test_stream_validate_degenerate_availablenow(spark, qimages, tmp_path):
     """The decode→stats kernel is stateless: streamed micro-batch verdicts
     must equal the batch run's, row for row."""
-    from mdvalidate_spark import DegenerateImageRule
-    from mdvalidate_spark.streaming.structured import stream_degenerate_violations
+    from mdvalidate_spark import DegenerateImageRule, Spec
+    from mdvalidate_spark.streaming.structured import (
+        stream_finalize,
+        stream_validate,
+    )
 
     src = str(tmp_path / "qstream-src")
-    out = str(tmp_path / "qstream-out")
     ck = str(tmp_path / "qstream-ck")
     qimages.write.mode("overwrite").parquet(src)
 
+    spec = Spec(rules=(DegenerateImageRule("degen"),), key_column="image_id")
     stream = spark.readStream.schema(qimages.schema).parquet(src)
-    viol = stream_degenerate_violations(stream, DegenerateImageRule("degen"), "s1")
-    assert viol.isStreaming
-    q = (
-        viol.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = spark.read.parquet(out)
+    stream_validate(stream, spec, ck, run_id="s1").awaitTermination(120)
+    got, _ = stream_finalize(spark, spec, ck, "s1")
     classes = {}
     for r in got.collect():
         assert r["run_id"] == "s1" and r["kind"] == "degenerate"
@@ -316,9 +310,6 @@ def test_stream_degenerate_violations_availablenow(spark, qimages, tmp_path):
         if expected_class(i) is not None
     }
     assert classes == want
-
-
-# ------------------------------------------------- deterministic decode sample
 
 
 def test_sample_rate_lints(spark):
@@ -733,37 +724,29 @@ def test_suggest_second_binary_column_gets_no_pixel_rule(spark):
     assert sorted(d.bytes_column for d in degs) == ["bytes", "thumb"]
 
 
-def test_stream_pixel_violations_matches_batch(spark, tmp_path):
+def test_stream_validate_pixel_matches_batch(spark, tmp_path):
     """Streamed pixel verdicts must equal the batch stage's, row for row —
     including under a decode sample (content-keyed membership is
     batch-boundary-independent)."""
     from mdvalidate_spark.operators import pixel as pixel_ops
-    from mdvalidate_spark.spec import PixelRule
+    from mdvalidate_spark.spec import PixelRule, Spec
     from mdvalidate_spark.sources.synthetic import synthetic_images
-    from mdvalidate_spark.streaming.structured import stream_pixel_violations
+    from mdvalidate_spark.streaming.structured import (
+        stream_finalize,
+        stream_validate,
+    )
 
     src = str(tmp_path / "pxstream-src")
-    out = str(tmp_path / "pxstream-out")
     ck = str(tmp_path / "pxstream-ck")
     df = synthetic_images(spark, 400, with_bytes=True)
     df.write.mode("overwrite").parquet(src)
 
     rule = PixelRule("px", sample_rate=0.6)
+    spec = Spec(rules=(rule,), key_column="image_id")
     stream = spark.readStream.schema(df.schema).parquet(src)
-    viol = stream_pixel_violations(stream, rule, "s1")
-    assert viol.isStreaming
-    q = (
-        viol.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        (r["image_id"], r["expected"])
-        for r in spark.read.parquet(out).collect()
-    }
+    stream_validate(stream, spec, ck, run_id="s1").awaitTermination(120)
+    viol, _ = stream_finalize(spark, spec, ck, "s1")
+    got = {(r["image_id"], r["expected"]) for r in viol.collect()}
     batch = pixel_ops.pixel_check_results(
         spark.read.parquet(src), rule, "image_id"
     )

@@ -14,6 +14,7 @@ from mdvalidate_spark.errors import (
     UnknownColumnError,
 )
 from mdvalidate_spark.spec import (
+    END_OF_INPUT,
     ColumnStatsRule,
     CountRule,
     DomainRule,
@@ -139,7 +140,7 @@ def test_empty_domain_and_bad_drift_method_rejected():
 def test_regex_anchoring_matches_reference():
     # auto-anchored with ^ like matcher.rs:332
     r = RegexRule("r", column="c", pattern=r"\d+")
-    assert r.anchored == r"^(?:\d+)$"
+    assert r.anchored == r"^(?:\d+)" + END_OF_INPUT
     r2 = RegexRule("r", column="c", pattern=r"\d+", full=False)
     assert r2.anchored == r"^(?:\d+)"
 
@@ -153,9 +154,10 @@ def test_regex_one_sided_anchor_completed():
     property tests for the full language checks."""
     import re
 
-    assert RegexRule("r", column="c", pattern="^foo").anchored == "^(?:^foo)$"
-    assert RegexRule("r", column="c", pattern="foo$").anchored == "^(?:foo$)$"
-    assert RegexRule("r", column="c", pattern="^foo$").anchored == "^(?:^foo$)$"
+    end = END_OF_INPUT
+    assert RegexRule("r", column="c", pattern="^foo").anchored == "^(?:^foo)" + end
+    assert RegexRule("r", column="c", pattern="foo$").anchored == "^(?:foo$)" + end
+    assert RegexRule("r", column="c", pattern="^foo$").anchored == "^(?:^foo$)" + end
     # full=False: only the start anchor is owed
     assert RegexRule("r", column="c", pattern="^foo", full=False).anchored == "^(?:^foo)"
     assert (
@@ -178,10 +180,10 @@ def test_regex_one_sided_anchor_completed():
 def test_sequence_one_sided_anchor_completed():
     from mdvalidate_spark.operators.sequence import _anchored
 
-    assert _anchored("a|b") == "^(?:a|b)$"
-    assert _anchored("^foo") == "^(?:^foo)$"
-    assert _anchored("foo$") == "^(?:foo$)$"
-    assert _anchored("^foo$") == "^(?:^foo$)$"
+    assert _anchored("a|b") == "^(?:a|b)" + END_OF_INPUT
+    assert _anchored("^foo") == "^(?:^foo)" + END_OF_INPUT
+    assert _anchored("foo$") == "^(?:foo$)" + END_OF_INPUT
+    assert _anchored("^foo$") == "^(?:^foo$)" + END_OF_INPUT
 
 
 def test_schema_rule_violations(spark):
@@ -295,6 +297,45 @@ def test_regex_alternation_full_match(spark):
     bad = {r["image_id"] for r in
            row_violations(with_partition_id(df, spec), prog, "t").collect()}
     assert bad == {"k3", "k4"}
+
+
+def test_regex_trailing_newline_is_a_violation(spark):
+    """Java's "$" also matches before a final line terminator, so "ab\\n"
+    passed a full-match RegexRule("ab"); the end anchor is end of input."""
+    from mdvalidate_spark.operators.row_rules import row_violations, with_partition_id
+
+    df = spark.createDataFrame(
+        [("k1", "ab"), ("k2", "ab\n"), ("k3", "abc"), ("k4", "ab\r\n")],
+        "k string, v string",
+    )
+    spec = Spec(rules=(RegexRule("ab", column="v", pattern="ab"),), key_column="k")
+    prog = compile_spec(spec, df.columns)
+    got = {
+        (r["image_id"], r["expected"])
+        for r in row_violations(with_partition_id(df, spec), prog, "t").collect()
+    }
+    # the expected text keeps the full-match notation
+    assert got == {("k2", "^(?:ab)$"), ("k3", "^(?:ab)$"), ("k4", "^(?:ab)$")}
+
+
+def test_java_only_regex_error_raised_before_any_job(spark):
+    """A pattern Python's re accepts but java.util.regex rejects (a named
+    group in Python syntax) used to pass the lint and fail mid-job."""
+    from mdvalidate_spark.run import ValidationRun
+
+    df = spark.createDataFrame([("k1", "ab")], "k string, v string")
+    spec = Spec(
+        rules=(RegexRule("named", column="v", pattern=r"(?P<x>a)b"),),
+        key_column="k",
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("java-regex-lint", "lint")
+    try:
+        with pytest.raises(MalformedRegexError, match="'named'"):
+            ValidationRun(spark, spec, df, run_id="java-regex")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("java-regex-lint")) == []
 
 
 @pytest.mark.parametrize(

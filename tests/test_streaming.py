@@ -29,6 +29,7 @@ from mdvalidate_spark.spec import (
     RangeRule,
     RefIntegrityRule,
     RegexRule,
+    SchemaRule,
     SequenceRule,
     SequenceStep,
     Spec,
@@ -37,7 +38,10 @@ from mdvalidate_spark.spec import (
 )
 from mdvalidate_spark.streaming.incremental import FileIncrementalValidator
 from mdvalidate_spark.streaming.structured import (
+    stream_finalize,
     stream_row_violations,
+    stream_validate,
+    stream_volume_anomaly,
     windowed_count_rule,
 )
 
@@ -443,44 +447,41 @@ def test_stateful_duplicate_ttl_evicts_idle_keys(spark, tmp_path):
         stream_duplicate_violations(stream2, "image_id", "r", "s", ttl_seconds=0)
 
 
-def test_stream_stats_partials_accumulate_and_merge(spark, tmp_path):
+def test_stream_validate_stats_accumulate_and_merge(spark, tmp_path):
     """Continuous incremental stats: two availableNow drains over a growing
-    directory leave one mergeable partials row per micro-batch; the merge
-    equals a batch profile of the full data — without replaying the stream."""
-    from mdvalidate_spark.spec import ColumnStatsRule
-    from mdvalidate_spark.streaming.structured import (
-        merged_stream_stats,
-        stream_stats_partials,
-    )
-
+    directory leave one finished batch each; the merge equals a batch
+    profile of the full data — without replaying the stream."""
     src = str(tmp_path / "st-src")
-    pdir = str(tmp_path / "st-partials")
     ck = str(tmp_path / "st-ck")
-    rules = (
-        ColumnStatsRule("st_w", column="w", incremental=True, quantiles=(0.5,)),
-        ColumnStatsRule("st_fmt", column="fmt", incremental=True),
+    spec = Spec(
+        rules=(
+            ColumnStatsRule("st_w", column="w", incremental=True, quantiles=(0.5,)),
+            ColumnStatsRule("st_fmt", column="fmt", incremental=True),
+        ),
+        key_column="k",
     )
+    schema = "k string, w int, fmt string"
 
     def drain():
-        stream = spark.readStream.schema("w int, fmt string").parquet(src)
-        q = stream_stats_partials(stream, rules, pdir, ck, run_id="s1")
-        q.awaitTermination(120)
+        stream = spark.readStream.schema(schema).parquet(src)
+        stream_validate(stream, spec, ck, run_id="s1").awaitTermination(120)
 
     spark.createDataFrame(
-        [(100, "png"), (200, "jpeg"), (300, "png"), (None, "webp")],
-        "w int, fmt string",
+        [("a", 100, "png"), ("b", 200, "jpeg"), ("c", 300, "png"), ("d", None, "webp")],
+        schema,
     ).coalesce(1).write.mode("append").parquet(src)
     drain()
     spark.createDataFrame(
-        [(400, "bmp"), (50, "png")], "w int, fmt string"
+        [("e", 400, "bmp"), ("f", 50, "png")], schema
     ).coalesce(1).write.mode("append").parquet(src)
     drain()
 
-    partials = spark.read.parquet(pdir)
-    assert partials.count() == 2  # one partial row per micro-batch
+    manifest = spark.read.parquet(os.path.join(ck, "manifest"))
+    assert manifest.select("batch_id").distinct().count() == 2
+    _, mets = stream_finalize(spark, spec, ck, "s1")
     m = {
         (r["rule_id"], r["metric"]): (r["value"], r["value_str"])
-        for r in merged_stream_stats(spark, rules, pdir, "s1").collect()
+        for r in mets.collect()
     }
     assert m[("st_w", "count")][0] == 6.0
     assert m[("st_w", "null_rate")][0] == pytest.approx(1 / 6)
@@ -640,15 +641,10 @@ def test_windowed_drift_categorical_rejects_ks(spark):
         windowed_drift_rule(df, rule, ["jpeg"], [0.9, 0.1], "ts")
 
 
-def test_stream_ref_violations_availablenow(spark, tmp_path):
+def test_stream_validate_ref_violations_availablenow(spark, tmp_path):
     """Stream-static referential integrity: orphan foreign keys in a stream
-    are flagged by the broadcast anti-join per micro-batch; composite tuple
-    keys use the same path."""
-    from mdvalidate_spark.spec import RefIntegrityRule
-    from mdvalidate_spark.streaming.structured import stream_ref_violations
-
+    are flagged by the batch stage's broadcast anti-join per micro-batch."""
     src = str(tmp_path / "ref-src")
-    out = str(tmp_path / "ref-out")
     ck = str(tmp_path / "ref-ck")
     df = spark.range(200).select(
         F.format_string("k%04d", F.col("id")).alias("key"),
@@ -659,21 +655,18 @@ def test_stream_ref_violations_availablenow(spark, tmp_path):
     dim = spark.createDataFrame(
         [(f"s{i:02d}",) for i in range(10)], "src_id string"
     )
-    rule = RefIntegrityRule(
-        "src_fk", column="src_id", dim_name="sources", dim_column="src_id"
+    spec = Spec(
+        rules=(
+            RefIntegrityRule(
+                "src_fk", column="src_id", dim_name="sources", dim_column="src_id"
+            ),
+        ),
+        key_column="key",
     )
     stream = spark.readStream.schema(df.schema).parquet(src)
-    viol = stream_ref_violations(stream, rule, dim, "s", "key")
-    assert viol.isStreaming
-    q = (
-        viol.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ck)
-        .trigger(availableNow=True)
-        .start()
-    )
+    q = stream_validate(stream, spec, ck, dims={"sources": dim}, run_id="s")
     q.awaitTermination(120)
-    got = spark.read.parquet(out)
+    got, _ = stream_finalize(spark, spec, ck, "s")
     # ids with id%15 in 10..14 → 5 of every 15: ⌈⌉ arithmetic on 200 rows
     bad = sum(1 for i in range(200) if i % 15 >= 10)
     assert got.count() == bad
@@ -683,38 +676,30 @@ def test_stream_ref_violations_availablenow(spark, tmp_path):
     ) == {f"s{i}" for i in range(10, 15)}
 
 
-def test_stream_volume_anomaly_from_partials(spark, tmp_path):
-    """Batch-size anomaly judged purely from the persisted partials — no
+def test_stream_volume_anomaly_from_manifests(spark, tmp_path):
+    """Batch-size anomaly judged purely from the persisted manifests — no
     stream replay: four ~uniform micro-batches plus one starved batch; the
     starved one flags under_volume, the healthy ones stay quiet."""
-    from mdvalidate_spark.spec import ColumnStatsRule
-    from mdvalidate_spark.streaming.structured import (
-        stream_stats_partials,
-        stream_volume_anomaly,
-    )
-
     src = str(tmp_path / "sv-src")
-    pdir = str(tmp_path / "sv-partials")
     ck = str(tmp_path / "sv-ck")
-    rules = (ColumnStatsRule("st_w", column="w", incremental=True),)
+    spec = Spec(rules=(RangeRule("w_min", column="w", min=0),), key_column="k")
 
     def drain():
-        stream = spark.readStream.schema("w int").parquet(src)
-        q = stream_stats_partials(stream, rules, pdir, ck, run_id="s2")
-        q.awaitTermination(120)
+        stream = spark.readStream.schema("k string, w int").parquet(src)
+        stream_validate(stream, spec, ck, run_id="s2").awaitTermination(120)
 
     sizes = [40, 42, 41, 40, 3]  # last batch starved
-    for n in sizes:
-        spark.createDataFrame([(i,) for i in range(n)], "w int").coalesce(
-            1
-        ).write.mode("append").parquet(src)
+    for b, n in enumerate(sizes):
+        spark.createDataFrame(
+            [(f"b{b}-{i}", i) for i in range(n)], "k string, w int"
+        ).coalesce(1).write.mode("append").parquet(src)
         drain()
 
-    out = stream_volume_anomaly(spark, "st_w", pdir, k=3.0).collect()
+    out = stream_volume_anomaly(spark, ck, k=3.0).collect()
     assert len(out) == 1
     assert out[0]["kind"] == "under_volume" and out[0]["n_rows"] == 3.0
     # insufficient history → empty by contract
-    assert stream_volume_anomaly(spark, "st_w", pdir, min_batches=9).count() == 0
+    assert stream_volume_anomaly(spark, ck, min_batches=9).count() == 0
 
 
 def test_stream_quality_gates(spark, tmp_path):
@@ -1101,33 +1086,27 @@ def test_stream_alignment_rule(spark, tmp_path):
     assert {r["kind"] for r in got.collect()} == {"alignment"}
 
 
-def test_stream_health_partials_accumulate_and_merge(spark, tmp_path):
+def test_stream_validate_health_accumulate_and_merge(spark, tmp_path):
     """Continuous embedding-matrix health: two availableNow drains over a
-    growing directory leave one matrix-partials row per micro-batch; the
-    merge equals the batch rule on the full data — without replaying the
-    stream."""
+    growing directory; the merge equals the batch rule on the full data —
+    without replaying the stream."""
     from mdvalidate_spark.operators.similarity import (
         embedding_health_rule_results,
     )
     from mdvalidate_spark.spec import EmbeddingHealthRule
-    from mdvalidate_spark.streaming.structured import (
-        merged_stream_health,
-        stream_health_partials,
-    )
 
     src = str(tmp_path / "eh-src")
-    pdir = str(tmp_path / "eh-partials")
     ck = str(tmp_path / "eh-ck")
     rule = EmbeddingHealthRule(
         "eh_s", column="embedding", dim=3, max_dead_dims=0,
         max_anisotropy=0.99, min_rows=2, incremental=True,
     )
+    spec = Spec(rules=(rule,), key_column="image_id")
     schema = "image_id string, embedding array<double>"
 
     def drain():
         stream = spark.readStream.schema(schema).parquet(src)
-        q = stream_health_partials(stream, rule, pdir, ck)
-        q.awaitTermination(120)
+        stream_validate(stream, spec, ck, run_id="s1").awaitTermination(120)
 
     # batch 1: spread vectors + dim 1 pinned (dead); batch 2 adds a NULL
     spark.createDataFrame(
@@ -1141,10 +1120,10 @@ def test_stream_health_partials_accumulate_and_merge(spark, tmp_path):
     ).coalesce(1).write.mode("append").parquet(src)
     drain()
 
-    partials = spark.read.parquet(pdir)
-    assert partials.count() == 2  # one matrix-partial row per micro-batch
+    manifest = spark.read.parquet(os.path.join(ck, "manifest"))
+    assert manifest.select("batch_id").distinct().count() == 2
 
-    viol, mets = merged_stream_health(spark, rule, pdir, "s1")
+    viol, mets = stream_finalize(spark, spec, ck, "s1")
     batch_df = spark.createDataFrame(
         [("a", [1.0, 0.5, 2.0]), ("b", [-1.0, 0.5, 0.0]),
          ("c", [3.0, 0.5, 1.0]), ("d", [0.0, 0.5, -1.0]), ("e", None)],
@@ -1415,3 +1394,179 @@ def test_stream_row_violations_partition_ids_match_batch(spark, tmp_path):
     )
     assert got == expected
     assert {p for _, p in got} <= set(range(5))
+
+
+def _stream_files(spark, src, rows=ROWS):
+    """``rows`` synthetic images in three files, partitioned by a ``bucket``
+    column (no physical partition_id), with undecodable payloads planted and
+    a 3-dim embedding."""
+    df = (
+        synthetic_images(spark, rows, with_bytes=True)
+        .drop("partition_id")
+        .withColumn(
+            "bytes",
+            F.when(F.col("i") % 37 == 5, F.lit(b"garbage")).otherwise(F.col("bytes")),
+        )
+        .withColumn("bucket", (F.col("i") % 5).cast("int"))
+        .withColumn(
+            "embedding",
+            F.array(F.col("w").cast("double"), F.lit(0.5), (F.col("i") % 7).cast("double")),
+        )
+    )
+    third = rows // 3
+    for lo in (0, third, 2 * third):
+        df.where(f"i >= {lo} and i < {lo + third}").coalesce(1).write.mode(
+            "append"
+        ).parquet(src)
+    return spark.read.parquet(src)
+
+
+def _stream_spec():
+    from mdvalidate_spark.spec import EmbeddingHealthRule
+
+    return Spec(
+        rules=(
+            *spec_rows().rules,
+            RefIntegrityRule("src_ref", column="source_id", dim_name="dim_source",
+                             dim_column="source_id"),
+            PixelRule("px", sample_rate=0.6),
+            DegenerateImageRule("degen", sample_rate=0.6),
+            ColumnStatsRule("w_stats", column="w", incremental=True),
+            EmbeddingHealthRule("eh", column="embedding", dim=3, max_dead_dims=0,
+                                min_rows=2, incremental=True),
+        ),
+        key_column="image_id",
+        partition_column="bucket",
+    )
+
+
+def _drain(spark, src, table, spec, ck, dims):
+    stream = (
+        spark.readStream.schema(table.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    stream_validate(stream, spec, ck, dims=dims, run_id="s1").awaitTermination(300)
+
+
+def _viol_set(frame):
+    return sorted(
+        (r["rule_id"], r["kind"], r["image_id"], r["partition_id"], r["actual"])
+        for r in frame.collect()
+    )
+
+
+def _summed_metrics(frame, names):
+    """Per (rule, partition, metric) sums of the additive metrics ``names``."""
+    return sorted(
+        tuple(r)
+        for r in frame.where(F.col("metric").isin(*names))
+        .groupBy("rule_id", "partition_id", "metric")
+        .agg(F.sum("value").alias("v"))
+        .collect()
+    )
+
+
+def _merged_metrics(frame, rule_ids):
+    return sorted(
+        (r["rule_id"], r["metric"],
+         None if r["value"] is None else round(r["value"], 9), r["value_str"])
+        for r in frame.where(F.col("rule_id").isin(*rule_ids)).collect()
+    )
+
+
+def test_stream_validate_matches_validation_run(spark, tmp_path):
+    """stream_validate runs ValidationRun's batch stage per micro-batch: over
+    three micro-batches of a partition_column table it reports the one-shot
+    run's violations (partition ids included), the same additive
+    per-partition pixel/degenerate metrics, and the same merged stats and
+    health metrics. The per-family stream forks it replaced hashed the key
+    for partition ids, ignoring spec.partition_column."""
+    src = str(tmp_path / "src")
+    ck = str(tmp_path / "ck")
+    table = _stream_files(spark, src)
+    dims = {"dim_source": dim_source(spark)}
+    spec = _stream_spec()
+    _drain(spark, src, table, spec, ck, dims)
+    manifest = spark.read.parquet(os.path.join(ck, "manifest"))
+    assert sorted(
+        tuple(r) for r in manifest.groupBy("batch_id").agg(F.sum("rows")).collect()
+    ) == [(0, 200), (1, 200), (2, 200)]
+    viols, mets = stream_finalize(spark, spec, ck, "s1")
+    rep = ValidationRun(spark, spec, table, dims=dims, run_id="s1").validate()
+
+    expected = _viol_set(rep.violations)
+    assert {v[0] for v in expected} >= {
+        "caption_regex", "w_range", "fmt_domain", "src_ref", "px", "degen", "eh"
+    }
+    assert _viol_set(viols) == expected
+    assert {v[3] for v in expected if v[0] != "eh"} <= set(range(5))
+    additive = ("pixel_checked", "pixel_failed", "degenerate_checked",
+                "degenerate_failed")
+    assert _summed_metrics(mets, additive) == _summed_metrics(rep.metrics, additive)
+    assert _summed_metrics(rep.metrics, additive)
+    want = _merged_metrics(rep.metrics, ("w_stats", "eh"))
+    assert {m[0] for m in want} == {"w_stats", "eh"}
+    assert _merged_metrics(mets, ("w_stats", "eh")) == want
+
+
+def test_stream_validate_replayed_batch_is_not_duplicated(spark, tmp_path):
+    """A micro-batch replayed after a lost commit overwrites its own
+    batch_id in every sink: the violations and merged stats are unchanged."""
+    src = str(tmp_path / "src")
+    ck = str(tmp_path / "ck")
+    table = _stream_files(spark, src, rows=300)
+    spec = Spec(
+        rules=(*spec_rows().rules,
+               ColumnStatsRule("w_stats", column="w", incremental=True)),
+        key_column="image_id",
+        partition_column="bucket",
+    )
+    _drain(spark, src, table, spec, ck, {})
+    viols, mets = stream_finalize(spark, spec, ck, "s1")
+    before = (_viol_set(viols), _merged_metrics(mets, ("w_stats",)))
+    assert before[0] and before[1]
+
+    commits = os.path.join(ck, "query", "commits")
+    last = max(
+        (f for f in os.listdir(commits) if f.isdigit()), key=int
+    )
+    os.remove(os.path.join(commits, last))
+    # the local filesystem's checksum sidecar would block the re-commit
+    os.remove(os.path.join(commits, f".{last}.crc"))
+    _drain(spark, src, table, spec, ck, {})
+    assert os.path.exists(os.path.join(commits, last))  # the batch re-ran
+    viols, mets = stream_finalize(spark, spec, ck, "s1")
+    assert (_viol_set(viols), _merged_metrics(mets, ("w_stats",))) == before
+
+
+@pytest.mark.parametrize(
+    "rule",
+    [
+        CountRule("per_part", min=1),
+        CaptureRule("cap", column="caption", pattern=r"of (\w+)"),
+        CompositeRegexRule("comp", column="caption", prefix="A photo number ",
+                           pattern=r"\d+", suffix=" of cat", capture=True),
+        SchemaRule("schema", expected=(("w", "int"),), allow_extra=True),
+        UniqueRule("uniq", columns=("image_id",)),
+        ColumnStatsRule("w_full", column="w"),
+        MetricBoundRule("w_mean", column="w", metric="mean", max=1e9),
+        DriftRule("d_sweep", column="w", sweep_by="fmt"),
+        DriftRule("d_inc", column="w", sweep_by="fmt", incremental=True),
+    ],
+    ids=lambda r: r.id,
+)
+def test_stream_validate_refuses_rules_it_cannot_evaluate(spark, tmp_path, rule):
+    """A rule whose per-micro-batch result is not its result is a
+    SchemaError naming the rule, before any query starts."""
+    src = str(tmp_path / "src")
+    table = synthetic_images(spark, 20, with_bytes=False)
+    table.write.parquet(src)
+    stream = spark.readStream.schema(table.schema).parquet(src)
+    spec = Spec(rules=(rule,), key_column="image_id")
+    ck = str(tmp_path / "ck")
+    active = len(spark.streams.active)
+    with pytest.raises(SchemaError, match=repr(rule.id)):
+        stream_validate(stream, spec, ck)
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(ck)

@@ -3,43 +3,29 @@ schema lint, reference: matchers/matcher.rs:175-208 and the schema-sanity
 walkers count_non_literal_matchers_in_children.rs:40-85 /
 check_repeating_matchers.rs:8-37).
 
-Compilation is pure Python on the driver: it validates every rule, rejects
-malformed specs with typed SchemaError (never at run time, never per-row), and
-groups rules into execution *stages* so each stage is one fused DataFrame pass
-— the engine-level equivalent of the reference evaluating all constraints of a
-container in a single child sweep (containers.rs:212-230) rather than one walk
-per rule. Like the reference's matchers, each rule checks itself
+Compilation runs on the driver and starts no Spark job: it validates every
+rule, rejects malformed specs with typed SchemaError (never at run time, never
+per-row; given a typed schema and an active session, a rule's SQL expressions
+are analyzed too), and groups rules into execution *stages* so each stage is
+one fused DataFrame pass — the engine-level equivalent of the reference
+evaluating all constraints of a container in a single child sweep
+(containers.rs:212-230) rather than one walk per rule. Like the reference's matchers, each rule checks itself
 (``Rule.lint``) and names its own stage (``Rule.stage``); only the checks that
 span several rules live here.
 
-Stages (``ConstraintProgram`` has one ``<stage>_rules`` field per stage):
-  per batch of pending partitions —
-  schema     — SchemaRule: driver-side metadata compare, once, before any batch
-  row        — NotNull/Regex/Literal/Range/Domain/...: ONE fused select
-  count      — per-partition Count bounds
-  ref        — RefIntegrity: broadcast joins, fused into the row pass when
-               there is one
-  capture    — CaptureRule: per-partition capture arrays/rows
-  pixel      — PixelRule: Arrow-batched decode stage (only stage that reads
-               the binary column — column pruning keeps it out of all others)
-  degenerate — DegenerateImageRule: rides the pixel decode when it can
-  global, once in the finalize pass —
-  group        — Unique/grouped Count/FD/Sequence/Overlap/Volume/...: one
-                 finalize handler per rule class (run._GLOBAL_HANDLERS)
-  stats        — ColumnStats: one fused agg pass (or merged partials)
-  metric_bound — MetricBound: all bounds fuse into one aggregation
-  drift        — DriftRule: needs the full-table view (or merged partials)
+The stage set, each stage's scope and their order are one declaration,
+``STAGES`` below; ``ConstraintProgram.stages`` maps each stage to its rules.
 
-Incremental semantics (reference validator.rs:101-185): the per-partition
-stages run on pending partitions only; the global stages run in the finalize
-pass — the analog of the reference's EOF full revalidation
-(validator.rs:162-168) that produces the canonical error set once all input
-has arrived.
+Incremental semantics (reference validator.rs:101-185): the batch stages run
+on pending partitions only; the global stages run in the finalize pass — the
+analog of the reference's EOF full revalidation (validator.rs:162-168) that
+produces the canonical error set once all input has arrived.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, fields
+import dataclasses
+from dataclasses import dataclass
 
 from pyspark.sql.types import StringType, StructType
 
@@ -50,53 +36,59 @@ from .errors import (
     UnknownColumnError,
 )
 from .spec import (
-    CaptureRule,
-    ColumnStatsRule,
     CompositeRegexRule,
-    CountRule,
-    DegenerateImageRule,
-    DriftRule,
-    MetricBoundRule,
-    PixelRule,
-    RefIntegrityRule,
     RegexRule,
     Rule,
-    SchemaRule as SchemaDriftRule,
     Spec,
-    _require_type,
     _column_type,
+    _require_type,
 )
 
 
-#: the global stages above, evaluated once by ValidationRun.finalize; every
-#: other stage runs per batch (ValidationRun._validate_batch)
-_GLOBAL_STAGES = ("group", "stats", "metric_bound", "drift")
+#: every stage, in the order a run evaluates them, with its scope: "once"
+#: runs before any batch, "batch" on each batch of pending partitions
+#: (ValidationRun._validate_batch), "global" once in the finalize pass
+#: (ValidationRun.finalize). Each rule names its stage in ``Rule.stage``.
+STAGES: dict[str, str] = {
+    "schema": "once",  # SchemaRule: driver-side metadata compare
+    "row": "batch",  # NotNull/Regex/Literal/Range/Domain/...: ONE fused select
+    "ref": "batch",  # RefIntegrity: broadcast joins, fused into the row pass
+    "count": "batch",  # per-partition Count bounds
+    "capture": "batch",  # CaptureRule: per-partition capture arrays/rows
+    "pixel": "batch",  # PixelRule: Arrow-batched decode of the binary column
+    "degenerate": "batch",  # DegenerateImageRule: rides the pixel decode
+    # Unique/grouped Count/FD/Sequence/Overlap/Volume/...: one finalize
+    # handler per rule class (run._GLOBAL_HANDLERS)
+    "group": "global",
+    "metric_bound": "global",  # MetricBound: all bounds fuse into one agg
+    "stats": "global",  # ColumnStats: one fused agg (or merged partials)
+    "drift": "global",  # DriftRule: the full-table view (or merged partials)
+}
+_BATCH_STAGES = tuple(s for s, scope in STAGES.items() if scope == "batch")
+_GLOBAL_STAGES = tuple(s for s, scope in STAGES.items() if scope == "global")
+#: the only stages that read (decode) the binary column: one decode pass,
+#: so one sample, per column
+_DECODE_STAGES = ("pixel", "degenerate")
 
 
 @dataclass(frozen=True)
 class ConstraintProgram:
-    """Compiled, validated constraint DAG grouped into stages: each
-    ``<stage>_rules`` field holds, in spec order, the rules whose
-    ``Rule.stage`` is ``<stage>``."""
+    """Compiled, validated constraint DAG: ``stages`` maps every stage of
+    ``STAGES``, in that order, to the rules whose ``Rule.stage`` it is, in
+    spec order."""
 
     spec: Spec
-    row_rules: tuple[Rule, ...] = ()
-    group_rules: tuple[Rule, ...] = ()      # one run._GLOBAL_HANDLERS entry each
-    count_rules: tuple[CountRule, ...] = () # per-partition Count
-    ref_rules: tuple[RefIntegrityRule, ...] = ()
-    stats_rules: tuple[ColumnStatsRule, ...] = ()
-    metric_bound_rules: tuple[MetricBoundRule, ...] = ()
-    pixel_rules: tuple[PixelRule, ...] = ()
-    degenerate_rules: tuple[DegenerateImageRule, ...] = ()
-    drift_rules: tuple[DriftRule, ...] = ()
-    capture_rules: tuple[CaptureRule, ...] = ()
-    schema_rules: tuple[SchemaDriftRule, ...] = ()
-    # columns any per-partition stage needs (for pruned scans)
-    scan_columns: tuple[str, ...] = field(default=())
+    stages: dict[str, tuple[Rule, ...]]
+    # columns the rules outside the decode stages read (for pruned scans)
+    scan_columns: tuple[str, ...] = ()
 
-    @property
-    def all_rules(self) -> tuple[Rule, ...]:
-        return self.spec.rules
+
+def scoped_spec(spec: Spec, *scopes: str) -> Spec:
+    """``spec`` narrowed to the rules whose stage has one of ``scopes`` —
+    how a front end splits a spec between its batch and global runs."""
+    return dataclasses.replace(
+        spec, rules=tuple(r for r in spec.rules if STAGES[r.stage] in scopes)
+    )
 
 
 def _has_column(available, path: str) -> bool:
@@ -156,7 +148,7 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
     # a surprise in the metrics.
     decode_by_bytes: dict[str, Rule] = {}
     for r in spec.rules:
-        if r.stage not in ("pixel", "degenerate"):
+        if r.stage not in _DECODE_STAGES:
             continue
         # sampled decode membership hashes the STRINGIFIED key, and the
         # native kernel sees raw arrow values while the Arrow path sees
@@ -182,23 +174,23 @@ def compile_spec(spec: Spec, available_columns=None) -> ConstraintProgram:
                 "one sample"
             )
 
-    stages: dict[str, list[Rule]] = {
-        f.name: [] for f in fields(ConstraintProgram) if f.name.endswith("_rules")
-    }
+    stages: dict[str, list[Rule]] = {name: [] for name in STAGES}
     for r in spec.rules:
-        stages[f"{r.stage}_rules"].append(r)
+        stages[r.stage].append(r)
 
     scan_cols: list[str] = [spec.key_column]
     if spec.partition_column:
         scan_cols.append(spec.partition_column)
-    for name in ("row", "count", "ref", "stats", "metric_bound", "capture"):
-        for r in stages[f"{name}_rules"]:
+    for name, rules in stages.items():
+        if name in _DECODE_STAGES:
+            continue
+        for r in rules:
             for c in r.targets():
                 if c and c not in scan_cols:
                     scan_cols.append(c)
 
     return ConstraintProgram(
         spec=spec,
+        stages={name: tuple(rules) for name, rules in stages.items()},
         scan_columns=tuple(scan_cols),
-        **{name: tuple(rules) for name, rules in stages.items()},
     )

@@ -22,9 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..compile import ConstraintProgram
 from ..errors import KIND_COUNT, KIND_DUPLICATE
-from ..spec import ColumnStatsRule, CountRule, UniqueRule
+from ..spec import ColumnStatsRule, CountRule, UniqueRule, _require_numeric
 
 
 def _key_expr(columns: tuple[str, ...]):
@@ -257,23 +256,6 @@ def _scoped_rows(rule):
 
 _SKETCHABLE = {"tinyint", "smallint", "int", "bigint", "string", "binary"}
 
-_NUMERIC = {"tinyint", "smallint", "int", "bigint", "float", "double"}
-
-
-def _require_numeric(df: DataFrame, rule, what: str) -> None:
-    """Moments (mean/stddev) of a non-numeric column are meaningless — a
-    silent cast("double") would yield all-NULL metrics; raise instead (same
-    posture as _kll_family for quantiles)."""
-    dtype = dict(df.dtypes).get(rule.column, "")
-    if dtype in _NUMERIC or dtype.startswith("decimal"):
-        return
-    from ..errors import SchemaError
-
-    raise SchemaError(
-        f"rule {rule.id!r}: {what} need a numeric column, "
-        f"got {rule.column!r}: {dtype or 'missing'}"
-    )
-
 
 def _sketch_input(df: DataFrame, column: str):
     """hll_sketch_agg accepts int/long/string/binary; other types are cast
@@ -346,7 +328,7 @@ def column_stats_partials(
             # finalize merge derives mean and sample stddev. Naive Σx²
             # cancellation is the documented tradeoff for persistability —
             # fine for profile-grade stats at double precision.
-            _require_numeric(df, r, "moments")
+            _require_numeric(r, df.schema, "moments")
             d = _scope_gate(F.col(r.column).cast("double"), r)
             aggs += [
                 F.sum(d).alias(f"{r.id}__sum"),
@@ -532,7 +514,7 @@ def stats_agg_columns(df: DataFrame, rules: tuple[ColumnStatsRule, ...]) -> list
             # full-scan path uses the numerically stable built-ins (Welford
             # merge inside codegen); the partials path uses exact (Σx, Σx²)
             # for persistability — both fuse into the same single agg
-            _require_numeric(df, r, "moments")
+            _require_numeric(r, df.schema, "moments")
             d = c.cast("double")
             aggs += [
                 F.avg(d).alias(f"{r.id}__mean"),

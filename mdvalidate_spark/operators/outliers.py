@@ -46,7 +46,7 @@ MAD_SIGMA = 1.4826
 
 def _value(rule: OutlierRule):
     """The enveloped value: a raw column or a derived SQL expression
-    (``expr="try_divide(length(bytes), w*h)"`` — analyzed at run init;
+    (``expr="try_divide(length(bytes), w*h)"`` — analyzed at compile;
     try_divide, not ``/``, so ANSI mode NULLs corrupt zero-dim rows out of
     scope instead of killing the job)."""
     return F.expr(rule.expr) if rule.expr else F.col(rule.column)

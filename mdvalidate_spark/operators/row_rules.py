@@ -609,10 +609,10 @@ def row_violations(
     spec = program.spec
     key = F.col(spec.key_column).cast("string")
 
-    if not program.row_rules and not extra_checks:
+    if not program.stages["row"] and not extra_checks:
         return df.sparkSession.createDataFrame([], _violations_ddl())
 
-    checks = [_check(r) for r in program.row_rules] + list(extra_checks)
+    checks = [_check(r) for r in program.stages["row"]] + list(extra_checks)
     # NO pre-filter on size(_v): explode already drops empty arrays, and a
     # where() here is pushed below the Project by PushDownPredicates with
     # the alias substituted — the ENTIRE fused check expression would be
@@ -671,7 +671,7 @@ def with_row_violations(
     codegen'd expression, no shuffle, no Python. This is the primitive a
     training pipeline wants — "give me the clean rows" — without paying a
     second validation scan."""
-    checks = [_check(r) for r in program.row_rules]
+    checks = [_check(r) for r in program.stages["row"]]
     ann = (
         F.array_compact(F.array(*checks))
         if checks

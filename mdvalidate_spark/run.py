@@ -14,12 +14,16 @@ Reference lifecycle mapping (SURVEY.md §3):
   report()                → Report(violations, metrics, manifest)  (errors +
                             matches JSON; validator.rs:86-93)
 
-Per-partition stages (row, referential, per-partition count, pixel) run on
-pending partitions only; their outputs are written idempotently per partition
-under the checkpoint dir (re-validating a partition overwrites its lineage,
-so crash-and-resume never duplicates violations). Global stages run once in
-finalize. This is exactly the reference's streaming model re-expressed for a
-table: partitions are the chunks, the manifest is farthest_reached_pos, and
+The stages and their scopes are declared once (compile.STAGES). Each stage
+has one step here: ``_BATCH_STEPS`` for the batch-scope stages (row, ref,
+count, capture, pixel, degenerate), which run on pending partitions only and
+whose outputs are written idempotently per partition under the checkpoint dir
+(re-validating a partition overwrites its lineage, so crash-and-resume never
+duplicates violations); ``_GLOBAL_STEPS`` for the global-scope stages (group,
+metric_bound, stats, drift), which run once in finalize. A new rule family is
+a ``Rule`` class with ``lint`` and ``stage``, plus — for a new stage — one
+step entry. This is exactly the reference's streaming model re-expressed for
+a table: partitions are the chunks, the manifest is farthest_reached_pos, and
 finalize is the canonical EOF pass.
 """
 
@@ -34,16 +38,22 @@ import time
 import uuid
 import warnings
 from concurrent.futures import ThreadPoolExecutor
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 from functools import reduce
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, BooleanType, NumericType
+from pyspark.sql.types import BinaryType
 from pyspark.storagelevel import StorageLevel
 
-from .compile import ConstraintProgram, compile_spec
+from .compile import (
+    _BATCH_STAGES,
+    _DECODE_STAGES,
+    _GLOBAL_STAGES,
+    ConstraintProgram,
+    compile_spec,
+)
 from .operators import agg_rules, drift as drift_ops, pixel as pixel_ops
 from .operators import sampling, smoke
 from .operators.association import association_rule_results
@@ -80,7 +90,6 @@ from .operators.skew import (
 from .errors import KIND_OVER_VOLUME, KIND_UNDER_VOLUME, SchemaError
 from .plans.manifest import FAILED, FINALIZED, Manifest, VALIDATED
 from .spec import (
-    NUMERIC_BOUND_METRICS,
     AssociationRule,
     BenfordRule,
     ColumnStatsRule,
@@ -89,7 +98,6 @@ from .spec import (
     CountRule,
     DriftRule,
     EmbeddingHealthRule,
-    ExprRule,
     FreshnessRule,
     FunctionalDependencyRule,
     GapRule,
@@ -100,7 +108,6 @@ from .spec import (
     Spec,
     UniqueRule,
     VolumeRule,
-    parse_bound_metric,
 )
 from .spec_io import spec_to_dict
 
@@ -142,30 +149,6 @@ def _union(dfs: list[DataFrame], spark: SparkSession, ddl: str) -> DataFrame:
     return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
-def _analyze_expr(df, rule_id, expr, label, context, required_type=None):
-    """Driver-side analysis (no job) of a spec-supplied SQL expression:
-    raise a typed SchemaError if it fails to resolve against ``df`` or —
-    when ``required_type`` is given — if the result type mismatches.
-    Shared by every expr-bearing rule family (drift, outlier, ExprRule)
-    so a typo'd expression is a SchemaError at run init, not an
-    AnalysisException mid-job. Returns the resolved DataType."""
-    try:
-        analyzed = df.select(F.expr(expr).alias("_x"))
-    except Exception as e:
-        raise SchemaError(
-            f"rule {rule_id!r}: {label} {expr!r} does not resolve against "
-            f"{context}: {e}"
-        ) from e
-    dt = analyzed.schema["_x"].dataType
-    if required_type is not None and not isinstance(dt, required_type):
-        kind = required_type.__name__.replace("Type", "").lower()
-        raise SchemaError(
-            f"rule {rule_id!r}: {label} {expr!r} is not {kind} "
-            f"(got {dt.simpleString()})"
-        )
-    return dt
-
-
 @dataclass(frozen=True)
 class _Partials:
     """One incremental rule family: its mergeable per-partition partials.
@@ -193,7 +176,7 @@ class _Partials:
 
     def units(self, prog: ConstraintProgram) -> tuple:
         rules = tuple(
-            r for r in prog.all_rules
+            r for r in prog.spec.rules
             if isinstance(r, self.rule_type) and r.incremental
         )
         if self.per_rule:
@@ -387,17 +370,17 @@ def _require_dims(prog: ConstraintProgram, dims: dict) -> None:
     """Every dims table a rule names must be provided — a SchemaError before
     any job, not a KeyError mid-run. Shared by ValidationRun and the
     file-incremental validator."""
-    for r in prog.ref_rules:
+    for r in prog.stages["ref"]:
         if r.dim_name not in dims:
             raise SchemaError(
                 f"rule {r.id!r}: dimension table {r.dim_name!r} not provided"
             )
-    for r in prog.group_rules:
+    for r in prog.stages["group"]:
         if getattr(r, "universe", "") and r.universe not in dims:
             raise SchemaError(
                 f"rule {r.id!r}: universe table {r.universe!r} not provided"
             )
-    for r in prog.drift_rules:
+    for r in prog.stages["drift"]:
         if r.reference and r.reference not in dims:
             raise SchemaError(
                 f"rule {r.id!r}: reference table {r.reference!r} not "
@@ -409,6 +392,330 @@ def _require_dims(prog: ConstraintProgram, dims: dict) -> None:
                 "profile — sweep_by needs a live reference table with "
                 "the group column"
             )
+
+
+# ------------------------------------------------------------ stage steps
+
+
+@dataclass
+class _Batch:
+    """One batch of the batch-scope pass, as its stage steps see it."""
+
+    df: DataFrame  # the batch's rows
+    partitions: list[int] | None  # its partition ids; None: the whole table
+    # the decode stages' partition filter (None: every partition): they get
+    # the UNfiltered frame, as the native scan path re-reads files directly
+    # and would silently ignore a .where() on the batch frame
+    part_arg: list[int] | None
+    # bytes column -> the persisted decode frame carrying quality stats:
+    # every decode rule on one column shares one decode pass
+    decoded: dict = field(default_factory=dict)
+
+
+def _fused_refs(prog: ConstraintProgram) -> list:
+    """The broadcast-dim referential rules, whose orphan check the row step
+    fuses into its scan as one more violation struct (left broadcast join).
+    Huge dims and specs with no row rules keep the ref step's anti-join."""
+    if not prog.stages["row"]:
+        return []
+    return [rr for rr in prog.stages["ref"] if rr.broadcast_dim]
+
+
+def _row_step(run: "ValidationRun", b: _Batch):
+    prog = run.program
+    if not prog.stages["row"]:
+        return [], []
+    src, extra = b.df, []
+    for i, rr in enumerate(_fused_refs(prog)):
+        src, chk = ref_fused_check(src, rr, run.dims[rr.dim_name], i)
+        extra.append(chk)
+    return [row_violations(src, prog, run.run_id, extra_checks=extra)], []
+
+
+def _ref_step(run: "ValidationRun", b: _Batch):
+    fused = _fused_refs(run.program)
+    return [
+        ref_violations(
+            b.df, rr, run.dims[rr.dim_name], run.run_id, run.spec.key_column
+        )
+        for rr in run.program.stages["ref"]
+        if rr not in fused
+    ], []
+
+
+def _count_step(run: "ValidationRun", b: _Batch):
+    return [
+        agg_rules.count_violations(
+            b.df, cr, run.run_id, expected_partitions=b.partitions
+        )
+        for cr in run.program.stages["count"]
+    ], []
+
+
+def _capture_step(run: "ValidationRun", b: _Batch):
+    """Array-report rules: ordered per-partition capture arrays; as_rows
+    rules: the spill-safe one-row-per-capture path (the documented
+    100x-safe variant, reachable from a spec). Composite rules with
+    capture=True ride the same pass: one rule validates (row stage) AND
+    captures its matcher segment — routed to either path by
+    capture_as_rows, same as CaptureRule."""
+    caps = run.program.stages["capture"]
+    comps = [
+        r for r in run.program.stages["row"]
+        if isinstance(r, CompositeRegexRule) and r.capture
+    ]
+    arr = [r for r in caps if not r.as_rows] + [
+        r for r in comps if not r.capture_as_rows
+    ]
+    as_rows = [r for r in caps if r.as_rows] + [
+        r for r in comps if r.capture_as_rows
+    ]
+    key = run.spec.key_column
+    mets = []
+    if arr:
+        mets.append(agg_rules.capture_metrics(b.df, arr, run.run_id, key))
+    if as_rows:
+        mets.append(agg_rules.capture_rows_metrics(b.df, as_rows, run.run_id, key))
+    return [], mets
+
+
+def _pixel_step(run: "ValidationRun", b: _Batch):
+    viols, mets = [], []
+    degenerate = run.program.stages["degenerate"]
+    for pr in run.program.stages["pixel"]:
+        # decode-once: a DegenerateImageRule on the same bytes column
+        # rides its quality stats on THIS rule's decode pass instead of
+        # paying a second full decode of the corpus
+        want_quality = pr.bytes_column not in b.decoded and any(
+            dr.bytes_column == pr.bytes_column for dr in degenerate
+        )
+        checks = run._keep(
+            pixel_ops.pixel_check_results(
+                run.df, pr, run.spec.key_column, partitions=b.part_arg,
+                cache=run._pixel_cache, scan_df=run._scan_df,
+                quality=want_quality,
+            )
+        )
+        if want_quality:
+            b.decoded[pr.bytes_column] = checks
+        pv, pm = pixel_ops.pixel_outputs(checks, pr, run.run_id)
+        viols.append(pv)
+        mets.append(pm)
+    return viols, mets
+
+
+def _degenerate_step(run: "ValidationRun", b: _Batch):
+    viols, mets = [], []
+    for dgr in run.program.stages["degenerate"]:
+        checks = b.decoded.get(dgr.bytes_column)
+        if checks is None:
+            # no PixelRule shares this payload column: standalone
+            # decode→stats pass (same batch-filter semantics), memoized
+            # per bytes column so N degenerate rules on one payload
+            # still decode the corpus ONCE (compile guarantees they
+            # share one sample_rate)
+            checks = run._keep(
+                pixel_ops.quality_only_results(
+                    run.df, dgr, run.spec.key_column, partitions=b.part_arg
+                )
+            )
+            b.decoded[dgr.bytes_column] = checks
+        dv, dm = pixel_ops.degenerate_outputs(checks, dgr, run.run_id)
+        viols.append(dv)
+        mets.append(dm)
+    return viols, mets
+
+
+#: each batch-scope stage's step, (run, batch) -> (violation frames, metric
+#: frames); _validate_batch runs them in STAGES order
+_BATCH_STEPS: dict[str, Callable] = {
+    "row": _row_step,
+    "ref": _ref_step,
+    "count": _count_step,
+    "capture": _capture_step,
+    "pixel": _pixel_step,
+    "degenerate": _degenerate_step,
+}
+
+
+def _group_step(run: "ValidationRun", pool):
+    out = [_GLOBAL_HANDLERS[type(r)](run, r) for r in run.program.stages["group"]]
+    return (
+        [v for v, _ in out if v is not None],
+        [m for _, m in out if m is not None],
+        [],
+    )
+
+
+def _metric_bound_step(run: "ValidationRun", pool):
+    rules = run.program.stages["metric_bound"]
+    if not rules:
+        return [], [], []
+    # all bounds fuse into one aggregation pass; the 1-row result feeds
+    # both the violation and the metric frames
+    v, m = agg_rules.metric_bound_results(
+        run.df, rules, run.run_id, keep=run._keep
+    )
+    return [v], [m], []
+
+
+def _drift_one(run: "ValidationRun", dr: DriftRule):
+    # resolve the prefetched edges INSIDE the pooled task so a still-running
+    # edge job never blocks submission of the rest; the job description is
+    # thread-local, so it is set here too
+    run.spark.sparkContext.setJobDescription(f"finalize: drift {dr.id}")
+    return drift_ops.drift_check(run.df, dr, run.run_id, run._drift_edges(dr))
+
+
+def _drift_vs_reference(run: "ValidationRun", ref_name: str, drs: list):
+    """Two-table rules sharing one reference frame FUSE into a single
+    drift_vs_reference call: one stacked histogram scan of each table
+    covers all of them. sweep_by rules are the per-group variant (candidate
+    group g vs reference group g) and each pay their own two
+    groupBy(group, bin) passes."""
+    ref = run.dims[ref_name]
+    whole = [dr for dr in drs if not dr.sweep_by]
+    results = []
+    if whole and drift_ops.is_snapshot(ref):
+        # persisted profile snapshot: frozen bins + reference histogram
+        # ride in the frame itself — one candidate scan, no reference-table
+        # IO (sweeps rejected at open)
+        results.append(
+            drift_ops.drift_vs_snapshot(ref, run.df, whole, run.run_id)
+        )
+    elif whole:
+        edges = {}
+        for dr in whole:
+            e = run._drift_edges(dr)
+            if e is not None:
+                edges[dr.id] = e
+        results.append(
+            drift_ops.drift_vs_reference(ref, run.df, whole, run.run_id, edges)
+        )
+    for dr in drs:
+        if dr.sweep_by:
+            results.append(
+                drift_ops.drift_sweep_vs_reference(
+                    ref, run.df, dr, run.run_id, edges=run._drift_edges(dr)
+                )
+            )
+    return (
+        reduce(lambda a, b: a.unionByName(b), [v for v, _, _ in results]),
+        reduce(lambda a, b: a.unionByName(b), [m for _, m, _ in results]),
+        sum(n for _, _, n in results),
+    )
+
+
+def _fused_global(run: "ValidationRun", full_stats: tuple, drift: list):
+    """ONE aggregation job covers every full-scan global metric: the fused
+    stats aggregates PLUS a frozen-edge histogram per plain drift rule
+    (count_if columns) — the stage that used to pay one full scan per
+    family now pays one total (guide §1.2; plan diff: stats agg + drift
+    groupBy → one Aggregate). Edges resolve here so a still-running
+    prefetch job never blocks submission of the other tasks. Returns (the
+    stats metrics frame or None, the drift rules' counted results)."""
+    run.spark.sparkContext.setJobDescription(
+        "finalize: fused global stats + drift histograms"
+    )
+    aggs = agg_rules.stats_agg_columns(run.df, full_stats) if full_stats else []
+    specs = []
+    for j, dr in enumerate(drift):
+        edges = run._drift_edges(dr)
+        if edges is None:
+            edges = drift_ops.compute_edges(run.df, dr)
+        h, nb = drift_ops.fused_hist_aggs(dr, edges, f"__h{j}")
+        specs.append((dr, nb, len(aggs), len(h)))
+        aggs += h
+    wide = run._keep(run.df.agg(*aggs))
+    row = wide.collect()[0]
+    results = [
+        drift_ops.drift_check_from_counts(
+            run.spark, dr, run.run_id,
+            [row[i] for i in range(off, off + width)], nb,
+        )
+        for dr, nb, off, width in specs
+    ]
+    stats_met = (
+        agg_rules.stats_melt_from_wide(wide, full_stats, run.run_id)
+        if full_stats
+        else None
+    )
+    return stats_met, results
+
+
+def _stats_drift_step(run: "ValidationRun", pool):
+    """The stats and drift stages, one step: full-scan stats and plain
+    drift histograms FUSE into one global aggregation job (_fused_global),
+    so the whole global-metrics stage costs ONE table scan. Incremental
+    stats and sweeps merge their partials — O(#partitions), never a table
+    rescan; without partials the stats rules join the fused aggregation."""
+    prog = run.program
+    mets: list = []
+    full_stats = tuple(r for r in prog.stages["stats"] if not r.incremental)
+    vp = tuple(r for r in full_stats if r.top_values or r.entropy)
+    if vp:  # exact value-distribution metrics: one shared grouped pass
+        mets.append(agg_rules.value_profile_metrics(run.df, vp, run.run_id))
+    for inc_stats in _STATS_PARTIALS.units(prog):
+        inc_met = run._partials_result(_STATS_PARTIALS, inc_stats)
+        if inc_met is None:
+            full_stats += inc_stats
+        else:
+            mets.append(inc_met)
+
+    ref_groups: dict[str, list] = {}
+    plain = []
+    for dr in prog.stages["drift"]:
+        if dr.reference:
+            ref_groups.setdefault(dr.reference, []).append(dr)
+        else:
+            plain.append(dr)
+    # plain non-incremental, non-sweep rules ride the fused global
+    # aggregation; sweeps need their per-group histogram pass
+    fusable = [dr for dr in plain if not dr.incremental and not dr.sweep_by]
+    fused = (
+        pool.submit(_fused_global, run, full_stats, fusable)
+        if (full_stats or fusable)
+        else None
+    )
+    futs = [
+        pool.submit(run._partials_result, _DRIFT_PARTIALS, dr)
+        if dr.incremental
+        else pool.submit(_drift_one, run, dr)
+        for dr in plain
+        if dr not in fusable
+    ] + [
+        pool.submit(_drift_vs_reference, run, name, drs)
+        for name, drs in ref_groups.items()
+    ]
+
+    def counted() -> list:
+        out = [f.result() for f in futs]
+        if fused is not None:
+            out += fused.result()[1]
+        return out
+
+    if fused is not None:
+        mets.append(lambda: fused.result()[0])
+    return [], mets, [counted]
+
+
+#: each global-scope stage's step, (run, pool) -> (lazy violation frames,
+#: metric pieces — frames, or callables giving one or None once a pooled job
+#: resolves —, callables giving counted (violations, metrics, n) results of
+#: pooled jobs). finalize runs each distinct step once, in STAGES order;
+#: stats and plain drift share one fused aggregate, so one step serves both.
+_GLOBAL_STEPS: dict[str, Callable] = {
+    "group": _group_step,
+    "metric_bound": _metric_bound_step,
+    "stats": _stats_drift_step,
+    "drift": _stats_drift_step,
+}
+
+
+def _violation_totals(totals: DataFrame, *by: str) -> DataFrame:
+    """The exact violation counts under a violation cap: the
+    violations_total metric rows summed per ``by`` (column ``n``)."""
+    return totals.groupBy(*by).agg(F.sum("value").cast("long").alias("n"))
 
 
 class ValidationRun:
@@ -448,70 +755,6 @@ class ValidationRun:
         # derived. Full schema (not just names) so rules may target nested
         # struct paths like meta.width (quotes.rs:21-66 step-into analog).
         self.program: ConstraintProgram = compile_spec(spec, self.df.schema)
-        # drift `expr` inputs are opaque to the column lint (DriftRule.targets
-        # can't enumerate them) — analyze each expression against the real
-        # schema NOW, driver-side, so a typo'd expr ("lenght(text)") is a
-        # SchemaError before any job instead of an AnalysisException mid-run
-        for dr in self.program.drift_rules:
-            if dr.expr:
-                _analyze_expr(
-                    self.df, dr.id, dr.expr, "drift expr", "the input schema"
-                )
-        # OutlierRule.expr has the same opacity (a derived numeric metric,
-        # e.g. bytes-per-pixel) — analyze now and require a NUMERIC result,
-        # so a typo'd expr or a string-typed metric fails before any job
-        # instead of yielding an all-NULL envelope that flags nothing
-        for orr in self.program.group_rules:
-            if isinstance(orr, OutlierRule) and orr.expr:
-                _analyze_expr(
-                    self.df, orr.id, orr.expr, "outlier expr",
-                    "the input schema", required_type=NumericType,
-                )
-        # ExprRule expressions are SQL with a declared-column contract:
-        # analyze each against the frame PRUNED to its declared columns so
-        # an undeclared read (or a typo) is a SchemaError at init, and
-        # require a boolean result; actual_expr only needs to resolve
-        for er in self.program.row_rules:
-            if not isinstance(er, ExprRule):
-                continue
-            pruned = self.df.select(*[F.col(c) for c in er.columns])
-            ctx = f"the declared columns {er.columns}"
-            _analyze_expr(
-                pruned, er.id, er.expr, "expr", ctx,
-                required_type=BooleanType,
-            )
-            if er.actual_expr:
-                _analyze_expr(pruned, er.id, er.actual_expr, "actual_expr", ctx)
-        # `when` predicates are SQL exprs with the same opacity —
-        # analyze each against the real schema now (driver-side, no job) and
-        # require a BOOLEAN result, so a typo'd or non-predicate `when` is a
-        # SchemaError before any job. Covers every scoped family: row rules
-        # plus the scoped aggregate/ref rules (unique, count, ref).
-        for rr in (
-            *self.program.row_rules,
-            *self.program.group_rules,
-            *self.program.count_rules,
-            *self.program.ref_rules,
-            *self.program.stats_rules,
-            *self.program.metric_bound_rules,
-        ):
-            w = getattr(rr, "when", "")
-            if w:
-                _analyze_expr(
-                    self.df, rr.id, w, "when predicate", "the input schema",
-                    required_type=BooleanType,
-                )
-        # moments of a non-numeric column would be silent all-NULL metrics
-        # after the cast — SchemaError now, before any job
-        for sr in self.program.stats_rules:
-            if sr.moments:
-                agg_rules._require_numeric(self.df, sr, "moments")
-        # numeric metrics of a non-numeric column would be silent all-NULL
-        # (→ spurious 'no value' violations) after the cast — reject now
-        for mb in self.program.metric_bound_rules:
-            family, _q = parse_bound_metric(mb.metric)
-            if family == "quantile" or mb.metric in NUMERIC_BOUND_METRICS:
-                agg_rules._require_numeric(self.df, mb, mb.metric)
         _require_dims(self.program, self.dims)
         self.manifest = (
             Manifest.load(checkpoint_dir, self.run_id)
@@ -530,8 +773,13 @@ class ValidationRun:
         # defines them; persisted so a resumed run bins identically)
         self._drift_frozen_edges: dict[str, list] = {}
         self._finalized = False
+        self._cached_report: Report | None = None
         self._schema_checked = False
         self._schema_violations = 0
+        # violations finalize's global stages found
+        self._global_violations = 0
+        # a whole-table batch's in-flight count jobs (see validate_pending)
+        self._deferred_counts = None
         self._drift_edge_futs: dict[str, object] = {}
         self._drift_pool = None
         self._drift_prefetch_attempted = False
@@ -638,8 +886,6 @@ class ValidationRun:
             except Exception:  # noqa: BLE001 - session may already be gone
                 pass
         self._persisted.clear()
-
-    # ------------------------------------------------------------ execution
 
     # ------------------------------------------------- fingerprint gate
 
@@ -826,10 +1072,11 @@ class ValidationRun:
         if self._schema_checked:
             return self._schema_violations
         self._schema_checked = True
-        if not self.program.schema_rules:
+        rules = self.program.stages["schema"]
+        if not rules:
             return 0
         sv = _union(
-            [schema_violations(self.df, r, self.run_id) for r in self.program.schema_rules],
+            [schema_violations(self.df, r, self.run_id) for r in rules],
             self.spark,
             _VIOLATIONS_DDL,
         )
@@ -876,7 +1123,7 @@ class ValidationRun:
             and not self.manifest.entries
             and not any(
                 cr.min is not None and not cr.group_by
-                for cr in self.program.count_rules
+                for cr in self.program.stages["count"]
             )
         ):
             defer = (
@@ -885,7 +1132,7 @@ class ValidationRun:
                 and self.spec.max_violations_per_rule is None
                 and not any(
                     isinstance(r, (VolumeRule, OverlapRule))
-                    for r in self.program.group_rules
+                    for r in self.program.stages["group"]
                 )
             )
             n_viol = self._validate_batch(None, defer=defer)
@@ -909,152 +1156,35 @@ class ValidationRun:
     def _validate_batch(
         self, partitions: list[int] | None, defer: bool = False
     ) -> int:
-        """Validate one batch. ``partitions=None`` is the whole-table fast
-        path (see validate_pending): no isin filter, and the partition id
-        set is derived from the per-partition row counts afterwards.
-        ``defer=True`` (whole-table only) skips waiting on the bookkeeping
-        count jobs — finalize joins them via _join_deferred_counts()."""
+        """Validate one batch: each batch-scope stage's step, then one tail.
+        ``partitions=None`` is the whole-table fast path (see
+        validate_pending): no isin filter, and the partition id set is
+        derived from the per-partition row counts afterwards. ``defer=True``
+        (whole-table only) skips waiting on the bookkeeping count jobs —
+        finalize joins them via _join_deferred_counts()."""
         batch_t0 = time.time()
-        prog, spec = self.program, self.spec
-        whole = partitions is None
         batch_df = (
             self.df
-            if whole
+            if partitions is None
             else self.df.where(F.col("partition_id").isin(partitions))
         )
-
+        decodes = any(self.program.stages[s] for s in _DECODE_STAGES)
+        part_arg = (
+            partitions
+            if decodes and partitions is not None
+            and not set(partitions) >= set(self.all_partitions())
+            else None
+        )
+        batch = _Batch(batch_df, partitions, part_arg)
         viols: list[DataFrame] = []
         mets: list[DataFrame] = []
-
-        # NOTE (round 6): riding these row counts on the violations pass via
-        # df.observe was tried and reverted — the CollectMetrics node lands
-        # inside the persisted union's InMemoryRelation, and the first
-        # cache-mediated action latches the one-shot Observation with an
-        # EMPTY row. The standalone count job below is column-pruned to the
-        # key and runs CONCURRENTLY with the violations job (same pool).
-        #
-        # Broadcast-dim referential rules FUSE into the row pass: the orphan
-        # check becomes one more violation struct evaluated in the same scan
-        # (left broadcast join + fused checks — one pass over the fact table
-        # instead of one per family). Huge dims (broadcast_dim=False) and
-        # specs with no row rules keep the standalone anti-join path.
-        fused_refs = (
-            [rr for rr in prog.ref_rules if rr.broadcast_dim]
-            if prog.row_rules
-            else []
-        )
-        if prog.row_rules:
-            src = batch_df
-            extra = []
-            for i, rr in enumerate(fused_refs):
-                src, chk = ref_fused_check(
-                    src, rr, self.dims[rr.dim_name], i
-                )
-                extra.append(chk)
-            viols.append(
-                row_violations(src, prog, self.run_id, extra_checks=extra)
-            )
-        for rr in prog.ref_rules:
-            if rr in fused_refs:
-                continue
-            viols.append(
-                ref_violations(
-                    batch_df, rr, self.dims[rr.dim_name], self.run_id, spec.key_column
-                )
-            )
-        for cr in prog.count_rules:  # per-partition count bounds
-            viols.append(
-                agg_rules.count_violations(
-                    batch_df, cr, self.run_id, expected_partitions=partitions
-                )
-            )
-        comp_caps = [
-            r for r in prog.row_rules
-            if isinstance(r, CompositeRegexRule) and r.capture
-        ]
-        if prog.capture_rules or comp_caps:
-            # array-report rules: ordered per-partition capture arrays;
-            # as_rows rules: the spill-safe one-row-per-capture path (the
-            # documented 100x-safe variant, reachable from a spec).
-            # Composite rules with capture=True ride the same pass: one rule
-            # validates (row stage) AND captures its matcher segment —
-            # routed to either path by capture_as_rows, same as CaptureRule.
-            arr = [r for r in prog.capture_rules if not r.as_rows] + [
-                r for r in comp_caps if not r.capture_as_rows
-            ]
-            as_rows = [r for r in prog.capture_rules if r.as_rows] + [
-                r for r in comp_caps if r.capture_as_rows
-            ]
-            if arr:
-                mets.append(
-                    agg_rules.capture_metrics(
-                        batch_df, arr, self.run_id, spec.key_column
-                    )
-                )
-            if as_rows:
-                mets.append(
-                    agg_rules.capture_rows_metrics(
-                        batch_df, as_rows, self.run_id, spec.key_column
-                    )
-                )
-
-        # the pixel and degenerate stages get the UNfiltered frame + this
-        # partition list (None: every partition): the native scan path
-        # re-reads files directly and must apply the batch filter itself (a
-        # .where() on batch_df would be silently ignored there)
-        part_arg = None
-        if (
-            not whole
-            and (prog.pixel_rules or prog.degenerate_rules)
-            and not set(partitions) >= set(self.all_partitions())
-        ):
-            part_arg = partitions
-        pixel_checks = None
-        quality_checks_by_bytes: dict = {}
-        for pr in prog.pixel_rules:
-            # decode-once: a DegenerateImageRule on the same bytes column
-            # rides its quality stats on THIS rule's decode pass instead of
-            # paying a second full decode of the corpus
-            want_quality = (
-                pr.bytes_column not in quality_checks_by_bytes
-                and any(
-                    dr.bytes_column == pr.bytes_column
-                    for dr in prog.degenerate_rules
-                )
-            )
-            pixel_checks = self._keep(
-                pixel_ops.pixel_check_results(
-                    self.df, pr, spec.key_column, partitions=part_arg,
-                    cache=self._pixel_cache, scan_df=self._scan_df,
-                    quality=want_quality,
-                )
-            )
-            if want_quality:
-                quality_checks_by_bytes[pr.bytes_column] = pixel_checks
-            pv, pm = pixel_ops.pixel_outputs(pixel_checks, pr, self.run_id)
-            viols.append(pv)
-            mets.append(pm)
-
-        for dgr in prog.degenerate_rules:
-            checks = quality_checks_by_bytes.get(dgr.bytes_column)
-            if checks is None:
-                # no PixelRule shares this payload column: standalone
-                # decode→stats pass (same batch-filter semantics), memoized
-                # per bytes column so N degenerate rules on one payload
-                # still decode the corpus ONCE (compile guarantees they
-                # share one sample_rate)
-                checks = self._keep(
-                    pixel_ops.quality_only_results(
-                        self.df, dgr, spec.key_column, partitions=part_arg
-                    )
-                )
-                quality_checks_by_bytes[dgr.bytes_column] = checks
-            dv, dm = pixel_ops.degenerate_outputs(checks, dgr, self.run_id)
-            viols.append(dv)
-            mets.append(dm)
+        for stage in _BATCH_STAGES:
+            v, m = _BATCH_STEPS[stage](self, batch)
+            viols += v
+            mets += m
 
         for fam in _INCREMENTAL_FAMILIES:
-            for unit in fam.units(prog):
+            for unit in fam.units(self.program):
                 key = fam.key(unit)
                 part = self._keep(fam.partial(self, batch_df, unit))
                 self._partials.setdefault(key, []).append(part)
@@ -1066,58 +1196,40 @@ class ValidationRun:
                         "partition_id"
                     ).parquet(self._sink(key))
 
-        cap = spec.max_violations_per_rule
-        full_viol = _union(viols, self.spark, _VIOLATIONS_DDL)
-        if cap is not None:
-            # bounded sink: exact totals survive as metric rows computed by
-            # an aggregation-only pass (map-side count partials — no
-            # violation row materialized anywhere); the persisted/reported
-            # frame is the deterministic two-phase sample. Costs a second
-            # evaluation of the rule expressions (one per pass) — at scale
-            # that trade replaces materializing up to one violation row per
-            # input row.
-            viol_totals = self._keep(
-                sampling.violation_count_metrics(full_viol, self.run_id)
-            )
-            mets.append(viol_totals)
-            batch_viol = self._keep(sampling.cap_violations(full_viol, cap))
-        else:
-            batch_viol = self._keep(full_viol)
+        batch_viol, viol_totals = self._bounded_sink(viols, mets)
         # metric frames are small aggregates — persist so report-time reads
         # never re-run the capture groupBys / pixel derivations
         batch_met = self._keep(_union(mets, self.spark, _METRICS_DDL))
 
         # per-partition bookkeeping in ONE aggregation each; the two collects
         # are independent → submitted concurrently (row-count scan overlaps
-        # the tail of the violation job instead of following it)
-        def _collect_counts(frame: DataFrame, label: str) -> dict:
+        # the tail of the violation job instead of following it).
+        # NOTE (round 6): riding the row counts on the violations pass via
+        # df.observe was tried and reverted — the CollectMetrics node lands
+        # inside the persisted union's InMemoryRelation, and the first
+        # cache-mediated action latches the one-shot Observation with an
+        # EMPTY row. The count job is column-pruned to the key instead.
+        def _collect(label: str, counts: DataFrame) -> dict:
             # job description is thread-local — label inside the pooled task
             self.spark.sparkContext.setJobDescription(label)
-            return {
-                r["partition_id"]: r["n"]
-                for r in frame.groupBy("partition_id")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            }
+            return {r["partition_id"]: r["n"] for r in counts.collect()}
 
-        def _collect_totals() -> dict:
-            # manifest counts must stay EXACT under a row cap — sum the
-            # violations_total metric rows instead of counting sampled rows
-            self.spark.sparkContext.setJobDescription("batch: violation totals")
-            return {
-                r["partition_id"]: r["n"]
-                for r in viol_totals.groupBy("partition_id")
-                .agg(F.sum("value").cast("long").alias("n"))
-                .collect()
-            }
+        def _count(frame: DataFrame) -> DataFrame:
+            return frame.groupBy("partition_id").agg(F.count(F.lit(1)).alias("n"))
 
         pool = ThreadPoolExecutor(max_workers=2)
-        viol_fut = pool.submit(
-            _collect_totals if cap is not None else
-            lambda: _collect_counts(batch_viol, "batch: violations")
+        viol_fut = (
+            # manifest counts must stay EXACT under a row cap — sum the
+            # violations_total metric rows instead of counting sampled rows
+            pool.submit(
+                _collect, "batch: violation totals",
+                _violation_totals(viol_totals, "partition_id"),
+            )
+            if viol_totals is not None
+            else pool.submit(_collect, "batch: violations", _count(batch_viol))
         )
         rows_fut = pool.submit(
-            _collect_counts, batch_df, "batch: per-partition row counts"
+            _collect, "batch: per-partition row counts", _count(batch_df)
         )
 
         self._persist_batch(batch_viol, batch_met)
@@ -1135,6 +1247,23 @@ class ValidationRun:
         pool.shutdown(wait=False)
         self._mark_batch(partitions, viol_counts, row_counts, batch_t0)
         return sum(viol_counts.values())
+
+    def _bounded_sink(
+        self, viols: list[DataFrame], mets: list
+    ) -> tuple[DataFrame, DataFrame | None]:
+        """(persisted violations, exact totals or None) of one pass. Under
+        ``max_violations_per_rule`` the frame is the deterministic two-phase
+        sample and the exact totals join ``mets`` as violations_total rows
+        of an aggregation-only pass — a second evaluation of the rule
+        expressions instead of materializing up to one violation row per
+        input row."""
+        full = _union(viols, self.spark, _VIOLATIONS_DDL)
+        cap = self.spec.max_violations_per_rule
+        if cap is None:
+            return self._keep(full), None
+        totals = self._keep(sampling.violation_count_metrics(full, self.run_id))
+        mets.append(totals)
+        return self._keep(sampling.cap_violations(full, cap)), totals
 
     def _mark_batch(
         self,
@@ -1172,11 +1301,10 @@ class ValidationRun:
         """Resolve a deferred whole-table batch's count futures (no-op when
         nothing was deferred). Called by finalize before anything reads the
         manifest or the discovered id set."""
-        deferred = getattr(self, "_deferred_counts", None)
-        if deferred is None:
+        if self._deferred_counts is None:
             return
+        pool, viol_fut, rows_fut, batch_t0 = self._deferred_counts
         self._deferred_counts = None
-        pool, viol_fut, rows_fut, batch_t0 = deferred
         viol_counts = viol_fut.result()
         row_counts = rows_fut.result()
         pool.shutdown(wait=False)
@@ -1241,7 +1369,7 @@ class ValidationRun:
         self._drift_prefetch_attempted = True
         to_submit = [
             dr
-            for dr in self.program.drift_rules
+            for dr in self.program.stages["drift"]
             if not dr.incremental
             and not (
                 dr.reference and drift_ops.is_snapshot(self.dims[dr.reference])
@@ -1288,72 +1416,18 @@ class ValidationRun:
         return fut.result()
 
     def finalize(self) -> Report:
-        """Global rules over the full table — the canonical EOF pass.
-
-        Drift rules need driver-interactive jobs (approxQuantile, histogram
-        collect), so they run on a thread pool CONCURRENTLY with the
-        unique/count evaluation: the fixed latency of the global pass is the
-        max of the two, not the sum. (Spark job submission from multiple
-        driver threads is a supported, standard pattern.)"""
+        """Global rules over the full table — the canonical EOF pass: the
+        schema check, every global-scope stage's step (_GLOBAL_STEPS), then
+        one tail that counts their violations and caches their metrics.
+        Every job runs on one thread pool, so driver-interactive drift jobs
+        run CONCURRENTLY with the unique/count evaluation: the fixed latency
+        of the global pass is the max of the two, not the sum."""
         # idempotent: a caller may reach finalize() without validate_pending
         # (resume with nothing pending) — schema drift must still be checked
         if self._check_schema() > 0 and self.spec.fast_fail:
             self._cancel_drift_prefetch()
             return self.report()
 
-        prog = self.program
-        viols: list[DataFrame] = []
-        mets: list[DataFrame] = []
-
-        for gr in prog.group_rules:
-            g_viol, g_met = _GLOBAL_HANDLERS[type(gr)](self, gr)
-            if g_viol is not None:
-                viols.append(g_viol)
-            if g_met is not None:
-                mets.append(g_met)
-
-        if prog.metric_bound_rules:
-            # all bounds fuse into one aggregation pass; the 1-row result
-            # feeds both the violation and the metric frames
-            mb_viol, mb_met = agg_rules.metric_bound_results(
-                self.df, prog.metric_bound_rules, self.run_id, keep=self._keep
-            )
-            viols.append(mb_viol)
-            mets.append(mb_met)
-
-        # full-scan stats and plain drift histograms FUSE into one global
-        # aggregation job (see _run_fused_global below) — the stats rules
-        # are pulled out of `mets` here and merged back after the fused job
-        # resolves, so the whole global-metrics stage costs ONE table scan
-        full_stats = tuple(r for r in prog.stats_rules if not r.incremental)
-        vp = tuple(r for r in full_stats if r.top_values or r.entropy)
-        if vp:  # exact value-distribution metrics: one shared grouped pass
-            mets.append(agg_rules.value_profile_metrics(self.df, vp, self.run_id))
-        for inc_stats in _STATS_PARTIALS.units(prog):
-            # merge the persisted per-partition partials — O(#partitions),
-            # never a table rescan (the incremental EOF pass); without
-            # partials the rules join the fused global aggregation instead
-            inc_met = self._partials_result(_STATS_PARTIALS, inc_stats)
-            if inc_met is None:
-                full_stats += inc_stats
-            else:
-                mets.append(inc_met)
-
-        drift_futs = []
-        uc_viol = None
-        pre_met = None
-        n_uc = 0
-        cap = self.spec.max_violations_per_rule
-        full_uc = _union(viols, self.spark, _VIOLATIONS_DDL) if viols else None
-        uc_totals = None
-        if viols and cap is not None:
-            # global rules (uniqueness on a duplicate-heavy key, grouped
-            # counts) can emit violation rows proportional to the input —
-            # same bounded-sink treatment as the batch stage
-            uc_totals = self._keep(
-                sampling.violation_count_metrics(full_uc, self.run_id)
-            )
-            mets.append(uc_totals)
         # consolidate the accumulated per-batch pieces into ONE compact
         # cached frame each, materialized CONCURRENTLY with the global jobs:
         # the union of dozens of 64-partition batch caches is expensive to
@@ -1375,143 +1449,29 @@ class ValidationRun:
                 _union(pieces, self.spark, ddl).coalesce(width)
             )
 
-        batch_viol_c = _consolidate(old_viols, _VIOLATIONS_DDL)
-        batch_met_c = _consolidate(old_mets, _METRICS_DDL)
         def _desc(label, fn, *a):
             # job description is thread-local — label inside the pooled task
             self.spark.sparkContext.setJobDescription(label)
             return fn(*a)
 
-        with ThreadPoolExecutor(max_workers=6 + len(prog.drift_rules)) as pool:
-            def _run_drift(dr):
-                # resolve the prefetched edges INSIDE the pooled task so a
-                # still-running edge job never blocks submission of the rest
-                self.spark.sparkContext.setJobDescription(
-                    f"finalize: drift {dr.id}"
-                )
-                return drift_ops.drift_check(
-                    self.df, dr, self.run_id, self._drift_edges(dr)
-                )
-
-            def _run_drift_ref(ref_name, drs):
-                # two-table rules sharing one reference frame FUSE into a
-                # single drift_vs_reference call: one stacked histogram scan
-                # of each table covers all of them. sweep_by rules are the
-                # per-group variant (candidate group g vs reference group g)
-                # and each pay their own two groupBy(group, bin) passes.
-                whole = [dr for dr in drs if not dr.sweep_by]
-                sweeps = [dr for dr in drs if dr.sweep_by]
-                viols, mets, n = [], [], 0
-                if whole and drift_ops.is_snapshot(self.dims[ref_name]):
-                    # persisted profile snapshot: frozen bins + reference
-                    # histogram ride in the frame itself — one candidate
-                    # scan, no reference-table IO (sweeps rejected at open)
-                    v, m, k = drift_ops.drift_vs_snapshot(
-                        self.dims[ref_name], self.df, list(whole), self.run_id
-                    )
-                    viols.append(v)
-                    mets.append(m)
-                    n += k
-                elif whole:
-                    em = {}
-                    for dr in whole:
-                        e = self._drift_edges(dr)
-                        if e is not None:
-                            em[dr.id] = e
-                    v, m, k = drift_ops.drift_vs_reference(
-                        self.dims[ref_name], self.df, list(whole),
-                        self.run_id, em,
-                    )
-                    viols.append(v)
-                    mets.append(m)
-                    n += k
-                for dr in sweeps:
-                    v, m, k = drift_ops.drift_sweep_vs_reference(
-                        self.dims[ref_name], self.df, dr, self.run_id,
-                        edges=self._drift_edges(dr),
-                    )
-                    viols.append(v)
-                    mets.append(m)
-                    n += k
-                return (
-                    reduce(lambda a, b: a.unionByName(b), viols),
-                    reduce(lambda a, b: a.unionByName(b), mets),
-                    n,
-                )
-
-            def _run_fused_global():
-                # ONE aggregation job covers every full-scan global metric:
-                # the fused stats aggregates PLUS a frozen-edge histogram
-                # per plain drift rule (count_if columns) — the stage that
-                # used to pay one full scan per family now pays one total
-                # (guide §1.2; plan diff: stats agg + drift groupBy → one
-                # Aggregate). Edges resolve here so a still-running
-                # prefetch job never blocks submission of the other tasks.
-                self.spark.sparkContext.setJobDescription(
-                    "finalize: fused global stats + drift histograms"
-                )
-                aggs = (
-                    agg_rules.stats_agg_columns(self.df, full_stats)
-                    if full_stats
-                    else []
-                )
-                specs = []
-                for j, dr in enumerate(fusable_drift):
-                    edges = self._drift_edges(dr)
-                    if edges is None:
-                        edges = drift_ops.compute_edges(self.df, dr)
-                    h, nb = drift_ops.fused_hist_aggs(dr, edges, f"__h{j}")
-                    specs.append((dr, nb, len(aggs), len(h)))
-                    aggs += h
-                wide = self._keep(self.df.agg(*aggs))
-                row = wide.collect()[0]
-                results = [
-                    drift_ops.drift_check_from_counts(
-                        self.spark, dr, self.run_id,
-                        [row[i] for i in range(off, off + width)], nb,
-                    )
-                    for dr, nb, off, width in specs
-                ]
-                stats_met = (
-                    agg_rules.stats_melt_from_wide(
-                        wide, full_stats, self.run_id
-                    )
-                    if full_stats
-                    else None
-                )
-                return stats_met, results
-
-            ref_groups: dict[str, list] = {}
-            plain_drift = []
-            for dr in prog.drift_rules:
-                if dr.reference:
-                    ref_groups.setdefault(dr.reference, []).append(dr)
-                else:
-                    plain_drift.append(dr)
-            # plain non-incremental, non-sweep rules ride the fused global
-            # aggregation; sweeps need their per-group histogram pass and
-            # incremental rules merge persisted partials
-            fusable_drift = [
-                dr for dr in plain_drift
-                if not dr.incremental and not dr.sweep_by
-            ]
-            fused_fut = (
-                pool.submit(_run_fused_global)
-                if (full_stats or fusable_drift)
-                else None
+        viols: list[DataFrame] = []
+        mets: list = []
+        counted: list[Callable] = []
+        n_pool = 6 + len(self.program.stages["drift"])
+        with ThreadPoolExecutor(max_workers=n_pool) as pool:
+            for step in dict.fromkeys(_GLOBAL_STEPS[s] for s in _GLOBAL_STAGES):
+                v, m, c = step(self, pool)
+                viols += v
+                mets += m
+                counted += c
+            # global rules (uniqueness on a duplicate-heavy key, grouped
+            # counts) can emit violation rows proportional to the input —
+            # same bounded-sink treatment as the batch stage
+            uc_viol, uc_totals = (
+                self._bounded_sink(viols, mets) if viols else (None, None)
             )
-            drift_futs = [
-                # incremental sweeps merge their histogram partials —
-                # O(groups × bins), no table rescan
-                pool.submit(self._partials_result, _DRIFT_PARTIALS, dr)
-                if dr.incremental
-                else pool.submit(_run_drift, dr)
-                for dr in plain_drift
-                if dr not in fusable_drift
-            ] + [
-                pool.submit(_run_drift_ref, name, drs)
-                for name, drs in ref_groups.items()
-            ]
+            batch_viol_c = _consolidate(old_viols, _VIOLATIONS_DDL)
+            batch_met_c = _consolidate(old_mets, _METRICS_DDL)
             bv_fut = pool.submit(
                 _desc, "finalize: consolidate batch violations",
                 batch_viol_c.count,
@@ -1524,14 +1484,12 @@ class ValidationRun:
             # the metrics union (the one real job among the metric frames)
             # materializes HERE, overlapped with the unique/count and drift
             # jobs — report-time metrics reads become cache hits instead of
-            # a trailing serial job. The fused job's stats frame joins the
-            # union as soon as it resolves (its melt is a cached 1-row read).
+            # a trailing serial job. The pieces still behind a job (the
+            # fused stats melt) join the union last, as they resolve.
             def _build_met():
-                pieces = list(mets)
-                if fused_fut is not None:
-                    stats_met, _ = fused_fut.result()
-                    if stats_met is not None:
-                        pieces.append(stats_met)
+                pieces = [p for p in mets if isinstance(p, DataFrame)]
+                pieces += [p() for p in mets if not isinstance(p, DataFrame)]
+                pieces = [p for p in pieces if p is not None]
                 if not pieces:
                     return None
                 pm = self._keep(_union(pieces, self.spark, _METRICS_DDL))
@@ -1541,42 +1499,27 @@ class ValidationRun:
                 pm.count()
                 return pm
 
-            met_fut = (
-                pool.submit(_build_met)
-                if (mets or fused_fut is not None)
-                else None
-            )
+            met_fut = pool.submit(_build_met) if mets else None
             # a deferred whole-table batch's count jobs have been in flight
             # since the batch stage — join them now that every global job is
             # submitted, so they resolve WHILE the pool works instead of
             # before it starts (guide §2.6)
             self._join_deferred_counts()
-            if viols:
-                if cap is not None:
-                    uc_viol = self._keep(sampling.cap_violations(full_uc, cap))
-                    pool.submit(
-                        _desc, "finalize: capped global violations",
-                        uc_viol.count,
-                    )  # materialize the sample
-                    n_uc = int(
-                        sum(
-                            r["n"] or 0
-                            for r in uc_totals.groupBy()
-                            .agg(F.sum("value").cast("long").alias("n"))
-                            .collect()
-                        )
-                    )
-                else:
-                    uc_viol = self._keep(full_uc)
-                    n_uc = pool.submit(
-                        _desc, "finalize: global violations (unique/count)",
-                        uc_viol.count,
-                    ).result()
-            drift_results = [f.result() for f in drift_futs]
-            if fused_fut is not None:
-                drift_results += fused_fut.result()[1]
-            if met_fut is not None:
-                pre_met = met_fut.result()
+            n_global = 0
+            if uc_totals is not None:
+                pool.submit(
+                    _desc, "finalize: capped global violations", uc_viol.count
+                )  # materialize the sample
+                n_global = int(
+                    sum(r["n"] or 0 for r in _violation_totals(uc_totals).collect())
+                )
+            elif uc_viol is not None:
+                n_global = pool.submit(
+                    _desc, "finalize: global violations (unique/count)",
+                    uc_viol.count,
+                ).result()
+            results = [t for c in counted for t in c()]
+            pre_met = met_fut.result() if met_fut is not None else None
             bv_fut.result()
             bm_fut.result()
         if self._drift_pool is not None:
@@ -1592,15 +1535,13 @@ class ValidationRun:
 
         viols = [uc_viol] if uc_viol is not None else []
         mets = [pre_met] if pre_met is not None else []
-        n_drift = 0
-        for dv, dm, n_dv in drift_results:
-            viols.append(dv)
-            n_drift += n_dv  # counted driver-side when the rows were built
-            mets.append(dm)
+        for v, m, n in results:
+            viols.append(v)
+            mets.append(m)
+            n_global += n  # counted driver-side when the rows were built
 
         g_viol = self._keep(_union(viols, self.spark, _VIOLATIONS_DDL))
         g_met = _union(mets, self.spark, _METRICS_DDL)
-        n_global = n_uc + n_drift
 
         self._persist_global(g_viol, g_met)
         self._violation_dfs = [batch_viol_c, g_viol]
@@ -1645,7 +1586,7 @@ class ValidationRun:
     # -------------------------------------------------------------- report
 
     def report(self) -> Report:
-        if getattr(self, "_cached_report", None) is not None:
+        if self._cached_report is not None:
             return self._cached_report
         # post-finalize this is a 2-frame union (consolidated batch cache +
         # small global cache) — already compact and fully materialized, so
@@ -1665,7 +1606,7 @@ class ValidationRun:
             # hard semantics: the cheap int-counter path, zero extra jobs
             errored = (
                 self.manifest.total_violations > 0
-                or bool(getattr(self, "_global_violations", 0))
+                or self._global_violations > 0
                 or self._schema_violations > 0
             )
         else:

@@ -32,6 +32,7 @@ Rule families and their reference ancestors:
 
 from __future__ import annotations
 
+import functools
 import re
 from dataclasses import dataclass, field
 from datetime import datetime
@@ -40,9 +41,11 @@ from typing import ClassVar, Optional, Sequence
 from py4j.protocol import Py4JJavaError
 from pyspark.errors import IllegalArgumentException
 from pyspark.sql import SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import (
     ArrayType,
     BinaryType,
+    BooleanType,
     DateType,
     NumericType,
     StringType,
@@ -100,6 +103,62 @@ def _compile_regex(rule_id: str, pattern: str):
         except (IllegalArgumentException, Py4JJavaError) as e:
             raise MalformedRegexError(rule_id, pattern, str(e)) from e
     return compiled
+
+
+@functools.lru_cache(maxsize=1)
+def _empty_frame(spark: SparkSession, schema: StructType):
+    """The empty frame a spec's expressions are analyzed against: one per
+    schema, not one driver round trip per expression."""
+    return spark.createDataFrame([], schema)
+
+
+def _analyze_expr(rule, schema, expr: str, label: str, required_type=None,
+                  columns: tuple | None = None):
+    """Driver-side analysis (no job) of a rule's SQL expression against an
+    empty frame of ``schema``, pruned to ``columns`` when given: SchemaError
+    if it does not resolve or is not ``required_type``. Only with a
+    StructType, an active session (as ``_compile_regex``) and every target
+    resolved — else compile_spec raises UnknownColumnError."""
+    spark = SparkSession.getActiveSession()
+    if (
+        spark is None
+        or not isinstance(schema, StructType)
+        or any(c and _column_type(schema, c) is None for c in rule.targets())
+    ):
+        return
+    df = _empty_frame(spark, schema)
+    context = "the input schema"
+    if columns is not None:
+        df = df.select(*[F.col(c) for c in columns])
+        context = f"the declared columns {columns}"
+    try:
+        analyzed = df.select(F.expr(expr).alias("_x"))
+    except Exception as e:
+        raise SchemaError(
+            f"rule {rule.id!r}: {label} {expr!r} does not resolve against "
+            f"{context}: {e}"
+        ) from e
+    dt = analyzed.schema["_x"].dataType
+    if required_type is not None and not isinstance(dt, required_type):
+        kind = required_type.__name__.replace("Type", "").lower()
+        raise SchemaError(
+            f"rule {rule.id!r}: {label} {expr!r} is not {kind} "
+            f"(got {dt.simpleString()})"
+        )
+
+
+def _require_numeric(rule, schema, what: str) -> None:
+    """``what`` (moments, a numeric bound) of a non-numeric column would be
+    silent all-NULL metrics after the cast: raise instead. Reads the
+    top-level column; an unresolved one is compile_spec's to report."""
+    if _column_type(schema, rule.column) is None:
+        return
+    t = next((f.dataType for f in schema.fields if f.name == rule.column), None)
+    if not isinstance(t, NumericType):
+        raise SchemaError(
+            f"rule {rule.id!r}: {what} need a numeric column, got "
+            f"{rule.column!r}: {t.simpleString() if t is not None else 'missing'}"
+        )
 
 
 #: end of input in Java and Python ``re`` alike — ``$`` also matches before
@@ -162,15 +221,18 @@ class Rule:
         list of column names, or a StructType (type-aware checks run only
         with a StructType). Subclasses extend this with their own checks;
         checks spanning several rules live in compile_spec."""
-        if self.max_violation_rate is None:
-            return
-        if not (0.0 <= self.max_violation_rate < 1.0):
+        rate = self.max_violation_rate
+        if rate is not None and not (0.0 <= rate < 1.0):
             raise SchemaError(
                 f"rule {self.id!r}: max_violation_rate must be in [0, 1), "
-                f"got {self.max_violation_rate}"
+                f"got {rate}"
             )
-        if self.rate_refusal:
+        if rate is not None and self.rate_refusal:
             raise SchemaError(f"rule {self.id!r}: {self.rate_refusal}")
+        if getattr(self, "when", ""):  # SQL: must resolve, and be BOOLEAN
+            _analyze_expr(
+                self, schema, self.when, "when predicate", BooleanType
+            )
 
 
 # ---------------------------------------------------------------- row rules
@@ -663,11 +725,11 @@ class ExprRule(Rule):
     ``columns`` must declare every column the expression reads: the compile
     lint checks them against the schema and the scan stays pruned to exactly
     the declared set; an expression referencing an undeclared column is a
-    SchemaError at run init (the analyzer sees the pruned frame), never a
-    mid-job AnalysisException. ``actual_expr`` (optional SQL, e.g.
-    ``"format_string('%.3f', l_discount + l_tax)"``) renders the violation's
-    ``actual`` value; default is NULL (the expression text in ``expected``
-    already names the failed invariant)."""
+    SchemaError at compile against a typed schema (the analyzer sees the
+    pruned frame), never a mid-job AnalysisException. ``actual_expr``
+    (optional SQL, e.g. ``"format_string('%.3f', l_discount + l_tax)"``)
+    renders the violation's ``actual`` value; default is NULL (the
+    expression text in ``expected`` already names the failed invariant)."""
 
     expr: str = ""
     columns: tuple[str, ...] = ()
@@ -687,6 +749,16 @@ class ExprRule(Rule):
             raise SchemaError(
                 f"rule {self.id!r}: expr rule must declare the columns its "
                 "expression reads (scan pruning + schema lint)"
+            )
+        # against the declared columns only: an undeclared read fails too
+        _analyze_expr(
+            self, schema, self.expr, "expr", required_type=BooleanType,
+            columns=self.columns,
+        )
+        if self.actual_expr:
+            _analyze_expr(
+                self, schema, self.actual_expr, "actual_expr",
+                columns=self.columns,
             )
 
     def targets(self):
@@ -1102,7 +1174,7 @@ class OutlierRule(Rule):
     very corrupt rows (w·h = 0) a validator must survive, while try_divide
     yields NULL — and NULL metric rows are out of scope here by the NULL
     contract (RangeRule/NotNullRule own zero dims and missing values).
-    Analyzed against the real schema at run init (the DriftRule.expr
+    Analyzed against the typed schema at compile (the DriftRule.expr
     discipline) and must resolve numeric.
 
     Violations are per ROW (kind=outlier), scoped by ``when`` like every row
@@ -1136,13 +1208,16 @@ class OutlierRule(Rule):
             )
         # quantiles of strings are meaningless; a silent cast("double")
         # would yield an all-NULL envelope that flags nothing
-        # (expr-typed rules are analyzed at run init instead — the
-        # DriftRule.expr discipline)
         if self.column:
             _require_type(
                 self, schema, self.column, NumericType,
                 "column {column} must be numeric for an outlier rule, "
                 "got {got}",
+            )
+        else:
+            _analyze_expr(
+                self, schema, self.expr, "outlier expr",
+                required_type=NumericType,
             )
 
     def __post_init__(self):
@@ -1150,7 +1225,7 @@ class OutlierRule(Rule):
             object.__setattr__(self, "k", 1.5 if self.method == "iqr" else 3.5)
 
     def targets(self):
-        # expr inputs are opaque here (run init analyzes them, the
+        # expr inputs are opaque here (lint analyzes them, the
         # DriftRule.expr pattern); empty column is skipped by the lint
         return (self.column, *self.group_by)
 
@@ -1752,7 +1827,7 @@ class ColumnStatsRule(Rule):
     # O(k·log n) bytes per partition sketch
     kll_k: int = 200
     # moments=True adds mean and (sample) stddev metrics; numeric columns
-    # only (checked at run init). Mergeable on the incremental-partials
+    # only (checked at compile). Mergeable on the incremental-partials
     # path as exact (count, sum, sum-of-squares) partials — merging
     # partials reproduces the full-scan numbers bit-for-bit modulo
     # float summation order.
@@ -1811,6 +1886,8 @@ class ColumnStatsRule(Rule):
             )
         if self.top_values < 0:
             raise SchemaError(f"rule {self.id!r}: top_values must be >= 0")
+        if self.moments:
+            _require_numeric(self, schema, "moments")
 
     def targets(self):
         return (self.column,)
@@ -1820,8 +1897,8 @@ class ColumnStatsRule(Rule):
 BOUNDABLE_METRICS = (
     "count", "null_rate", "distinct", "mean", "stddev", "min", "max",
 )
-#: metrics that only make sense on a numeric column (checked at run init
-#: against the real schema; count/null_rate/distinct work on any type)
+#: metrics that only make sense on a numeric column (checked at compile
+#: against a typed schema; count/null_rate/distinct work on any type)
 NUMERIC_BOUND_METRICS = ("mean", "stddev", "min", "max")
 
 
@@ -1899,7 +1976,7 @@ class MetricBoundRule(Rule):
     def lint(self, schema) -> None:
         super().lint(schema)
         try:
-            parse_bound_metric(self.metric)
+            family, _q = parse_bound_metric(self.metric)
         except ValueError as e:
             raise SchemaError(f"rule {self.id!r}: {e}") from e
         if self.min is None and self.max is None:
@@ -1911,6 +1988,8 @@ class MetricBoundRule(Rule):
             )
         if self.min is not None and self.max is not None and self.min > self.max:
             raise InvalidBoundsError(self.id, self.min, self.max)
+        if family == "quantile" or self.metric in NUMERIC_BOUND_METRICS:
+            _require_numeric(self, schema, self.metric)
 
     def targets(self):
         return (self.column, self.group_by) if self.group_by else (self.column,)
@@ -2244,6 +2323,8 @@ class DriftRule(Rule):
                 f"rule {self.id!r}: incremental drift is the per-group sweep "
                 "over mergeable histogram partials — set sweep_by"
             )
+        if self.expr:  # opaque to the column lint: analyze it
+            _analyze_expr(self, schema, self.expr, "drift expr")
 
     def targets(self):
         # with expr the drifting quantity is a SQL expression — its inputs

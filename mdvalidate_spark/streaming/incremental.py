@@ -8,13 +8,14 @@ files landing in a table directory (the Iceberg-snapshot pattern). Each
 ``poll()``:
   1. lists current files and diffs them against the checkpoint manifest
      (the read_input tail computation),
-  2. runs ``ValidationRun``'s batch stage — the one per-partition pass both
-     validators share (row, referential, count, capture, pixel,
-     degenerate, schema) — on ONLY the new files,
+  2. lints the whole spec against the new files' schema, then runs
+     ``ValidationRun``'s batch stage — the one per-partition pass both
+     validators share (the once- and batch-scope stages of
+     ``compile.STAGES``) — on ONLY the new files,
   3. keeps that run, so finalize() reports its violations and metrics.
-``finalize()`` is got_eof: the global stages (group, stats, metric_bound,
-drift) run once over the full table through ``ValidationRun.finalize`` — the
-one EOF revalidation pass (validator.rs:162-168) both validators share.
+``finalize()`` is got_eof: the global-scope stages run once over the full
+table through ``ValidationRun.finalize`` — the one EOF revalidation pass
+(validator.rs:162-168) both validators share.
 ``fast_fail`` aborts polling once any batch goes red (cmd.rs:119-121).
 Only volume rules are refused: they judge a partition manifest file mode
 does not keep.
@@ -22,15 +23,15 @@ does not keep.
 
 from __future__ import annotations
 
-import dataclasses
 import json
 import os
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..compile import _GLOBAL_STAGES, compile_spec
+from ..compile import compile_spec, scoped_spec
 from ..errors import SchemaError
+from ..operators.row_rules import with_partition_id
 from ..run import (
     _METRICS_DDL,
     _VIOLATIONS_DDL,
@@ -133,19 +134,19 @@ class FileIncrementalValidator:
         new = self.pending_files()
         if not new:
             return 0
-        rules = tuple(r for r in self.spec.rules if r.stage not in _GLOBAL_STAGES)
+        frame = self.spark.read.parquet(*new)
+        # the whole spec against the table's schema, so a global rule's
+        # typo'd expression fails the first poll, not the EOF pass
+        compile_spec(self.spec, with_partition_id(frame, self.spec).schema)
+        batch_spec = scoped_spec(self.spec, "once", "batch")
         n = 0
-        if rules:
+        if batch_spec.rules:
             # the whole-table batch over the new files: per-partition counts
             # see only the partitions these files hold. Schema drift is
             # checked per poll too — a late file with a drifted schema is
             # what that rule family exists for.
             run = ValidationRun(
-                self.spark,
-                dataclasses.replace(self.spec, rules=rules),
-                self.spark.read.parquet(*new),
-                dims=self.dims,
-                run_id=self.run_id,
+                self.spark, batch_spec, frame, dims=self.dims, run_id=self.run_id
             )
             self._runs.append(run)
             n = run._check_schema() + run._validate_batch(None)
@@ -165,13 +166,11 @@ class FileIncrementalValidator:
         all_files = self._list_files()
         viols = [f for run in self._runs for f in run._violation_dfs]
         mets = [f for run in self._runs for f in run._metric_dfs]
-        global_rules = tuple(
-            r for r in self.spec.rules if r.stage in _GLOBAL_STAGES
-        )
-        if all_files and global_rules:
+        global_spec = scoped_spec(self.spec, "global")
+        if all_files and global_spec.rules:
             self._run = ValidationRun(
                 self.spark,
-                dataclasses.replace(self.spec, rules=global_rules),
+                global_spec,
                 self.spark.read.parquet(*all_files),
                 dims=self.dims,
                 run_id=self.run_id,

@@ -17,7 +17,6 @@
 
 from __future__ import annotations
 
-import dataclasses
 import json
 import math
 import os
@@ -27,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, StructField, StructType
 
-from ..compile import _GLOBAL_STAGES, ConstraintProgram, compile_spec
+from ..compile import STAGES, ConstraintProgram, compile_spec, scoped_spec
 from ..errors import KIND_CONCENTRATION, SchemaError
 from ..operators.drift import _EPS, _bin_expr
 from ..operators.row_rules import row_violations, with_partition_id
@@ -47,10 +46,10 @@ from ..run import (
 )
 from ..spec import CountRule, DriftRule, Spec
 
-#: per-batch stages whose result over one micro-batch is not the rule's
+#: batch-scope stages whose result over one micro-batch is not the rule's
 #: result: a per-partition count bound or capture array would judge a slice
-#: of each partition, and the schema check runs once per run
-_RUN_SCOPED_STAGES = ("count", "capture", "schema")
+#: of each partition
+_RUN_SCOPED_STAGES = ("count", "capture")
 #: global rules the stream evaluates: the incremental families whose
 #: per-micro-batch partials merge into the rule's result. Not drift: an
 #: incremental sweep freezes its bin edges per run (run._frozen_edges), so
@@ -65,8 +64,11 @@ def _refuse_unevaluated(spec: Spec) -> None:
         if isinstance(r, _MERGED_TYPES):
             ok = r.incremental
         else:  # a capturing CompositeRegexRule is staged "row"
-            capture = getattr(r, "capture", False)
-            ok = r.stage not in (*_GLOBAL_STAGES, *_RUN_SCOPED_STAGES) and not capture
+            ok = (
+                STAGES[r.stage] == "batch"
+                and r.stage not in _RUN_SCOPED_STAGES
+                and not getattr(r, "capture", False)
+            )
         if not ok:
             raise SchemaError(
                 f"rule {r.id!r}: {r.kind} rules are not evaluated by "
@@ -182,13 +184,13 @@ def stream_finalize(spark, spec: Spec, checkpoint_dir: str, run_id: str = "strea
     viols = [finished("violations", _VIOLATIONS_DDL)]
     mets = [finished("metrics", _METRICS_DDL)]
     # after the refusal above, a global-stage rule is an incremental one
-    merged = tuple(r for r in spec.rules if r.stage in _GLOBAL_STAGES)
-    if merged:
+    merged = scoped_spec(spec, "global")
+    if merged.rules:
         with open(os.path.join(checkpoint_dir, "schema.json")) as f:
             schema = StructType.fromJson(json.load(f))
         run = ValidationRun(
             spark,
-            dataclasses.replace(spec, rules=merged),
+            merged,
             spark.createDataFrame([], schema),
             run_id=run_id,
         )

@@ -996,7 +996,7 @@ def test_fd_rule_compile_lint():
     prog = compile_spec(
         spec(FunctionalDependencyRule("f", determinants=("a",), dependents=("b",)))
     )
-    assert prog.group_rules and prog.group_rules[0].id == "f"
+    assert prog.stages["group"] and prog.stages["group"][0].id == "f"
 
 
 def test_fd_rule_through_run_lifecycle(spark, tmp_path):

@@ -120,7 +120,7 @@ def test_association_rule_compile_lints(spark):
             rules=(AssociationRule("r", col_a="a", col_b="b", max_v=0.5),),
         )
     )
-    assert any(r.id == "r" for r in prog.group_rules)
+    assert any(r.id == "r" for r in prog.stages["group"])
 
 
 def test_association_rule_results_band_and_degenerate(spark):

@@ -43,7 +43,7 @@ def test_round_trip_and_compile(spark):
     assert rule_from_dict(rule_to_dict(b)) == b
     assert rule_from_dict(rule_to_dict(g)) == g
     prog = compile_spec(Spec(rules=[b, g]), _table(spark).schema)
-    assert b in prog.group_rules and g in prog.group_rules
+    assert b in prog.stages["group"] and g in prog.stages["group"]
 
 
 def test_compile_lints(spark):

@@ -166,7 +166,7 @@ def test_degenerate_rule_requires_binary_column(spark, qimages):
     prog = compile_spec(
         Spec(rules=(DegenerateImageRule("d"),)), available_columns=qimages.schema
     )
-    assert len(prog.degenerate_rules) == 1 and not prog.row_rules
+    assert len(prog.stages["degenerate"]) == 1 and not prog.stages["row"]
 
 
 def _classes_from_report(report):

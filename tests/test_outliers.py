@@ -109,7 +109,7 @@ def test_lints_and_staging(spark):
     with pytest.raises(SchemaError, match="numeric"):
         compile_spec(_spec(OutlierRule("o", column="s")), df.schema)
     prog = compile_spec(_spec(OutlierRule("o", column="x")), df.schema)
-    assert any(r.kind == "outlier" for r in prog.group_rules)  # finalize stage
+    assert any(r.kind == "outlier" for r in prog.stages["group"])  # finalize stage
 
 
 # ---------------------------------------------------------- quality bins

@@ -248,3 +248,62 @@ def test_quality_bins_plan_map_only_after_edges(spark):
     # edges were collected during the call; the RETURNED frame is a pure
     # projection — no shuffle, no join, no Python
     assert "Exchange" not in p and "Join" not in p and "Python" not in p
+
+
+# ------------------------------------------------------------ job budget
+
+
+def _next_job_id(spark) -> int:
+    """The id Spark gives the next job: deltas count every job, those the
+    run's driver threads submit included."""
+    return spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+
+
+def test_run_job_counts_are_pinned(spark, tmp_path):
+    """Spark jobs per run over a spec with every stage that starts jobs:
+    a one-shot validate(), a checkpointed day-1 over two of four partitions
+    in batches of one, and its resume over the full table. These are the
+    scheduling budget the benchmark's job counts measure; a change to them
+    is a plan change, so it must be deliberate."""
+    from mdvalidate_spark.run import ValidationRun
+    from mdvalidate_spark.sources.synthetic import dim_source
+    from mdvalidate_spark.spec import (
+        CaptureRule,
+        ColumnStatsRule,
+        CountRule,
+        DegenerateImageRule,
+        MetricBoundRule,
+    )
+
+    src = str(tmp_path / "images")
+    synthetic_images(spark, 2000, with_bytes=True, n_partitions=4).write.parquet(src)
+    df = spark.read.parquet(src)
+    base = full_images_spec(with_pixel=True, n_partitions=4)
+    spec = Spec(
+        rules=base.rules + (
+            CountRule("per_part", min=1),
+            CaptureRule("cap", column="caption", pattern=r"of (\w+)"),
+            DegenerateImageRule("degenerate"),
+            MetricBoundRule("w_mean", column="w", metric="mean", max=1e9),
+            ColumnStatsRule("w_inc", column="w", incremental=True),
+        ),
+        key_column=base.key_column,
+        n_partitions=4,
+    )
+    dims = {"dim_source": dim_source(spark)}
+    ck = str(tmp_path / "ck")
+
+    def jobs(frame, batch_size=None, **kw) -> int:
+        j0 = _next_job_id(spark)
+        run = ValidationRun(spark, spec, frame, dims=dims, **kw)
+        run.validate(batch_size)
+        n = _next_job_id(spark) - j0
+        run.release()
+        return n
+
+    got = (
+        jobs(df, run_id="pin-oneshot"),
+        jobs(df.where(F.col("partition_id") < 2), 1, run_id="pin", checkpoint_dir=ck),
+        jobs(df, run_id="pin", checkpoint_dir=ck),
+    )
+    assert got == (39, 79, 50)

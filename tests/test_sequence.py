@@ -194,4 +194,4 @@ def test_monotonic_lints_and_staging(spark):
         spec(MonotonicRule("m", column="v", group_by=("g",), order_column="t")),
         cols,
     )
-    assert any(r.kind == "monotonic" for r in prog.group_rules)
+    assert any(r.kind == "monotonic" for r in prog.stages["group"])

@@ -1,10 +1,10 @@
 """Spec lint / compile tests — the analog of the reference's matcher-parse
 and schema-sanity cases (matcher.rs:418-729, matcher_extras.rs:254-413,
-count_non_literal_matchers_in_children.rs). Pure Python, no Spark."""
+count_non_literal_matchers_in_children.rs). Pure Python, no Spark job."""
 
 import pytest
 
-from mdvalidate_spark.compile import compile_spec
+from mdvalidate_spark.compile import STAGES, compile_spec
 from mdvalidate_spark.errors import (
     ConflictingRulesError,
     DuplicateRuleIdError,
@@ -19,8 +19,11 @@ from mdvalidate_spark.spec import (
     CountRule,
     DomainRule,
     DriftRule,
+    ExprRule,
     LiteralRule,
+    MetricBoundRule,
     NotNullRule,
+    OutlierRule,
     PixelRule,
     RangeRule,
     RefIntegrityRule,
@@ -49,13 +52,14 @@ def test_compile_stages_rules_by_family():
         )
     )
     prog = compile_spec(spec, COLS)
-    assert {r.id for r in prog.row_rules} == {"nn", "rx", "rg", "dm"}
-    assert {r.id for r in prog.group_rules} == {"uq", "ct_grp"}
-    assert {r.id for r in prog.count_rules} == {"ct_part"}
-    assert {r.id for r in prog.ref_rules} == {"rf"}
-    assert {r.id for r in prog.stats_rules} == {"st"}
-    assert {r.id for r in prog.drift_rules} == {"dr"}
-    assert {r.id for r in prog.pixel_rules} == {"px"}
+    assert {r.id for r in prog.stages["row"]} == {"nn", "rx", "rg", "dm"}
+    assert {r.id for r in prog.stages["group"]} == {"uq", "ct_grp"}
+    assert {r.id for r in prog.stages["count"]} == {"ct_part"}
+    assert {r.id for r in prog.stages["ref"]} == {"rf"}
+    assert {r.id for r in prog.stages["stats"]} == {"st"}
+    assert {r.id for r in prog.stages["drift"]} == {"dr"}
+    assert {r.id for r in prog.stages["pixel"]} == {"px"}
+    assert list(prog.stages) == list(STAGES)
     # bytes only needed by the pixel stage — pruned from the shared scan set
     assert "bytes" not in prog.scan_columns
 
@@ -366,14 +370,13 @@ def test_zero_partitions_refused_before_any_job(spark):
 
 
 def test_every_rule_class_is_registered():
-    """Every Rule subclass round-trips through the spec JSON form, names a
-    ConstraintProgram stage field, and — when it can stage ``group`` — has a
-    finalize handler."""
-    import dataclasses
+    """Every Rule subclass round-trips through the spec JSON form and names
+    a declared stage; every batch- and global-scope stage has a step; and
+    the group stage's finalize handlers are exactly its rule classes."""
     import json
 
-    from mdvalidate_spark.compile import ConstraintProgram
-    from mdvalidate_spark.run import _GLOBAL_HANDLERS
+    from mdvalidate_spark.compile import STAGES
+    from mdvalidate_spark.run import _BATCH_STEPS, _GLOBAL_HANDLERS, _GLOBAL_STEPS
     from mdvalidate_spark.spec import Rule
     from mdvalidate_spark.spec_io import RULE_KINDS, spec_from_dict, spec_to_dict
 
@@ -386,10 +389,68 @@ def test_every_rule_class_is_registered():
     spec = Spec(rules=tuple(samples))
     assert spec_from_dict(json.loads(json.dumps(spec_to_dict(spec)))) == spec
 
-    stage_fields = {
-        f.name for f in dataclasses.fields(ConstraintProgram)
-        if f.name.endswith("_rules")
-    }
-    assert {f"{r.stage}_rules" for r in samples} == stage_fields
+    assert {r.stage for r in samples} == set(STAGES)
+    for scope, steps in (("batch", _BATCH_STEPS), ("global", _GLOBAL_STEPS)):
+        assert set(steps) == {s for s, sc in STAGES.items() if sc == scope}
     group_classes = {type(r) for r in samples if r.stage == "group"}
     assert set(_GLOBAL_HANDLERS) == group_classes
+
+
+_LINT_DDL = "image_id string, w int, h int, fmt string, caption string, source_id string"
+
+
+@pytest.mark.parametrize(
+    "rule, match",
+    [
+        # `when` on each stage whose rules carry one
+        (RegexRule("rx", column="caption", pattern="a", when="lenght(caption) > 0"),
+         "when predicate 'lenght"),
+        (UniqueRule("uq", columns=("image_id",), when="lenght(caption) > 0"),
+         "when predicate 'lenght"),
+        (CountRule("ct", min=1, when="w + 1"), "when predicate 'w \\+ 1' is not boolean"),
+        (RefIntegrityRule("rf", column="source_id", dim_name="d", dim_column="k",
+                          when="nope > 0"), "when predicate 'nope"),
+        (ColumnStatsRule("st", column="w", when="lenght(caption) > 0"),
+         "when predicate 'lenght"),
+        (MetricBoundRule("mb", column="w", metric="count", max=1.0, when="w"),
+         "is not boolean"),
+        # ExprRule: analyzed against its declared columns only
+        (ExprRule("ex", expr="w > h", columns=("w",)), "declared columns"),
+        (ExprRule("ex", expr="w + 1", columns=("w",)), "expr 'w \\+ 1' is not boolean"),
+        (ExprRule("ex", expr="w > 0", columns=("w",), actual_expr="lenght(w)"),
+         "actual_expr 'lenght"),
+        (DriftRule("dr", expr="lenght(caption)", group_column="fmt", group_value="png"),
+         "drift expr 'lenght"),
+        (OutlierRule("ol", expr="lenght(caption)"), "outlier expr 'lenght"),
+        (OutlierRule("ol", expr="concat(caption, fmt)"), "is not numeric"),
+        (ColumnStatsRule("st", column="caption", moments=True),
+         "moments need a numeric column"),
+        (MetricBoundRule("mb", column="caption", metric="p95", max=1.0),
+         "p95 need a numeric column"),
+    ],
+    ids=lambda x: x.id if hasattr(x, "id") else None,
+)
+def test_expression_lints_run_at_compile_without_a_job(spark, rule, match):
+    """A rule's SQL expressions and numeric demands are checked by its own
+    lint against a typed schema, so every front end refuses the spec
+    before any work — driver-side, no Spark job."""
+    schema = spark.createDataFrame([], _LINT_DDL).schema
+    sc = spark.sparkContext
+    sc.setJobGroup("expr-lint", "lint")
+    try:
+        with pytest.raises(SchemaError, match=match):
+            compile_spec(Spec(rules=(rule,)), schema)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup("expr-lint")) == []
+    # without a typed schema only the static checks run
+    compile_spec(Spec(rules=(rule,)), schema.names)
+
+
+def test_unknown_column_is_raised_before_expression_lints(spark):
+    schema = spark.createDataFrame([], _LINT_DDL).schema
+    spec = Spec(rules=(
+        RegexRule("rx", column="nope", pattern="a", when="lenght(x) > 0"),
+    ))
+    with pytest.raises(UnknownColumnError):
+        compile_spec(spec, schema)

@@ -1570,3 +1570,39 @@ def test_stream_validate_refuses_rules_it_cannot_evaluate(spark, tmp_path, rule)
         stream_validate(stream, spec, ck)
     assert len(spark.streams.active) == active
     assert not os.path.exists(ck)
+
+
+def test_stream_validate_refuses_a_typod_expression_before_the_query(spark, tmp_path):
+    """A `when` that does not resolve used to start the query, which then
+    died in its first micro-batch; the spec's lint refuses it first."""
+    src = str(tmp_path / "src")
+    table = synthetic_images(spark, 20, with_bytes=False)
+    table.write.parquet(src)
+    stream = spark.readStream.schema(table.schema).parquet(src)
+    spec = Spec(
+        rules=(RegexRule("rx", column="caption", pattern=r"A.*",
+                         when="lenght(caption) > 0"),),
+        key_column="image_id",
+    )
+    ck = str(tmp_path / "ck")
+    active = len(spark.streams.active)
+    with pytest.raises(SchemaError, match="'rx': when predicate"):
+        stream_validate(stream, spec, ck)
+    assert len(spark.streams.active) == active
+    assert not os.path.exists(ck)
+
+
+def test_incremental_first_poll_lints_the_global_rules(spark, tmp_path):
+    """A global rule's typo'd expression fails the first poll against the
+    table's schema, not the EOF pass after every file was validated."""
+    base = str(tmp_path / "arrivals")
+    synthetic_images(spark, 20, with_bytes=False).write.parquet(
+        os.path.join(base, "chunk0")
+    )
+    spec = Spec(
+        rules=(UniqueRule("uq", columns=("image_id",), when="lenght(caption) > 0"),),
+        key_column="image_id",
+    )
+    v = FileIncrementalValidator(spark, spec, base, run_id="lint")
+    with pytest.raises(SchemaError, match="'uq': when predicate"):
+        v.poll()

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import KIND_COUNT, KIND_DUPLICATE
+from ..schemas import metric_columns, metrics_frame, violation_columns, violations_frame
 from ..spec import ColumnStatsRule, CountRule, UniqueRule, _require_numeric
 
 
@@ -60,14 +61,15 @@ def unique_violations(
         .where(F.col("n") > 1)
     )
     return dup.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        F.col("_k").alias("image_id"),
-        F.lit(",".join(rule.columns)).alias("column"),
-        F.lit("unique").alias("expected"),
-        F.concat(F.lit("count="), F.col("n").cast("string")).alias("actual"),
-        F.lit(KIND_DUPLICATE).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule.id,
+            image_id=F.col("_k"),
+            column=",".join(rule.columns),
+            expected="unique",
+            actual=F.concat(F.lit("count="), F.col("n").cast("string")),
+            kind=KIND_DUPLICATE,
+        )
     )
 
 
@@ -96,24 +98,23 @@ def fd_violations(df: DataFrame, rule, run_id: str) -> DataFrame:
         .where(F.col("n_dep") > 1)
     )
     return bad.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        F.col("_det").alias("image_id"),
-        F.lit(",".join(rule.determinants)).alias("column"),
-        F.lit(f"{','.join(rule.dependents)} functionally determined").alias(
-            "expected"
-        ),
-        F.concat(
-            F.lit("distinct="),
-            F.col("n_dep").cast("string"),
-            F.lit(" in ["),
-            F.col("_lo"),
-            F.lit(" .. "),
-            F.col("_hi"),
-            F.lit("]"),
-        ).alias("actual"),
-        F.lit(KIND_FD).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule.id,
+            image_id=F.col("_det"),
+            column=",".join(rule.determinants),
+            expected=f"{','.join(rule.dependents)} functionally determined",
+            actual=F.concat(
+                F.lit("distinct="),
+                F.col("n_dep").cast("string"),
+                F.lit(" in ["),
+                F.col("_lo"),
+                F.lit(" .. "),
+                F.col("_hi"),
+                F.lit("]"),
+            ),
+            kind=KIND_FD,
+        )
     )
 
 
@@ -142,20 +143,21 @@ def freshness_violations(df: DataFrame, rule, run_id: str) -> DataFrame:
         )
         .where(F.col("_lag").isNull() | (F.col("_lag") > F.lit(rule.max_age_seconds)))
         .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(None).cast("int").alias("partition_id"),
-            F.lit(rule.id).alias("rule_id"),
-            F.col("_k").alias("image_id"),
-            F.lit(rule.column).alias("column"),
-            F.lit(
-                f"max({rule.column}) within {rule.max_age_seconds}s "
-                f"of {rule.as_of}"
-            ).alias("expected"),
-            F.coalesce(
-                F.concat(F.lit("lag_s="), F.col("_lag").cast("string")),
-                F.lit("no non-null timestamps"),
-            ).alias("actual"),
-            F.lit(KIND_STALE).alias("kind"),
+            *violation_columns(
+                run_id=run_id,
+                rule_id=rule.id,
+                image_id=F.col("_k"),
+                column=rule.column,
+                expected=(
+                    f"max({rule.column}) within {rule.max_age_seconds}s "
+                    f"of {rule.as_of}"
+                ),
+                actual=F.coalesce(
+                    F.concat(F.lit("lag_s="), F.col("_lag").cast("string")),
+                    F.lit("no non-null timestamps"),
+                ),
+                kind=KIND_STALE,
+            )
         )
     )
 
@@ -220,21 +222,19 @@ def count_violations(
     else:
         fail = conds[0] if len(conds) == 1 else (conds[0] | conds[1])
 
-    bad = counted.where(fail)
-    part_col = (
-        F.col("partition_id").cast("int")
-        if not rule.group_by
-        else F.lit(None).cast("int")
-    )
-    return bad.select(
-        F.lit(run_id).alias("run_id"),
-        part_col.alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        _key_expr(tuple(group_cols)).alias("image_id"),
-        F.lit(",".join(group_cols)).alias("column"),
-        F.lit(f"count in [{rule.min}, {rule.max}]").alias("expected"),
-        F.col("n").cast("string").alias("actual"),
-        F.lit(KIND_COUNT).alias("kind"),
+    return counted.where(fail).select(
+        *violation_columns(
+            run_id=run_id,
+            partition_id=(
+                None if rule.group_by else F.col("partition_id").cast("int")
+            ),
+            rule_id=rule.id,
+            image_id=_key_expr(tuple(group_cols)),
+            column=",".join(group_cols),
+            expected=f"count in [{rule.min}, {rule.max}]",
+            actual=F.col("n").cast("string"),
+            kind=KIND_COUNT,
+        )
     )
 
 
@@ -353,7 +353,7 @@ def _fold_kll(arr, merge_fn):
             F.slice(arr, 2, F.greatest(F.size(arr) - 1, F.lit(0))),
             F.element_at(arr, 1),
             lambda acc, x: merge_fn(acc, x),
-        ),
+        )
     )
 
 
@@ -464,12 +464,13 @@ def column_stats_from_partials(
                 )
             )
     return wide.select(F.explode(F.array(*parts)).alias("m")).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.col("m.rule_id").alias("rule_id"),
-        F.col("m.metric").alias("metric"),
-        F.col("m.value").alias("value"),
-        F.col("m.value_str").alias("value_str"),
+        *metric_columns(
+            run_id=run_id,
+            rule_id=F.col("m.rule_id"),
+            metric=F.col("m.metric"),
+            value=F.col("m.value"),
+            value_str=F.col("m.value_str"),
+        )
     )
 
 
@@ -484,11 +485,7 @@ def column_stats_metrics(
     count_distinct for small-scale oracle parity.
     """
     if not rules:
-        return df.sparkSession.createDataFrame(
-            [],
-            "run_id string, partition_id int, rule_id string, metric string, "
-            "value double, value_str string",
-        )
+        return metrics_frame(df.sparkSession)
     wide = df.agg(*stats_agg_columns(df, rules))
     return stats_melt_from_wide(wide, rules, run_id)
 
@@ -574,12 +571,13 @@ def stats_melt_from_wide(
                 )
             )
     long = wide.select(F.explode(F.array(*parts)).alias("m")).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.col("m.rule_id").alias("rule_id"),
-        F.col("m.metric").alias("metric"),
-        F.col("m.value").alias("value"),
-        F.col("m.value_str").alias("value_str"),
+        *metric_columns(
+            run_id=run_id,
+            rule_id=F.col("m.rule_id"),
+            metric=F.col("m.metric"),
+            value=F.col("m.value"),
+            value_str=F.col("m.value_str"),
+        )
     )
     return long
 
@@ -609,11 +607,7 @@ def value_profile_metrics(
     distribution of present values, matching the conditional-aggregation
     convention of the fused stats pass."""
     if not rules:
-        return df.sparkSession.createDataFrame(
-            [],
-            "run_id string, partition_id int, rule_id string, metric string, "
-            "value double, value_str string",
-        )
+        return metrics_frame(df.sparkSession)
     from pyspark.sql import Window
     from pyspark.storagelevel import StorageLevel
 
@@ -641,12 +635,13 @@ def value_profile_metrics(
 
     def _long(frame):
         return frame.select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(None).cast("int").alias("partition_id"),
-            "rule_id",
-            "metric",
-            F.col("value").cast("double").alias("value"),
-            F.col("value_str").cast("string").alias("value_str"),
+            *metric_columns(
+                run_id=run_id,
+                rule_id=F.col("rule_id"),
+                metric=F.col("metric"),
+                value=F.col("value").cast("double"),
+                value_str=F.col("value_str").cast("string"),
+            )
         )
 
     parts = []
@@ -753,11 +748,7 @@ def capture_metrics(
     from pyspark.sql import functions as F  # noqa: PLC0415 (local for clarity)
 
     if not rules:
-        return df.sparkSession.createDataFrame(
-            [],
-            "run_id string, partition_id int, rule_id string, metric string, "
-            "value double, value_str string",
-        )
+        return metrics_frame(df.sparkSession)
 
     flat_rules = [r for r in rules if not getattr(r, "group_by", ())]
     nested_rules = [r for r in rules if getattr(r, "group_by", ())]
@@ -785,12 +776,14 @@ def capture_metrics(
         return frame.select(
             F.col("partition_id"), F.explode(F.array(*parts)).alias("m")
         ).select(
-            F.lit(run_id).alias("run_id"),
-            F.col("partition_id").cast("int"),
-            F.col("m.rule_id").alias("rule_id"),
-            F.lit("captures").alias("metric"),
-            F.col("m.value").alias("value"),
-            F.col("m.value_str").alias("value_str"),
+            *metric_columns(
+                run_id=run_id,
+                partition_id=F.col("partition_id").cast("int"),
+                rule_id=F.col("m.rule_id"),
+                metric="captures",
+                value=F.col("m.value"),
+                value_str=F.col("m.value_str"),
+            )
         )
 
     outs: list[DataFrame] = []
@@ -867,22 +860,23 @@ def capture_rows_metrics(
     the group key survives the narrow schema)."""
     rows = capture_rows(df, rules, run_id, key_column)
     return rows.select(
-        "run_id",
-        "partition_id",
-        "rule_id",
-        F.lit("capture_row").alias("metric"),
-        F.col("rank").cast("double").alias("value"),
-        F.when(
-            F.col("group_key").isNotNull(),
-            F.to_json(
-                F.struct(
-                    F.col("group_key").alias("group"),
-                    F.col("value").alias("value"),
-                )
-            ),
+        *metric_columns(
+            run_id=F.col("run_id"),
+            partition_id=F.col("partition_id"),
+            rule_id=F.col("rule_id"),
+            metric="capture_row",
+            value=F.col("rank").cast("double"),
+            value_str=F.when(
+                F.col("group_key").isNotNull(),
+                F.to_json(
+                    F.struct(
+                        F.col("group_key").alias("group"),
+                        F.col("value").alias("value"),
+                    )
+                ),
+            )
+            .otherwise(F.col("value")),
         )
-        .otherwise(F.col("value"))
-        .alias("value_str"),
     )
 
 
@@ -1060,17 +1054,11 @@ def quantile_drift_from_partials(
                     f"ks <= {threshold}", f"{ks:.6f}", "drift",
                 )
             )
-    metrics = spark.createDataFrame(
-        metric_rows,
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string",
+    return (
+        violations_frame(spark, viol_rows),
+        metrics_frame(spark, metric_rows),
+        len(viol_rows),
     )
-    violations = spark.createDataFrame(
-        viol_rows,
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string",
-    )
-    return violations, metrics, len(viol_rows)
 
 
 def metric_bound_results(
@@ -1109,19 +1097,8 @@ def metric_bound_results(
     from ..errors import KIND_METRIC_BOUND
 
     spark = df.sparkSession
-    empty_v = spark.createDataFrame(
-        [],
-        "run_id string, partition_id int, rule_id string, image_id "
-        "string, column string, expected string, actual string, "
-        "kind string",
-    )
-    empty_m = spark.createDataFrame(
-        [],
-        "run_id string, partition_id int, rule_id string, metric "
-        "string, value double, value_str string",
-    )
     if not rules:
-        return empty_v, empty_m
+        return violations_frame(spark), metrics_frame(spark)
 
     # public operator API (callable without compile_spec, e.g. the bench
     # entry): a boundless rule is a vacuous assertion — typed error, not a
@@ -1157,8 +1134,10 @@ def metric_bound_results(
         from functools import reduce as _reduce
 
         return (
-            _reduce(lambda a, b: a.unionByName(b), g_viols, empty_v),
-            _reduce(lambda a, b: a.unionByName(b), g_mets, empty_m),
+            _reduce(
+                lambda a, b: a.unionByName(b), g_viols, violations_frame(spark)
+            ),
+            _reduce(lambda a, b: a.unionByName(b), g_mets, metrics_frame(spark)),
         )
 
     # 1-row wide frame; persisted so metrics + violations share ONE scan
@@ -1204,25 +1183,27 @@ def metric_bound_results(
         )
 
     metrics = wide.select(F.explode(F.array(*met_parts)).alias("m")).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.col("m.rule_id"),
-        F.col("m.metric"),
-        F.col("m.value"),
-        F.col("m.value_str"),
+        *metric_columns(
+            run_id=run_id,
+            rule_id=F.col("m.rule_id"),
+            metric=F.col("m.metric"),
+            value=F.col("m.value"),
+            value_str=F.col("m.value_str"),
+        )
     )
     violations = (
         wide.select(F.explode(F.array(*vio_parts)).alias("v"))
         .where(F.col("v.fail"))
         .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(None).cast("int").alias("partition_id"),
-            F.col("v.rule_id"),
-            F.col("v.image_id"),
-            F.col("v.column"),
-            F.col("v.expected"),
-            F.col("v.actual"),
-            F.lit(KIND_METRIC_BOUND).alias("kind"),
+            *violation_columns(
+                run_id=run_id,
+                rule_id=F.col("v.rule_id"),
+                image_id=F.col("v.image_id"),
+                column=F.col("v.column"),
+                expected=F.col("v.expected"),
+                actual=F.col("v.actual"),
+                kind=KIND_METRIC_BOUND,
+            )
         )
     )
     for gv in g_viols:
@@ -1312,14 +1293,15 @@ def _metric_bounds_grouped(
         wide.select(F.col("__group"), F.explode(F.array(*vio_parts)).alias("v"))
         .where(F.col("v.fail"))
         .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(None).cast("int").alias("partition_id"),
-            F.col("v.rule_id"),
-            F.col("__group").alias("image_id"),
-            F.col("v.column"),
-            F.col("v.expected"),
-            F.col("v.actual"),
-            F.lit(KIND_METRIC_BOUND).alias("kind"),
+            *violation_columns(
+                run_id=run_id,
+                rule_id=F.col("v.rule_id"),
+                image_id=F.col("__group"),
+                column=F.col("v.column"),
+                expected=F.col("v.expected"),
+                actual=F.col("v.actual"),
+                kind=KIND_METRIC_BOUND,
+            )
         )
     )
     # bounded summary metrics: groups_total / groups_violated per rule —
@@ -1367,14 +1349,15 @@ def _metric_bounds_grouped(
             )
         ).alias("v")
     ).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.col("v.rule_id"),
-        F.lit("__no_groups__").alias("image_id"),
-        F.col("v.column"),
-        F.col("v.expected"),
-        F.lit("0 groups").alias("actual"),
-        F.lit(KIND_METRIC_BOUND).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=F.col("v.rule_id"),
+            image_id="__no_groups__",
+            column=F.col("v.column"),
+            expected=F.col("v.expected"),
+            actual="0 groups",
+            kind=KIND_METRIC_BOUND,
+        )
     )
     violations = violations.unionByName(empty_viols)
     met_parts = []
@@ -1394,11 +1377,12 @@ def _metric_bounds_grouped(
             ),
         ]
     metrics = summary.select(F.explode(F.array(*met_parts)).alias("m")).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.col("m.rule_id"),
-        F.col("m.metric"),
-        F.col("m.value"),
-        F.col("m.value_str"),
+        *metric_columns(
+            run_id=run_id,
+            rule_id=F.col("m.rule_id"),
+            metric=F.col("m.metric"),
+            value=F.col("m.value"),
+            value_str=F.col("m.value_str"),
+        )
     )
     return violations, metrics

@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import SchemaError
+from ..schemas import metrics_frame, violations_frame
 from .drift import psi
 
 # contingency cells above this are a refusal, not a silent truncation: two
@@ -256,22 +257,16 @@ def association_rule_results(
              f"{v_r:.6f}", KIND_ASSOCIATION)
         )
 
-    metrics = spark.createDataFrame(
+    metrics = metrics_frame(
+        spark,
         [
             (run_id, None, rule.id, "chi2", round(chi2, 3), None),
             (run_id, None, rule.id, "cramers_v", v_r, None),
             (run_id, None, rule.id, "assoc_cells", float(len(cells)), None),
             (run_id, None, rule.id, "assoc_dof", float(dof), None),
         ],
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string",
     )
-    violations = spark.createDataFrame(
-        viol_rows,
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string",
-    )
-    return violations, metrics
+    return violations_frame(spark, viol_rows), metrics
 
 
 def association_drift(

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import SchemaError
+from ..schemas import metrics_frame, violations_frame
 from .util import round6 as _r6
 
 # round(log10(1 + 1/d), 6) — fixed literals, identical in both engines
@@ -322,22 +323,14 @@ def _rule_results_from_counts(spark, rows: int, counts: dict, rule, run_id: str)
                  f"{BENFORD_EXPECTED[worst]:.6f})", KIND_BENFORD)
             )
 
-    ddl_v = (
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string"
-    )
-    ddl_m = (
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string"
-    )
-    metrics = spark.createDataFrame(
+    metrics = metrics_frame(
+        spark,
         [
             (run_id, None, rule.id, "benford_mad", mad, None),
             (run_id, None, rule.id, "benford_n_scoped", float(scoped), None),
         ],
-        ddl_m,
     )
-    return spark.createDataFrame(viol_rows, ddl_v), metrics
+    return violations_frame(spark, viol_rows), metrics
 
 
 def benford_mad(

@@ -20,6 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import KIND_DRIFT
+from ..schemas import metrics_frame, violations_frame
 from ..spec import DriftRule
 
 _EPS = 1e-6
@@ -294,47 +295,24 @@ def _drift_verdict(
     empty_ref: bool,
 ) -> tuple[DataFrame, DataFrame, int]:
     stat = psi(probe_h, ref_h) if rule.method == "psi" else ks(probe_h, ref_h)
-
-    metrics = spark.createDataFrame(
-        [(run_id, None, rule.id, f"{rule.method}_stat", float(stat), None)],
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string",
-    )
-    viol_rows = []
+    metric_rows = [(run_id, None, rule.id, f"{rule.method}_stat", float(stat), None)]
     if empty_ref and not empty_probe:
         # symmetric with the two-table path: an empty REFERENCE slice is a
         # missing-data condition — the epsilon-density psi (~13.8) or ks=1.0
         # artifact must not be reported as a genuine drift statistic (and
         # ks=1.0 would silently PASS a threshold >= 1.0)
-        viol_rows.append(
-            (
-                run_id,
-                None,
-                rule.id,
-                f"{rule.group_column}={rule.group_value}",
-                rule.expr or rule.column,
-                "non-empty reference distribution",
-                "0 reference rows",
-                KIND_DRIFT,
-            )
-        )
+        failed = ("non-empty reference distribution", "0 reference rows")
     elif empty_probe:
         # distinguishable outcome: a probe group with NO rows is a missing-
         # data condition, not a distribution statement — surface it as its
         # own violation instead of a meaningless drift statistic
-        viol_rows.append(
-            (
-                run_id,
-                None,
-                rule.id,
-                f"{rule.group_column}={rule.group_value}",
-                rule.expr or rule.column,
-                "non-empty probe group",
-                "0 rows",
-                KIND_DRIFT,
-            )
-        )
+        failed = ("non-empty probe group", "0 rows")
     elif stat > rule.threshold:
+        failed = (f"{rule.method} <= {rule.threshold}", f"{stat:.6f}")
+    else:
+        failed = None
+    viol_rows = []
+    if failed:
         viol_rows.append(
             (
                 run_id,
@@ -342,17 +320,23 @@ def _drift_verdict(
                 rule.id,
                 f"{rule.group_column}={rule.group_value}",
                 rule.expr or rule.column,
-                f"{rule.method} <= {rule.threshold}",
-                f"{stat:.6f}",
+                *failed,
                 KIND_DRIFT,
             )
         )
-    violations = spark.createDataFrame(
-        viol_rows,
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string",
+    return _verdict(spark, viol_rows, metric_rows)
+
+
+def _verdict(
+    spark: SparkSession, viol_rows: list, metric_rows: list
+) -> tuple[DataFrame, DataFrame, int]:
+    """(violations, metrics, violation count) of a drift verdict's
+    driver-built rows."""
+    return (
+        violations_frame(spark, viol_rows),
+        metrics_frame(spark, metric_rows),
+        len(viol_rows),
     )
-    return violations, metrics, len(viol_rows)
 
 
 # driver-traffic ceiling for a sweep's (group, bin) histogram collect: at 33
@@ -445,17 +429,7 @@ def _sweep_from_counts(
                     KIND_DRIFT,
                 )
             )
-    metrics = spark.createDataFrame(
-        metric_rows,
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string",
-    )
-    violations = spark.createDataFrame(
-        viol_rows,
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string",
-    )
-    return violations, metrics, len(viol_rows)
+    return _verdict(spark, viol_rows, metric_rows)
 
 
 def _sweep_nb(rule: DriftRule, edges: list) -> tuple[int, "Column"]:
@@ -697,17 +671,7 @@ def _two_sample_results(
                     KIND_DRIFT,
                 )
             )
-    metrics = spark.createDataFrame(
-        metric_rows,
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string",
-    )
-    violations = spark.createDataFrame(
-        viol_rows,
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string",
-    )
-    return violations, metrics, len(viol_rows)
+    return _verdict(spark, viol_rows, metric_rows)
 
 
 # ------------------------------------------------------- profile snapshots
@@ -992,14 +956,4 @@ def drift_sweep_vs_reference(
                     KIND_DRIFT,
                 )
             )
-    metrics = spark.createDataFrame(
-        metric_rows,
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string",
-    )
-    violations = spark.createDataFrame(
-        viol_rows,
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string",
-    )
-    return violations, metrics, len(viol_rows)
+    return _verdict(spark, viol_rows, metric_rows)

@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..errors import SchemaError
+from ..schemas import violation_columns
 
 DEFAULT_BUCKET_SECONDS = 86_400
 
@@ -148,22 +149,23 @@ def gap_violations(df: DataFrame, rule, run_id: str) -> DataFrame:
     gb = list(rule.group_by)
     key = _key_expr(tuple(gb)) if gb else F.lit("*")
     return gaps.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        key.alias("image_id"),
-        F.lit(rule.column).alias("column"),
-        F.lit(
-            f"no silence > {rule.min_gap_seconds}s between consecutive "
-            f"{rule.column} values"
-        ).alias("expected"),
-        F.format_string(
-            "gap_s=%.3f [%d .. %d]",
-            F.col("gap_seconds"),
-            F.col("prev_epoch_ms"),
-            F.col("next_epoch_ms"),
-        ).alias("actual"),
-        F.lit(KIND_GAP).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule.id,
+            image_id=key,
+            column=rule.column,
+            expected=(
+                f"no silence > {rule.min_gap_seconds}s between consecutive "
+                f"{rule.column} values"
+            ),
+            actual=F.format_string(
+                "gap_s=%.3f [%d .. %d]",
+                F.col("gap_seconds"),
+                F.col("prev_epoch_ms"),
+                F.col("next_epoch_ms"),
+            ),
+            kind=KIND_GAP,
+        )
     )
 
 

@@ -38,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from ..errors import KIND_OUTLIER
+from ..schemas import violation_columns
 from ..spec import OutlierRule
 
 #: 1.4826 ≈ 1/Φ⁻¹(3/4): scales MAD to estimate sigma under normality
@@ -136,14 +137,15 @@ def outlier_violations(
     return (
         joined.where((c < F.col("_lo")) | (c > F.col("_hi")))
         .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(None).cast("int").alias("partition_id"),
-            F.lit(rule.id).alias("rule_id"),
-            F.col(key_column).cast("string").alias("image_id"),
-            F.lit(rule.expr or rule.column).alias("column"),
-            expected.alias("expected"),
-            F.format_string("%.6f", c).alias("actual"),
-            F.lit(KIND_OUTLIER).alias("kind"),
+            *violation_columns(
+                run_id=run_id,
+                rule_id=rule.id,
+                image_id=F.col(key_column).cast("string"),
+                column=rule.expr or rule.column,
+                expected=expected,
+                actual=F.format_string("%.6f", c),
+                kind=KIND_OUTLIER,
+            )
         )
     )
 

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import SchemaError
+from ..schemas import violation_columns
 
 _SKETCHABLE = {"tinyint", "smallint", "int", "bigint", "string", "binary"}
 
@@ -134,17 +135,18 @@ def overlap_violations(
         fail = fail | (F.col("n_common") > F.lit(float(rule.max_common)))
         expected.append(f"common<={rule.max_common:g}")
     return pairs.where(fail).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        F.concat_ws(
-            "|", F.col("g_a").cast("string"), F.col("g_b").cast("string")
-        ).alias("image_id"),
-        F.lit(rule.column).alias("column"),
-        F.lit(" and ".join(expected)).alias("expected"),
-        F.concat(
-            F.lit("jaccard="), F.round(F.col("jaccard"), 6).cast("string"),
-            F.lit(" common="), F.col("n_common").cast("string"),
-        ).alias("actual"),
-        F.lit(KIND_OVERLAP).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule.id,
+            image_id=F.concat_ws(
+                "|", F.col("g_a").cast("string"), F.col("g_b").cast("string")
+            ),
+            column=rule.column,
+            expected=" and ".join(expected),
+            actual=F.concat(
+                F.lit("jaccard="), F.round(F.col("jaccard"), 6).cast("string"),
+                F.lit(" common="), F.col("n_common").cast("string"),
+            ),
+            kind=KIND_OVERLAP,
+        )
     )

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 
 from ..errors import KIND_DEGENERATE, KIND_PIXEL
 from ..functions import codec
+from ..schemas import metric_columns, violation_columns
 from ..spec import PixelRule
 
 log = logging.getLogger(__name__)
@@ -569,14 +570,16 @@ def pixel_outputs(
     layer does) so images decode exactly once per batch.
     """
     violations = checks.where(~F.col("ok")).select(
-        F.lit(run_id).alias("run_id"),
-        F.col("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        F.col("image_id"),
-        F.lit(rule.bytes_column).alias("column"),
-        F.col("expected"),
-        F.col("actual"),
-        F.lit(KIND_PIXEL).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            partition_id=F.col("partition_id"),
+            rule_id=rule.id,
+            image_id=F.col("image_id"),
+            column=rule.bytes_column,
+            expected=F.col("expected"),
+            actual=F.col("actual"),
+            kind=KIND_PIXEL,
+        )
     )
     metrics = (
         checks.groupBy("partition_id")
@@ -606,12 +609,13 @@ def pixel_outputs(
             ).alias("m"),
         )
         .select(
-            "run_id",
-            "partition_id",
-            F.lit(rule.id).alias("rule_id"),
-            F.col("m.metric").alias("metric"),
-            F.col("m.value").alias("value"),
-            F.lit(None).cast("string").alias("value_str"),
+            *metric_columns(
+                run_id=F.col("run_id"),
+                partition_id=F.col("partition_id"),
+                rule_id=rule.id,
+                metric=F.col("m.metric"),
+                value=F.col("m.value"),
+            )
         )
     )
     return violations, metrics
@@ -760,14 +764,16 @@ def degenerate_outputs(
         "__class", klass
     )
     violations = flagged.where(F.col("__class").isNotNull()).select(
-        F.lit(run_id).alias("run_id"),
-        F.col("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        F.col("image_id"),
-        F.lit(rule.bytes_column).alias("column"),
-        expected.alias("expected"),
-        actual.alias("actual"),
-        F.lit(KIND_DEGENERATE).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            partition_id=F.col("partition_id"),
+            rule_id=rule.id,
+            image_id=F.col("image_id"),
+            column=rule.bytes_column,
+            expected=expected,
+            actual=actual,
+            kind=KIND_DEGENERATE,
+        )
     )
     metrics = (
         flagged.groupBy("partition_id")
@@ -804,12 +810,13 @@ def degenerate_outputs(
             ).alias("m"),
         )
         .select(
-            "run_id",
-            "partition_id",
-            F.lit(rule.id).alias("rule_id"),
-            F.col("m.metric").alias("metric"),
-            F.col("m.value").alias("value"),
-            F.lit(None).cast("string").alias("value_str"),
+            *metric_columns(
+                run_id=F.col("run_id"),
+                partition_id=F.col("partition_id"),
+                rule_id=rule.id,
+                metric=F.col("m.metric"),
+                value=F.col("m.value"),
+            )
         )
     )
     return violations, metrics

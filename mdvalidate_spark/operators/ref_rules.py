@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import KIND_ORPHAN
+from ..schemas import violation_columns
 from ..spec import RefIntegrityRule
 
 
@@ -63,14 +64,16 @@ def ref_violations(
             "|", *[F.col(c).cast("string") for c in fact_keys]
         )
     return orphans.select(
-        F.lit(run_id).alias("run_id"),
-        F.col("partition_id").cast("int").alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        F.col(key_column).cast("string").alias("image_id"),
-        F.lit(col_label).alias("column"),
-        F.lit(expected).alias("expected"),
-        actual.alias("actual"),
-        F.lit(KIND_ORPHAN).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            partition_id=F.col("partition_id").cast("int"),
+            rule_id=rule.id,
+            image_id=F.col(key_column).cast("string"),
+            column=col_label,
+            expected=expected,
+            actual=actual,
+            kind=KIND_ORPHAN,
+        )
     )
 
 

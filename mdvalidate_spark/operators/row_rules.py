@@ -63,6 +63,7 @@ from ..spec import (
     VectorRule,
     anchor_regex,
 )
+from ..schemas import VIOLATION_STRUCT_DDL, violation_columns, violations_frame
 from .pii import PII_KINDS, pii_counts_for, pii_total_from_counts
 from .text import gopher_quality_metrics_for, repetition_metrics_for
 
@@ -610,7 +611,7 @@ def row_violations(
     key = F.col(spec.key_column).cast("string")
 
     if not program.stages["row"] and not extra_checks:
-        return df.sparkSession.createDataFrame([], _violations_ddl())
+        return violations_frame(df.sparkSession)
 
     checks = [_check(r) for r in program.stages["row"]] + list(extra_checks)
     # NO pre-filter on size(_v): explode already drops empty arrays, and a
@@ -632,30 +633,19 @@ def row_violations(
             F.col("_key"),
         )
         .select(
-            "run_id",
-            "partition_id",
-            F.col("v.rule_id").alias("rule_id"),
-            F.col("_key").alias("image_id"),
-            F.col("v.column").alias("column"),
-            F.col("v.expected").alias("expected"),
-            F.col("v.actual").alias("actual"),
-            F.col("v.kind").alias("kind"),
+            *violation_columns(
+                run_id=F.col("run_id"),
+                partition_id=F.col("partition_id"),
+                rule_id=F.col("v.rule_id"),
+                image_id=F.col("_key"),
+                column=F.col("v.column"),
+                expected=F.col("v.expected"),
+                actual=F.col("v.actual"),
+                kind=F.col("v.kind"),
+            )
         )
     )
     return rows
-
-
-def _violations_ddl() -> str:
-    return (
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string"
-    )
-
-
-_VIOL_STRUCT_DDL = (
-    "array<struct<rule_id:string,column:string,expected:string,"
-    "actual:string,kind:string>>"
-)
 
 
 def with_row_violations(
@@ -675,7 +665,7 @@ def with_row_violations(
     ann = (
         F.array_compact(F.array(*checks))
         if checks
-        else F.expr("array()").cast(_VIOL_STRUCT_DDL)
+        else F.expr("array()").cast(VIOLATION_STRUCT_DDL)
     )
     return df.withColumn(col_name, ann)
 

@@ -59,6 +59,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schemas import metric_columns
+
 #: total order over violation rows within one (rule_id, partition_id) group —
 #: (image_id, column, kind) is unique per rule for every row-level kind (a
 #: rule checks one column and emits at most one row per input row; composite
@@ -425,11 +427,12 @@ def violation_count_metrics(viol: DataFrame, run_id: str) -> DataFrame:
         viol.groupBy("partition_id", "rule_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .select(
-            F.lit(run_id).alias("run_id"),
-            F.col("partition_id").cast("int").alias("partition_id"),
-            F.col("rule_id"),
-            F.lit(VIOLATIONS_TOTAL).alias("metric"),
-            F.col("n").cast("double").alias("value"),
-            F.lit(None).cast("string").alias("value_str"),
+            *metric_columns(
+                run_id=run_id,
+                partition_id=F.col("partition_id").cast("int"),
+                rule_id=F.col("rule_id"),
+                metric=VIOLATIONS_TOTAL,
+                value=F.col("n").cast("double"),
+            )
         )
     )

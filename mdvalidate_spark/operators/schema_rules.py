@@ -18,12 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 from ..errors import KIND_DTYPE, KIND_EXTRA_COLUMN, KIND_MISSING_COLUMN
+from ..schemas import violations_frame
 from ..spec import SchemaRule
-
-_DDL = (
-    "run_id string, partition_id int, rule_id string, image_id string, "
-    "column string, expected string, actual string, kind string"
-)
 
 
 def schema_violations(df: DataFrame, rule: SchemaRule, run_id: str) -> DataFrame:
@@ -53,4 +49,4 @@ def schema_violations(df: DataFrame, rule: SchemaRule, run_id: str) -> DataFrame
                 rows.append(
                     (run_id, None, rule.id, name, name, None, got, KIND_EXTRA_COLUMN)
                 )
-    return df.sparkSession.createDataFrame(rows, _DDL)
+    return violations_frame(df.sparkSession, rows)

@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..errors import KIND_COUNT, KIND_MATCHER
+from ..schemas import violation_columns
 from ..spec import SequenceRule, anchor_regex
 
 
@@ -79,14 +80,15 @@ def sequence_violations(
     checked = ranked.withColumn("seg_pattern", seg_pattern)
 
     row_viols = checked.where(row_fail).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        F.col("_key").alias("image_id"),
-        F.lit(rule.column).alias("column"),
-        F.col("seg_pattern").alias("expected"),
-        F.col("_val").alias("actual"),
-        F.lit(KIND_MATCHER).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule.id,
+            image_id=F.col("_key"),
+            column=rule.column,
+            expected=F.col("seg_pattern"),
+            actual=F.col("_val"),
+            kind=KIND_MATCHER,
+        )
     )
 
     count_fail = F.col("_n") < total_min
@@ -95,18 +97,19 @@ def sequence_violations(
     group_viols = (
         checked.where((F.col("_rank") == 1) & count_fail)
         .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(None).cast("int").alias("partition_id"),
-            F.lit(rule.id).alias("rule_id"),
-            group_key.alias("image_id"),
-            F.lit(",".join(rule.group_by)).alias("column"),
-            F.lit(
-                f"sequence length in [{total_min}, {total_max}]"
-                if total_max is not None
-                else f"sequence length >= {total_min}"
-            ).alias("expected"),
-            F.col("_n").cast("string").alias("actual"),
-            F.lit(KIND_COUNT).alias("kind"),
+            *violation_columns(
+                run_id=run_id,
+                rule_id=rule.id,
+                image_id=group_key,
+                column=",".join(rule.group_by),
+                expected=(
+                    f"sequence length in [{total_min}, {total_max}]"
+                    if total_max is not None
+                    else f"sequence length >= {total_min}"
+                ),
+                actual=F.col("_n").cast("string"),
+                kind=KIND_COUNT,
+            )
         )
     )
     return row_viols.unionByName(group_viols)
@@ -159,15 +162,16 @@ def monotonic_violations(
         )
         .where(F.col("_fail"))
         .select(
-            F.lit(run_id).alias("run_id"),
-            F.lit(None).cast("int").alias("partition_id"),
-            F.lit(rule.id).alias("rule_id"),
-            F.col("_key").alias("image_id"),
-            F.lit(rule.column).alias("column"),
-            F.lit(expected).alias("expected"),
-            F.concat(
-                F.lit("prev="), F.col("_prev"), F.lit(", got="), F.col("_val")
-            ).alias("actual"),
-            F.lit(KIND_ORDER).alias("kind"),
+            *violation_columns(
+                run_id=run_id,
+                rule_id=rule.id,
+                image_id=F.col("_key"),
+                column=rule.column,
+                expected=expected,
+                actual=F.concat(
+                    F.lit("prev="), F.col("_prev"), F.lit(", got="), F.col("_val")
+                ),
+                kind=KIND_ORDER,
+            )
         )
     )

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..schemas import metrics_frame, violations_frame
 from .dedup import cosine
 
 
@@ -973,15 +974,8 @@ def _health_rule_verdict(spark, row, rule, run_id: str):
                  "usable vectors (all-zero corpus)", KIND_EMBEDDING_HEALTH)
             )
 
-    ddl_v = (
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string"
-    )
-    ddl_m = (
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string"
-    )
-    metrics = spark.createDataFrame(
+    metrics = metrics_frame(
+        spark,
         [
             (run_id, None, rule.id, "health_rows_used",
              float(row["rows_used"]), None),
@@ -996,9 +990,8 @@ def _health_rule_verdict(spark, row, rule, run_id: str):
             (run_id, None, rule.id, "health_anisotropy",
              row["anisotropy"], None),
         ],
-        ddl_m,
     )
-    return spark.createDataFrame(viol_rows, ddl_v), metrics
+    return violations_frame(spark, viol_rows), metrics
 
 
 def health_partials_ddl(dim: int) -> str:

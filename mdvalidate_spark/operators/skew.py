@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import KIND_OVER_VOLUME, KIND_UNDER_VOLUME
+from ..schemas import metrics_frame, violation_columns, violations_frame
 
 
 def top_keys(df: DataFrame, column: str, k: int = 10) -> DataFrame:
@@ -444,15 +445,8 @@ def _concentration_verdict(spark, scan, rule, run_id: str):
                  KIND_CONCENTRATION)
             )
 
-    ddl_v = (
-        "run_id string, partition_id int, rule_id string, image_id string, "
-        "column string, expected string, actual string, kind string"
-    )
-    ddl_m = (
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string"
-    )
-    metrics = spark.createDataFrame(
+    metrics = metrics_frame(
+        spark,
         [
             (run_id, None, rule.id, "concentration_top_share", top_share, None),
             (run_id, None, rule.id, "concentration_hhi", hhi, None),
@@ -462,9 +456,8 @@ def _concentration_verdict(spark, scan, rule, run_id: str):
              float(scoped), None),
             (run_id, None, rule.id, "concentration_top_value", None, top),
         ],
-        ddl_m,
     )
-    return spark.createDataFrame(viol_rows, ddl_v), metrics
+    return violations_frame(spark, viol_rows), metrics
 
 
 def _concentration_grouped(df: DataFrame, rule, run_id: str):
@@ -480,17 +473,17 @@ def _concentration_grouped(df: DataFrame, rule, run_id: str):
     )
     key = _key_expr(tuple(rule.group_by))
 
-    def head(expected):
-        return [
-            F.lit(run_id).alias("run_id"),
-            F.lit(None).cast("int").alias("partition_id"),
-            F.lit(rule.id).alias("rule_id"),
-            key.alias("image_id"),
-            F.lit(rule.column).alias("column"),
-            F.lit(expected).alias("expected"),
-        ]
+    def columns(expected, actual):
+        return violation_columns(
+            run_id=run_id,
+            rule_id=rule.id,
+            image_id=key,
+            column=rule.column,
+            expected=expected,
+            actual=actual,
+            kind=KIND_CONCENTRATION,
+        )
 
-    kind = F.lit(KIND_CONCENTRATION).alias("kind")
     bounds = []
     if rule.max_top_share is not None:
         bounds.append(f"top_share <= {rule.max_top_share}")
@@ -500,13 +493,14 @@ def _concentration_grouped(df: DataFrame, rule, run_id: str):
     measurable = F.col("n_scoped") >= rule.min_rows
     pieces = [
         stats.where(~measurable).select(
-            *head(", ".join(bounds)),
-            F.concat(
-                F.lit("unmeasurable: "),
-                F.col("n_scoped").cast("string"),
-                F.lit(f" in-scope values < min_rows={rule.min_rows}"),
-            ).alias("actual"),
-            kind,
+            *columns(
+                ", ".join(bounds),
+                F.concat(
+                    F.lit("unmeasurable: "),
+                    F.col("n_scoped").cast("string"),
+                    F.lit(f" in-scope values < min_rows={rule.min_rows}"),
+                ),
+            )
         )
     ]
     if rule.max_top_share is not None:
@@ -514,42 +508,38 @@ def _concentration_grouped(df: DataFrame, rule, run_id: str):
             stats.where(
                 measurable & (F.col("top_share") > rule.max_top_share)
             ).select(
-                *head(f"top_share <= {rule.max_top_share}"),
-                F.concat(
-                    F.lit("top value '"),
-                    F.col("top_value"),
-                    F.lit("' share="),
-                    F.format_string("%.6f", F.col("top_share")),
-                    F.lit(" ("),
-                    F.col("top_count").cast("string"),
-                    F.lit(" of "),
-                    F.col("n_scoped").cast("string"),
-                    F.lit(")"),
-                ).alias("actual"),
-                kind,
+                *columns(
+                    f"top_share <= {rule.max_top_share}",
+                    F.concat(
+                        F.lit("top value '"),
+                        F.col("top_value"),
+                        F.lit("' share="),
+                        F.format_string("%.6f", F.col("top_share")),
+                        F.lit(" ("),
+                        F.col("top_count").cast("string"),
+                        F.lit(" of "),
+                        F.col("n_scoped").cast("string"),
+                        F.lit(")"),
+                    ),
+                )
             )
         )
     if rule.max_hhi is not None:
         pieces.append(
             stats.where(measurable & (F.col("hhi") > rule.max_hhi)).select(
-                *head(f"hhi <= {rule.max_hhi}"),
-                F.concat(
-                    F.lit("hhi="),
-                    F.format_string("%.6f", F.col("hhi")),
-                    F.lit(" over "),
-                    F.col("distinct_values").cast("string"),
-                    F.lit(" distinct values"),
-                ).alias("actual"),
-                kind,
+                *columns(
+                    f"hhi <= {rule.max_hhi}",
+                    F.concat(
+                        F.lit("hhi="),
+                        F.format_string("%.6f", F.col("hhi")),
+                        F.lit(" over "),
+                        F.col("distinct_values").cast("string"),
+                        F.lit(" distinct values"),
+                    ),
+                )
             )
         )
     from functools import reduce as _reduce
 
     viol = _reduce(lambda a, b: a.unionByName(b), pieces)
-    spark = df.sparkSession
-    metrics = spark.createDataFrame(
-        [],
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string",
-    )
-    return viol, metrics
+    return viol, metrics_frame(df.sparkSession)

@@ -53,6 +53,8 @@ import math
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..schemas import metrics_frame
+
 #: hex prefix length used for the threshold compare; 8 chars = 32 bits of
 #: md5 → fraction resolution of 2^-32, plenty below any useful smoke rate
 _PREFIX = 8
@@ -133,8 +135,4 @@ def smoke_metrics(
             (run_id, None, rid, "smoke_rate_hi", hi, None),
             (run_id, None, rid, "smoke_est_total", k / fraction, None),
         ]
-    return spark.createDataFrame(
-        rows,
-        "run_id string, partition_id int, rule_id string, metric string, "
-        "value double, value_str string",
-    )
+    return metrics_frame(spark, rows)

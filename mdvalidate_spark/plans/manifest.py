@@ -22,14 +22,29 @@ from datetime import datetime, timezone
 
 PENDING = "pending"
 VALIDATED = "validated"
-FAILED = "failed"
 FINALIZED = "finalized"
 
-_RANK = {PENDING: 0, FAILED: 1, VALIDATED: 2, FINALIZED: 3}
+_RANK = {PENDING: 0, VALIDATED: 1, FINALIZED: 2}
 
 
 def _now() -> str:
     return datetime.now(timezone.utc).isoformat()
+
+
+def write_json(path: str, doc, **dump_kw) -> None:
+    """Write ``doc`` as JSON at ``path`` atomically: dump into a temp file
+    beside it, then rename it over ``path``. A crash mid-write leaves the
+    previous file (or none), never a torn one that a later load dies on."""
+    folder = os.path.dirname(path)
+    os.makedirs(folder, exist_ok=True)
+    fd, tmp = tempfile.mkstemp(dir=folder, suffix=".tmp")
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(doc, f, **dump_kw)
+        os.replace(tmp, path)
+    except BaseException:
+        os.unlink(tmp)
+        raise
 
 
 @dataclass
@@ -106,16 +121,12 @@ class Manifest:
         return os.path.join(checkpoint_dir, "manifest.json")
 
     def save(self, checkpoint_dir: str) -> None:
-        os.makedirs(checkpoint_dir, exist_ok=True)
         doc = {
             "run_id": self.run_id,
             "complete": self.complete,
             "entries": {str(k): v for k, v in self.entries.items()},
         }
-        fd, tmp = tempfile.mkstemp(dir=checkpoint_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(doc, f, indent=1)
-        os.replace(tmp, self._path(checkpoint_dir))
+        write_json(self._path(checkpoint_dir), doc, indent=1)
 
     @classmethod
     def load(cls, checkpoint_dir: str, run_id: str) -> "Manifest":

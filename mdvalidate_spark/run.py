@@ -33,7 +33,6 @@ import hashlib
 import json
 import os
 import statistics
-import tempfile
 import time
 import uuid
 import warnings
@@ -88,7 +87,16 @@ from .operators.skew import (
     concentration_rule_results_from_partials,
 )
 from .errors import KIND_OVER_VOLUME, KIND_UNDER_VOLUME, SchemaError
-from .plans.manifest import FAILED, FINALIZED, Manifest, VALIDATED
+from .plans.manifest import FINALIZED, Manifest, VALIDATED, write_json
+from .schemas import (
+    METRICS_DDL,
+    VIOLATIONS_DDL,
+    manifest_frame,
+    read_sink,
+    union_metrics,
+    union_violations,
+    violations_frame,
+)
 from .spec import (
     AssociationRule,
     BenfordRule,
@@ -111,20 +119,6 @@ from .spec import (
 )
 from .spec_io import spec_to_dict
 
-_VIOLATIONS_DDL = (
-    "run_id string, partition_id int, rule_id string, image_id string, "
-    "column string, expected string, actual string, kind string"
-)
-_METRICS_DDL = (
-    "run_id string, partition_id int, rule_id string, metric string, "
-    "value double, value_str string"
-)
-_MANIFEST_DDL = (
-    "run_id string, partition_id int, status string, rows long, "
-    "violations long, started_at string, finished_at string, seconds double"
-)
-
-
 @dataclass
 class Report:
     violations: DataFrame
@@ -136,17 +130,6 @@ class Report:
     def exit_code(self) -> int:
         """Reference main.rs:86-90 — 0 pass, 1 fail."""
         return 1 if self.errored else 0
-
-
-def _empty(spark: SparkSession, ddl: str) -> DataFrame:
-    return spark.createDataFrame([], ddl)
-
-
-def _union(dfs: list[DataFrame], spark: SparkSession, ddl: str) -> DataFrame:
-    dfs = [d for d in dfs if d is not None]
-    if not dfs:
-        return _empty(spark, ddl)
-    return reduce(lambda a, b: a.unionByName(b), dfs)
 
 
 @dataclass(frozen=True)
@@ -306,7 +289,7 @@ def _volume_violations(run: "ValidationRun", vr: VolumeRule) -> DataFrame | None
         ]
     if not rows_out:
         return None
-    return run.spark.createDataFrame(rows_out, _VIOLATIONS_DDL)
+    return violations_frame(run.spark, rows_out)
 
 
 #: finalize's evaluation of each global (group-stage) rule type →
@@ -600,8 +583,8 @@ def _drift_vs_reference(run: "ValidationRun", ref_name: str, drs: list):
                 )
             )
     return (
-        reduce(lambda a, b: a.unionByName(b), [v for v, _, _ in results]),
-        reduce(lambda a, b: a.unionByName(b), [m for _, m, _ in results]),
+        union_violations(run.spark, [v for v, _, _ in results]),
+        union_metrics(run.spark, [m for _, m, _ in results]),
         sum(n for _, _, n in results),
     )
 
@@ -1059,10 +1042,7 @@ class ValidationRun:
             "dims": self._dim_fingerprints(),
             "run_id": self.run_id,
         }
-        fd, tmp = tempfile.mkstemp(dir=fdir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump(meta, f, indent=1)
-        os.replace(tmp, os.path.join(fdir, "meta.json"))
+        write_json(os.path.join(fdir, "meta.json"), meta, indent=1)
 
     def _check_schema(self) -> int:
         """Schema-drift rules run ONCE per run, BEFORE any data stage — the
@@ -1075,10 +1055,8 @@ class ValidationRun:
         rules = self.program.stages["schema"]
         if not rules:
             return 0
-        sv = _union(
-            [schema_violations(self.df, r, self.run_id) for r in rules],
-            self.spark,
-            _VIOLATIONS_DDL,
+        sv = union_violations(
+            self.spark, [schema_violations(self.df, r, self.run_id) for r in rules]
         )
         self._schema_violations = sv.count()  # local rows ≤ #columns — no job cost
         self._violation_dfs.append(sv)
@@ -1199,7 +1177,7 @@ class ValidationRun:
         batch_viol, viol_totals = self._bounded_sink(viols, mets)
         # metric frames are small aggregates — persist so report-time reads
         # never re-run the capture groupBys / pixel derivations
-        batch_met = self._keep(_union(mets, self.spark, _METRICS_DDL))
+        batch_met = self._keep(union_metrics(self.spark, mets))
 
         # per-partition bookkeeping in ONE aggregation each; the two collects
         # are independent → submitted concurrently (row-count scan overlaps
@@ -1257,7 +1235,7 @@ class ValidationRun:
         of an aggregation-only pass — a second evaluation of the rule
         expressions instead of materializing up to one violation row per
         input row."""
-        full = _union(viols, self.spark, _VIOLATIONS_DDL)
+        full = union_violations(self.spark, viols)
         cap = self.spec.max_violations_per_rule
         if cap is None:
             return self._keep(full), None
@@ -1284,16 +1262,14 @@ class ValidationRun:
             nv = viol_counts.get(pid, 0)
             self.manifest.mark(
                 pid,
-                FAILED if nv > 0 else VALIDATED,
+                VALIDATED,
                 rows=row_counts.get(pid, 0),
                 violations=nv,
                 seconds=batch_seconds,
             )
-        # a failed partition is still *validated* for resume purposes — it
-        # won't be re-run; FAILED only affects the report flag. Promote:
-        for pid in partitions:
-            if self.manifest.entries[pid]["status"] == FAILED:
-                self.manifest.entries[pid]["status"] = VALIDATED
+            # a red partition is still validated for resume purposes (it
+            # won't be re-run); the annotation is what reports list
+            if nv > 0:
                 self.manifest.entries[pid]["failed"] = True
         self._save_manifest()
 
@@ -1339,9 +1315,7 @@ class ValidationRun:
         elif batch_df is not None:
             edges = drift_ops.compute_edges(batch_df, rule)
             if path:
-                os.makedirs(self.checkpoint_dir, exist_ok=True)
-                with open(path, "w") as f:
-                    json.dump(edges, f)
+                write_json(path, edges)
         else:
             raise RuntimeError(
                 f"rule {rule.id!r}: drift partials exist but the frozen-edge "
@@ -1439,14 +1413,14 @@ class ValidationRun:
         width = 2 * self.spark.sparkContext.defaultParallelism
         old_viols, old_mets = list(self._violation_dfs), list(self._metric_dfs)
 
-        def _consolidate(pieces: list[DataFrame], ddl: str) -> DataFrame:
+        def _consolidate(pieces: list[DataFrame], union: Callable) -> DataFrame:
             # a single-batch run has nothing to consolidate: its one piece is
             # already a persisted (and counted) frame — re-caching a coalesced
             # copy would pay a full extra pass for an identical cache
             if len(pieces) == 1:
                 return pieces[0]
             return self._keep(
-                _union(pieces, self.spark, ddl).coalesce(width)
+                union(self.spark, pieces).coalesce(width)
             )
 
         def _desc(label, fn, *a):
@@ -1470,8 +1444,8 @@ class ValidationRun:
             uc_viol, uc_totals = (
                 self._bounded_sink(viols, mets) if viols else (None, None)
             )
-            batch_viol_c = _consolidate(old_viols, _VIOLATIONS_DDL)
-            batch_met_c = _consolidate(old_mets, _METRICS_DDL)
+            batch_viol_c = _consolidate(old_viols, union_violations)
+            batch_met_c = _consolidate(old_mets, union_metrics)
             bv_fut = pool.submit(
                 _desc, "finalize: consolidate batch violations",
                 batch_viol_c.count,
@@ -1492,7 +1466,7 @@ class ValidationRun:
                 pieces = [p for p in pieces if p is not None]
                 if not pieces:
                     return None
-                pm = self._keep(_union(pieces, self.spark, _METRICS_DDL))
+                pm = self._keep(union_metrics(self.spark, pieces))
                 self.spark.sparkContext.setJobDescription(
                     "finalize: global metrics union"
                 )
@@ -1540,8 +1514,8 @@ class ValidationRun:
             mets.append(m)
             n_global += n  # counted driver-side when the rows were built
 
-        g_viol = self._keep(_union(viols, self.spark, _VIOLATIONS_DDL))
-        g_met = _union(mets, self.spark, _METRICS_DDL)
+        g_viol = self._keep(union_violations(self.spark, viols))
+        g_met = union_metrics(self.spark, mets)
 
         self._persist_global(g_viol, g_met)
         self._violation_dfs = [batch_viol_c, g_viol]
@@ -1592,11 +1566,9 @@ class ValidationRun:
         # small global cache) — already compact and fully materialized, so
         # report reads are cache hits with a trivial plan. Pre-finalize
         # (incremental inspection mid-run) it is the raw piece list.
-        violations = _union(self._violation_dfs, self.spark, _VIOLATIONS_DDL)
-        metrics = _union(self._metric_dfs, self.spark, _METRICS_DDL)
-        manifest_df = self.spark.createDataFrame(
-            self.manifest.rows(), _MANIFEST_DDL
-        )
+        violations = union_violations(self.spark, self._violation_dfs)
+        metrics = union_metrics(self.spark, self._metric_dfs)
+        manifest_df = manifest_frame(self.spark, self.manifest.rows())
         soft = {
             r.id: r.max_violation_rate
             for r in self.spec.rules
@@ -1707,14 +1679,12 @@ class ValidationRun:
             return
         validated = F.col("partition_id").isin(list(done))
         for name, ddl, target in (
-            ("violations", _VIOLATIONS_DDL, self._violation_dfs),
-            ("metrics", _METRICS_DDL, self._metric_dfs),
+            ("violations", VIOLATIONS_DDL, self._violation_dfs),
+            ("metrics", METRICS_DDL, self._metric_dfs),
         ):
             path = self._sink(name)
             if os.path.exists(path):
-                target.append(
-                    self.spark.read.schema(ddl).parquet(path).where(validated)
-                )
+                target.append(read_sink(self.spark, ddl, path).where(validated))
         # incremental partials: explicit schema, never inference (see
         # _Partials); only validated partitions' partials count
         for fam in _INCREMENTAL_FAMILIES:

@@ -1,59 +1,121 @@
-"""Result-table schemas (FIXTURES.md §3).
+"""The output contract: the violations, metrics and manifest row formats.
 
-violations mirrors the reference's NodeContentMismatch payload
-{expected, actual, kind} (errors.rs:332-341) plus row/rule addressing;
-metrics is the long-form analog of the matches-JSON capture object
-(validator.rs:33-36); manifest is the resume checkpoint, the analog of
-NodePosPair (node_pos_pair.rs:4-52).
+This is the only module that knows them (FIXTURES.md §3). violations
+mirrors the reference's NodeContentMismatch payload {expected, actual,
+kind} (errors.rs:332-341) plus row/rule addressing; metrics is the
+long-form analog of the matches-JSON capture object (validator.rs:33-36);
+manifest is the resume checkpoint, the analog of NodePosPair
+(node_pos_pair.rs:4-52). A ``Report`` carries one frame of each.
+
+Every producer builds its rows through the constructors below: a frame of
+driver-built row tuples (``violations_frame``/``metrics_frame``/
+``manifest_frame``; empty when no rows), a union of contract frames
+(``union_violations``/``union_metrics``; typed-empty when none), a
+persisted sink read back in contract order (``read_sink``), and the
+Spark-side projections ``violation_columns``/``metric_columns``, whose
+keyword arguments are the column names and whose result is the column list
+in contract order. In a projection a Column passes through unchanged, a
+plain Python value becomes a literal, and None becomes a typed null —
+``partition_id`` (a global rule's row) and ``value_str`` default to it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
+from functools import reduce
 
-VIOLATIONS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType()),
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("rule_id", T.StringType()),
-        T.StructField("image_id", T.StringType()),
-        T.StructField("column", T.StringType()),
-        T.StructField("expected", T.StringType()),
-        T.StructField("actual", T.StringType()),
-        T.StructField("kind", T.StringType()),
-    ]
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+VIOLATIONS_DDL = (
+    "run_id string, partition_id int, rule_id string, image_id string, "
+    "column string, expected string, actual string, kind string"
+)
+METRICS_DDL = (
+    "run_id string, partition_id int, rule_id string, metric string, "
+    "value double, value_str string"
+)
+MANIFEST_DDL = (
+    "run_id string, partition_id int, status string, rows long, "
+    "violations long, started_at string, finished_at string, seconds double"
+)
+#: the per-row violation structs of the fused row pass, before explode
+VIOLATION_STRUCT_DDL = (
+    "array<struct<rule_id:string,column:string,expected:string,"
+    "actual:string,kind:string>>"
 )
 
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType()),
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("rule_id", T.StringType()),
-        T.StructField("metric", T.StringType()),
-        T.StructField("value", T.DoubleType()),
-        T.StructField("value_str", T.StringType()),
-    ]
-)
 
-MANIFEST_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType()),
-        T.StructField("partition_id", T.IntegerType()),
-        T.StructField("status", T.StringType()),
-        T.StructField("rows", T.LongType()),
-        T.StructField("violations", T.LongType()),
-        T.StructField("started_at", T.StringType()),
-        T.StructField("finished_at", T.StringType()),
-    ]
-)
+def violations_frame(spark: SparkSession, rows=()) -> DataFrame:
+    """Violations frame of driver-built row tuples in contract order."""
+    return spark.createDataFrame(list(rows), VIOLATIONS_DDL)
 
-# struct used inside the fused row pass before explode
-VIOLATION_STRUCT = T.StructType(
-    [
-        T.StructField("rule_id", T.StringType()),
-        T.StructField("column", T.StringType()),
-        T.StructField("expected", T.StringType()),
-        T.StructField("actual", T.StringType()),
-        T.StructField("kind", T.StringType()),
-    ]
-)
+
+def metrics_frame(spark: SparkSession, rows=()) -> DataFrame:
+    """Metrics frame of driver-built row tuples in contract order."""
+    return spark.createDataFrame(list(rows), METRICS_DDL)
+
+
+def manifest_frame(spark: SparkSession, rows=()) -> DataFrame:
+    """Manifest frame of ``Manifest.rows()``."""
+    return spark.createDataFrame(list(rows), MANIFEST_DDL)
+
+
+def _union(spark: SparkSession, ddl: str, frames) -> DataFrame:
+    frames = [f for f in frames if f is not None]
+    if not frames:
+        return spark.createDataFrame([], ddl)
+    return reduce(lambda a, b: a.unionByName(b), frames)
+
+
+def union_violations(spark: SparkSession, frames) -> DataFrame:
+    """Union of violations frames (None skipped); typed-empty when none."""
+    return _union(spark, VIOLATIONS_DDL, frames)
+
+
+def union_metrics(spark: SparkSession, frames) -> DataFrame:
+    """Union of metrics frames (None skipped); typed-empty when none."""
+    return _union(spark, METRICS_DDL, frames)
+
+
+def _fields(ddl: str) -> list[tuple[str, str]]:
+    return [tuple(f.split(" ")) for f in ddl.split(", ")]
+
+
+def read_sink(spark: SparkSession, ddl: str, path: str) -> DataFrame:
+    """A persisted contract frame read with its declared schema, columns in
+    contract order: a sink written with ``partitionBy("partition_id")``
+    reads that column last."""
+    return spark.read.schema(ddl).parquet(path).select(
+        *[name for name, _ in _fields(ddl)]
+    )
+
+
+def _columns(ddl: str, values: tuple) -> list[Column]:
+    out = []
+    for (name, typ), v in zip(_fields(ddl), values):
+        if v is None:
+            v = F.lit(None).cast(typ)
+        elif not isinstance(v, Column):
+            v = F.lit(v)
+        out.append(v.alias(name))
+    return out
+
+
+def violation_columns(
+    *, run_id, rule_id, image_id, column, expected, actual, kind,
+    partition_id=None,
+) -> list[Column]:
+    """One violation row per input row, as columns in contract order."""
+    return _columns(
+        VIOLATIONS_DDL,
+        (run_id, partition_id, rule_id, image_id, column, expected, actual, kind),
+    )
+
+
+def metric_columns(
+    *, run_id, rule_id, metric, value, partition_id=None, value_str=None
+) -> list[Column]:
+    """One metric row per input row, as columns in contract order."""
+    return _columns(
+        METRICS_DDL, (run_id, partition_id, rule_id, metric, value, value_str)
+    )

@@ -25,24 +25,39 @@ from __future__ import annotations
 
 import json
 import os
-import tempfile
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import StructType
 
 from ..compile import compile_spec, scoped_spec
 from ..errors import SchemaError
 from ..operators.row_rules import with_partition_id
-from ..run import (
-    _METRICS_DDL,
-    _VIOLATIONS_DDL,
-    ValidationRun,
-    _require_dims,
-    _union,
-)
+from ..plans.manifest import write_json
+from ..run import ValidationRun, _require_dims
+from ..schemas import union_metrics, union_violations
 from ..spec import Spec, VolumeRule
 
 #: a volume rule judges a partition manifest file mode never keeps
 _REFUSED = (VolumeRule,)
+#: the footer key under which Spark's parquet writer stores its schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_schema(path: str) -> StructType | None:
+    """A parquet file's Spark schema from its footer alone, read
+    driver-side (no job): the schema Spark's writer stored, else the Arrow
+    schema's Spark equivalent; None for an Arrow type with no conversion
+    (Spark's own reader still reads the file, and the poll lints then)."""
+    arrow = pq.read_schema(path)
+    stored = (arrow.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        return StructType.fromJson(json.loads(stored))
+    try:
+        return from_arrow_schema(arrow)
+    except TypeError:
+        return None
 
 
 class FileIncrementalValidator:
@@ -63,7 +78,6 @@ class FileIncrementalValidator:
                     f"rule {r.id!r}: {r.kind} rules are not evaluated by "
                     "FileIncrementalValidator — validate with ValidationRun"
                 )
-        _require_dims(compile_spec(spec), self.dims)
         self.spark = spark
         self.spec = spec
         self.table_dir = table_dir
@@ -72,6 +86,17 @@ class FileIncrementalValidator:
         self._validated_files: set[str] = set()
         self._red = False
         self._load_state()
+        # lint against the first pending file's footer, so a typo'd
+        # expression is refused before any job; each poll lints again
+        # against the files it reads
+        pending = self.pending_files()
+        footer = _footer_schema(pending[0]) if pending else None
+        schema = (
+            with_partition_id(spark.createDataFrame([], footer), spec).schema
+            if footer is not None
+            else None
+        )
+        _require_dims(compile_spec(spec, schema), self.dims)
         self._runs: list[ValidationRun] = []  # one batch-stage run per poll
         self._run: ValidationRun | None = None  # finalize's global pass
 
@@ -106,11 +131,9 @@ class FileIncrementalValidator:
         p = self._state_path()
         if not p:
             return
-        os.makedirs(self.checkpoint_dir, exist_ok=True)
-        fd, tmp = tempfile.mkstemp(dir=self.checkpoint_dir, suffix=".tmp")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"run_id": self.run_id, "files": sorted(self._validated_files)}, f)
-        os.replace(tmp, p)
+        write_json(
+            p, {"run_id": self.run_id, "files": sorted(self._validated_files)}
+        )
 
     # ------------------------------------------------------------- poll
 
@@ -178,7 +201,4 @@ class FileIncrementalValidator:
             rep = self._run.finalize()
             viols.append(rep.violations)
             mets.append(rep.metrics)
-        return (
-            _union(viols, self.spark, _VIOLATIONS_DDL),
-            _union(mets, self.spark, _METRICS_DDL),
-        )
+        return union_violations(self.spark, viols), union_metrics(self.spark, mets)

@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..errors import KIND_DUPLICATE, KIND_GAP
+from ..schemas import violation_columns
 
 _OUT_SCHEMA = "key string, occurrence long"
 _STATE_SCHEMA = "seen long"
@@ -211,35 +212,34 @@ def stream_gap_violations(
             else GroupStateTimeout.NoTimeout
         ),
     )
+    actual = F.when(
+        F.col("next_epoch_ms").isNull(),
+        F.format_string(
+            "ongoing: silent > %.3fs since %d",
+            F.lit(float(min_gap_seconds)),
+            F.col("prev_epoch_ms"),
+        ),
+    ).otherwise(
+        F.format_string(
+            "gap_s=%.3f [%d .. %d]",
+            (F.col("next_epoch_ms") - F.col("prev_epoch_ms")) / F.lit(1000.0),
+            F.col("prev_epoch_ms"),
+            F.col("next_epoch_ms"),
+        )
+    )
     return gaps.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule_id).alias("rule_id"),
-        F.col("key").alias("image_id"),
-        F.lit(ts_col).alias("column"),
-        F.lit(
-            f"no silence > {min_gap_seconds}s between consecutive "
-            f"{ts_col} values"
-        ).alias("expected"),
-        F.when(
-            F.col("next_epoch_ms").isNull(),
-            F.format_string(
-                "ongoing: silent > %.3fs since %d",
-                F.lit(float(min_gap_seconds)),
-                F.col("prev_epoch_ms"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule_id,
+            image_id=F.col("key"),
+            column=ts_col,
+            expected=(
+                f"no silence > {min_gap_seconds}s between consecutive "
+                f"{ts_col} values"
             ),
+            actual=actual,
+            kind=KIND_GAP,
         )
-        .otherwise(
-            F.format_string(
-                "gap_s=%.3f [%d .. %d]",
-                (F.col("next_epoch_ms") - F.col("prev_epoch_ms"))
-                / F.lit(1000.0),
-                F.col("prev_epoch_ms"),
-                F.col("next_epoch_ms"),
-            )
-        )
-        .alias("actual"),
-        F.lit(KIND_GAP).alias("kind"),
     )
 
 
@@ -278,14 +278,13 @@ def stream_duplicate_violations(
         ),
     )
     return dups.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule_id).alias("rule_id"),
-        F.col("key").alias("image_id"),
-        F.lit(key_column).alias("column"),
-        F.lit("unique").alias("expected"),
-        F.concat(F.lit("occurrence="), F.col("occurrence").cast("string")).alias(
-            "actual"
-        ),
-        F.lit(KIND_DUPLICATE).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule_id,
+            image_id=F.col("key"),
+            column=key_column,
+            expected="unique",
+            actual=F.concat(F.lit("occurrence="), F.col("occurrence").cast("string")),
+            kind=KIND_DUPLICATE,
+        )
     )

@@ -20,7 +20,6 @@ from __future__ import annotations
 import json
 import math
 import os
-import tempfile
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -35,14 +34,15 @@ from ..operators.skew import (
     micro_share_expr,
     volume_anomaly_from_counts,
 )
-from ..run import (
-    _INCREMENTAL_FAMILIES,
-    _MANIFEST_DDL,
-    _METRICS_DDL,
-    _VIOLATIONS_DDL,
-    ValidationRun,
-    _require_dims,
-    _union,
+from ..plans.manifest import write_json
+from ..run import _INCREMENTAL_FAMILIES, ValidationRun, _require_dims
+from ..schemas import (
+    MANIFEST_DDL,
+    METRICS_DDL,
+    VIOLATIONS_DDL,
+    union_metrics,
+    union_violations,
+    violation_columns,
 )
 from ..spec import CountRule, DriftRule, Spec
 
@@ -120,11 +120,9 @@ def stream_validate(
     dims = dims or {}
     _refuse_unevaluated(spec)
     _require_dims(compile_spec(spec, with_partition_id(stream_df, spec).schema), dims)
-    os.makedirs(checkpoint_dir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(dir=checkpoint_dir, suffix=".tmp")
-    with os.fdopen(fd, "w") as f:
-        f.write(stream_df.schema.json())
-    os.replace(tmp, os.path.join(checkpoint_dir, "schema.json"))
+    write_json(
+        os.path.join(checkpoint_dir, "schema.json"), stream_df.schema.jsonValue()
+    )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         run = ValidationRun(
@@ -168,7 +166,7 @@ def stream_finalize(spark, spec: Spec, checkpoint_dir: str, run_id: str = "strea
     _refuse_unevaluated(spec)
     done = [
         r["batch_id"]
-        for r in _read_sink(spark, checkpoint_dir, "manifest", _MANIFEST_DDL)
+        for r in _read_sink(spark, checkpoint_dir, "manifest", MANIFEST_DDL)
         .select("batch_id")
         .distinct()
         .collect()
@@ -181,8 +179,8 @@ def stream_finalize(spark, spec: Spec, checkpoint_dir: str, run_id: str = "strea
             .drop("batch_id")
         )
 
-    viols = [finished("violations", _VIOLATIONS_DDL)]
-    mets = [finished("metrics", _METRICS_DDL)]
+    viols = [finished("violations", VIOLATIONS_DDL)]
+    mets = [finished("metrics", METRICS_DDL)]
     # after the refusal above, a global-stage rule is an incremental one
     merged = scoped_spec(spec, "global")
     if merged.rules:
@@ -203,10 +201,7 @@ def stream_finalize(spark, spec: Spec, checkpoint_dir: str, run_id: str = "strea
         mets.append(rep.metrics)
         # the frames recompute from the sinks when read
         run.release()
-    return (
-        _union(viols, spark, _VIOLATIONS_DDL),
-        _union(mets, spark, _METRICS_DDL),
-    )
+    return union_violations(spark, viols), union_metrics(spark, mets)
 
 
 def stream_row_violations(
@@ -253,14 +248,15 @@ def windowed_count_rule(
         else F.col("win.start").cast("string")
     )
     return counted.where(fail).select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        key.alias("image_id"),
-        F.lit(",".join(rule.group_by) or "window").alias("column"),
-        F.lit(f"count in [{rule.min}, {rule.max}]").alias("expected"),
-        F.col("n").cast("string").alias("actual"),
-        F.lit("count").alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule.id,
+            image_id=key,
+            column=",".join(rule.group_by) or "window",
+            expected=f"count in [{rule.min}, {rule.max}]",
+            actual=F.col("n").cast("string"),
+            kind="count",
+        )
     )
 
 
@@ -325,14 +321,15 @@ def windowed_drift_rule(
             terms.append(F.abs(cum_p - F.lit(cum_q)))
         stat = F.greatest(*terms) if len(terms) > 1 else terms[0]
     return counted.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        F.col("win.start").cast("string").alias("image_id"),
-        F.lit(rule.expr or rule.column).alias("column"),
-        F.lit(f"{rule.method} <= {rule.threshold}").alias("expected"),
-        F.round(stat, 6).cast("string").alias("actual"),
-        F.lit("drift").alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule.id,
+            image_id=F.col("win.start").cast("string"),
+            column=rule.expr or rule.column,
+            expected=f"{rule.method} <= {rule.threshold}",
+            actual=F.round(stat, 6).cast("string"),
+            kind="drift",
+        )
     ).where(stat > rule.threshold)
 
 
@@ -351,7 +348,7 @@ def stream_volume_anomaly(
     the batch id, kind ∈ {over_volume, under_volume}); ``min_batches``
     plays ``min_partitions``' role."""
     counts = (
-        _read_sink(spark, checkpoint_dir, "manifest", _MANIFEST_DDL)
+        _read_sink(spark, checkpoint_dir, "manifest", MANIFEST_DDL)
         .groupBy("batch_id")
         .agg(F.sum("rows").cast("double").alias("n_rows"))
         .select(F.col("batch_id").cast("string").alias("partition"), "n_rows")
@@ -500,14 +497,15 @@ def windowed_concentration_rule(
         ).alias("_v"),
     )
     return packed.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(None).cast("int").alias("partition_id"),
-        F.lit(rule.id).alias("rule_id"),
-        F.col("win.start").cast("string").alias("image_id"),
-        F.lit(rule.column).alias("column"),
-        F.col("_v.e").alias("expected"),
-        F.col("_v.a").alias("actual"),
-        F.lit(KIND_CONCENTRATION).alias("kind"),
+        *violation_columns(
+            run_id=run_id,
+            rule_id=rule.id,
+            image_id=F.col("win.start").cast("string"),
+            column=rule.column,
+            expected=F.col("_v.e"),
+            actual=F.col("_v.a"),
+            kind=KIND_CONCENTRATION,
+        )
     )
 
 

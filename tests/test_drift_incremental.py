@@ -89,6 +89,44 @@ def test_resume_reloads_edges_and_partials(spark, images, tmp_path):
     assert _stats(m2) == got
 
 
+def test_torn_edges_write_leaves_a_resumable_checkpoint(
+    spark, images, tmp_path, monkeypatch
+):
+    """A crash while the first batch persists its frozen edges must not
+    leave a truncated drift_edges file: the reopened run validates and
+    matches an uninterrupted run with the same batches."""
+    import json
+    import os
+
+    spec = Spec(rules=(_rule(True),), key_column="image_id", n_partitions=8)
+    ckpt = str(tmp_path / "ck")
+
+    def torn_dump(obj, fp, *a, **kw):
+        fp.write(json.dumps(obj)[:7])
+        raise OSError("disk full")
+
+    with monkeypatch.context() as m:
+        m.setattr(json, "dump", torn_dump)
+        with pytest.raises(OSError, match="disk full"):
+            ValidationRun(
+                spark, spec, images, run_id="d-torn", checkpoint_dir=ckpt
+            ).validate(batch_size=3)
+    assert not os.path.exists(os.path.join(ckpt, "drift_edges_sw_w.json"))
+
+    rep = ValidationRun(
+        spark, spec, images, run_id="d-torn", checkpoint_dir=ckpt
+    ).validate(batch_size=3)
+    ref = ValidationRun(
+        spark, spec, images, run_id="d-torn",
+        checkpoint_dir=str(tmp_path / "ref"),
+    ).validate(batch_size=3)
+    assert _stats(rep.metrics) == _stats(ref.metrics)
+    assert len(_stats(rep.metrics)) == 8
+    assert sorted(map(tuple, rep.violations.collect())) == sorted(
+        map(tuple, ref.violations.collect())
+    )
+
+
 def test_categorical_incremental_sweep_parity(spark, images):
     # categorical bins (top-N categories) freeze exactly like numeric
     # edges; merged partials must equal the one-pass categorical sweep

@@ -32,3 +32,36 @@ def test_pyfiles_zip_imports_standalone(tmp_path):
         timeout=120,
     )
     assert "ZIPOK 1" in out.stdout, (out.stdout, out.stderr)
+
+
+def test_output_contract_is_declared_in_schemas_only():
+    """The violations and metrics DDLs and the typed-null ``partition_id``
+    projection are spelled out in ``schemas.py`` alone: every other module
+    builds its rows through it, so a change to the output format is one
+    edit."""
+    import ast
+    import re
+
+    from mdvalidate_spark import schemas
+
+    pkg = os.path.dirname(schemas.__file__)
+    typed_null = 'lit(None).cast("int").alias("partition_id")'
+    offenders = []
+    for root, _, names in os.walk(pkg):
+        for name in names:
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == schemas.__file__:
+                continue
+            with open(path) as f:
+                src = f.read()
+            literals = [
+                n.value
+                for n in ast.walk(ast.parse(src))
+                if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            ]
+            for ddl in (schemas.VIOLATIONS_DDL, schemas.METRICS_DDL):
+                if any(ddl in s for s in literals):
+                    offenders.append((os.path.relpath(path, pkg), ddl[:40]))
+            if typed_null in re.sub(r"\s", "", src):
+                offenders.append((os.path.relpath(path, pkg), typed_null))
+    assert offenders == []

@@ -3,6 +3,7 @@ Structured Streaming row rules / windowed count bounds."""
 
 import os
 
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -1594,15 +1595,53 @@ def test_stream_validate_refuses_a_typod_expression_before_the_query(spark, tmp_
 
 def test_incremental_first_poll_lints_the_global_rules(spark, tmp_path):
     """A global rule's typo'd expression fails the first poll against the
-    table's schema, not the EOF pass after every file was validated."""
+    table's schema, not the EOF pass after every file was validated. The
+    file lands after construction, so only the poll can see its schema."""
     base = str(tmp_path / "arrivals")
-    synthetic_images(spark, 20, with_bytes=False).write.parquet(
-        os.path.join(base, "chunk0")
-    )
     spec = Spec(
         rules=(UniqueRule("uq", columns=("image_id",), when="lenght(caption) > 0"),),
         key_column="image_id",
     )
     v = FileIncrementalValidator(spark, spec, base, run_id="lint")
+    synthetic_images(spark, 20, with_bytes=False).write.parquet(
+        os.path.join(base, "chunk0")
+    )
     with pytest.raises(SchemaError, match="'uq': when predicate"):
         v.poll()
+
+
+@pytest.mark.parametrize("spark_footer", [True, False], ids=["spark", "arrow"])
+def test_incremental_init_lints_against_the_pending_footer(
+    spark, tmp_path, spark_footer
+):
+    """With a file already pending, construction reads its parquet footer
+    driver-side and refuses a typo'd expression before any Spark job —
+    from the schema Spark's writer stored, or from the Arrow schema of a
+    file another writer made."""
+    import pyarrow.parquet as pq
+
+    base = tmp_path / "arrivals"
+    frame = synthetic_images(spark, 20, with_bytes=False)
+    if spark_footer:
+        frame.write.parquet(str(base / "chunk0"))
+    else:
+        base.mkdir()
+        pq.write_table(
+            pa.Table.from_pandas(frame.toPandas(), preserve_index=False),
+            str(base / "chunk0.parquet"),
+        )
+    spec = Spec(
+        rules=(UniqueRule("uq", columns=("image_id",), when="lenght(caption) > 0"),),
+        key_column="image_id",
+    )
+    j0 = spark.sparkContext._jsc.sc().dagScheduler().nextJobId()
+    with pytest.raises(SchemaError, match="'uq': when predicate"):
+        FileIncrementalValidator(spark, spec, str(base), run_id="lint")
+    assert spark.sparkContext._jsc.sc().dagScheduler().nextJobId() - j0 == 0
+    # the same spec with the expression fixed constructs and validates
+    ok = Spec(
+        rules=(UniqueRule("uq", columns=("image_id",), when="length(caption) > 0"),),
+        key_column="image_id",
+    )
+    v = FileIncrementalValidator(spark, ok, str(base), run_id="lint")
+    assert v.poll() == 0

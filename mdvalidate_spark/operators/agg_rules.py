@@ -23,7 +23,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import KIND_COUNT, KIND_DUPLICATE
-from ..schemas import metric_columns, metrics_frame, violation_columns, violations_frame
+from ..schemas import (
+    local_frame,
+    metric_columns,
+    metrics_frame,
+    violation_columns,
+    violations_frame,
+)
 from ..spec import ColumnStatsRule, CountRule, UniqueRule, _require_numeric
 
 
@@ -195,8 +201,10 @@ def count_violations(
         df = df.where(F.expr(rule.when))
     counted = df.groupBy(*group_cols).agg(F.count(F.lit(1)).alias("n"))
     if not rule.group_by and rule.min is not None and expected_partitions:
-        universe_df = df.sparkSession.createDataFrame(
-            [(int(p),) for p in expected_partitions], "partition_id int"
+        universe_df = local_frame(
+            df.sparkSession,
+            "partition_id int",
+            [(int(p),) for p in expected_partitions],
         )
         missing = universe_df.join(counted, "partition_id", "left_anti").select(
             "partition_id", F.lit(0).cast("long").alias("n")
@@ -909,7 +917,7 @@ def capture_rows(df: DataFrame, rules, run_id: str, key_column: str) -> DataFram
         "rank long, value string"
     )
     if not rules:
-        return df.sparkSession.createDataFrame([], ddl)
+        return local_frame(df.sparkSession, ddl)
 
     outs: list[DataFrame] = []
     for r in rules:

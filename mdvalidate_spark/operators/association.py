@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import SchemaError
-from ..schemas import metrics_frame, violations_frame
+from ..schemas import local_frame, metrics_frame, violations_frame
 from .drift import psi
 
 # contingency cells above this are a refusal, not a silent truncation: two
@@ -117,22 +117,11 @@ def _profile_frame(
     spark, cells: list, col_a: str, col_b: str, max_cells: int, what: str
 ) -> DataFrame:
     n, n_a, n_b, dof, chi2, v = _chi2(cells, max_cells, what)
-    return spark.createDataFrame(
-        [
-            (
-                col_a,
-                col_b,
-                n,
-                len(cells),
-                n_a,
-                n_b,
-                dof,
-                round(chi2, 3),
-                round(v, 6),
-            )
-        ],
+    return local_frame(
+        spark,
         "col_a string, col_b string, n_rows long, n_cells long, "
         "card_a long, card_b long, dof long, chi2 double, cramers_v double",
+        [(col_a, col_b, n, len(cells), n_a, n_b, dof, round(chi2, 3), round(v, 6))],
     )
 
 
@@ -328,7 +317,11 @@ def association_drift(
     rb, cb = _marg(rmap, 1), _marg(cmap, 1)
     psi_a = _psi_over(sorted(set(ra) | set(ca)), ra, ca)
     psi_b = _psi_over(sorted(set(rb) | set(cb)), rb, cb)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
+        "col_a string, col_b string, n_ref long, n_cand long, n_cells long, "
+        "joint_psi double, marginal_psi_a double, marginal_psi_b double, "
+        "coupling_excess double",
         [
             (
                 col_a,
@@ -342,7 +335,4 @@ def association_drift(
                 round(joint - max(psi_a, psi_b), 3),
             )
         ],
-        "col_a string, col_b string, n_ref long, n_cand long, n_cells long, "
-        "joint_psi double, marginal_psi_a double, marginal_psi_b double, "
-        "coupling_excess double",
     )

@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import SchemaError
-from ..schemas import metrics_frame, violations_frame
+from ..schemas import local_frame, metrics_frame, violations_frame
 from .util import round6 as _r6
 
 # round(log10(1 + 1/d), 6) — fixed literals, identical in both engines
@@ -133,10 +133,11 @@ def _report_frame(spark, rows: int, counts: dict, column: str, tol: float,
         exp = BENFORD_EXPECTED[d]
         dev = _r6(abs(share - exp))
         out.append((d, rows, scoped, counts[d], share, exp, dev, dev <= tol))
-    return spark.createDataFrame(
-        out,
+    return local_frame(
+        spark,
         "digit int, rows long, n_scoped long, n long, observed_share double, "
         "expected_share double, abs_dev double, within_tol boolean",
+        out,
     )
 
 
@@ -346,7 +347,8 @@ def benford_mad(
     rep = benford_report(df, column, tol=MAD_MARGINAL, min_rows=min_rows)
     rows = rep.collect()
     mad = _r6(sum(r["abs_dev"] for r in rows) / 9.0)
-    return df.sparkSession.createDataFrame(
-        [(column, rows[0]["rows"], rows[0]["n_scoped"], mad, mad <= MAD_MARGINAL)],
+    return local_frame(
+        df.sparkSession,
         "column string, rows long, n_scoped long, mad double, conforms boolean",
+        [(column, rows[0]["rows"], rows[0]["n_scoped"], mad, mad <= MAD_MARGINAL)],
     )

@@ -20,7 +20,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..errors import KIND_DRIFT
-from ..schemas import metrics_frame, violations_frame
+from ..schemas import local_frame, metrics_frame, violations_frame
 from ..spec import DriftRule
 
 _EPS = 1e-6
@@ -723,7 +723,7 @@ def profile_snapshot(
                 rows.append((r.id, "edge", j, float(b), None))
         for j, n in enumerate(hist[i]):
             rows.append((r.id, "hist", j, float(n), None))
-    return ref.sparkSession.createDataFrame(rows, SNAPSHOT_DDL)
+    return local_frame(ref.sparkSession, SNAPSHOT_DDL, rows)
 
 
 def drift_vs_snapshot(

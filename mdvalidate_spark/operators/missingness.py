@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import SchemaError
+from ..schemas import local_frame
 from .util import round6 as _r6
 
 MAX_MISSINGNESS_COLS = 32
@@ -95,10 +96,11 @@ def null_correlation(
             _r6((n * both - na * nb) / math.sqrt(denom)) if denom > 0 else None
         )
         out.append((a, b, n, na, nb, both, jac, phi))
-    return df.sparkSession.createDataFrame(
-        out,
+    return local_frame(
+        df.sparkSession,
         "col_a string, col_b string, rows long, null_a long, null_b long, "
         "null_both long, jaccard double, phi double",
+        out,
     )
 
 

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import SchemaError
+from ..schemas import local_frame
 from .util import round6 as _r6
 
 MAX_MIX_GROUPS = 100_000
@@ -169,10 +170,11 @@ def mixture_report(
         dev = _r6(abs(share - target))
         out.append((g, weight, share, target, dev, dev <= tol))
     spark = df.sparkSession
-    return spark.createDataFrame(
-        out,
+    return local_frame(
+        spark,
         "group_value string, observed_weight double, observed_share double, "
         "target_share double, abs_dev double, within_tol boolean",
+        out,
     )
 
 

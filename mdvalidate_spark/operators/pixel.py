@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 
 from ..errors import KIND_DEGENERATE, KIND_PIXEL
 from ..functions import codec
-from ..schemas import metric_columns, violation_columns
+from ..schemas import local_frame, metric_columns, violation_columns
 from ..spec import PixelRule
 
 log = logging.getLogger(__name__)
@@ -469,7 +469,7 @@ def _pixel_native(spark, files, rule: PixelRule, key_column: str, partitions,
         # of a batched run streams the WHOLE table's bytes through workers
         splits = _overlapping_splits(files, set(partitions), footer_cache)
         if not splits:
-            return spark.createDataFrame([], schema)
+            return local_frame(spark, schema)
     key_c, bytes_c = key_column, rule.bytes_column
     w_c, h_c, fmt_c, ph_c = (
         rule.w_column, rule.h_column, rule.fmt_column, rule.phash_column,

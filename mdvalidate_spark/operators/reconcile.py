@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..schemas import local_frame
+
 #: 15 lowercase hex digits = 60 bits — sampling.py's portable-hash
 #: convention: fits a signed long, converts identically in Spark
 #: (conv), DuckDB (CAST('0x…' AS BIGINT)) and Python (int(s, 16)).
@@ -275,9 +277,7 @@ def _bucket_filter(df: DataFrame, keys, n_buckets: int, buckets) -> DataFrame:
     # tables commonly do), which an unqualified F.col would resolve
     # ambiguously or silently clobber
     tmp = "__mdv_reconcile_b"
-    frame = df.sparkSession.createDataFrame(
-        [(i,) for i in ids], f"{tmp}_probe int"
-    )
+    frame = local_frame(df.sparkSession, f"{tmp}_probe int", [(i,) for i in ids])
     left = df.withColumn(tmp, b)
     return left.join(
         F.broadcast(frame), left[tmp] == frame[f"{tmp}_probe"], "left_semi"

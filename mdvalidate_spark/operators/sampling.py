@@ -59,7 +59,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..schemas import metric_columns
+from ..schemas import local_frame, metric_columns
 
 #: total order over violation rows within one (rule_id, partition_id) group —
 #: (image_id, column, kind) is unique per rule for every row-level kind (a
@@ -403,7 +403,7 @@ def sample_weighted(
         k + (hash_threshold(f, method),)
         for k, (_, f) in zip(keys, pairs)
     ]
-    thr = df.sparkSession.createDataFrame(thr_rows, schema=thr_schema)
+    thr = local_frame(df.sparkSession, thr_schema, thr_rows)
     # group keys join as strings so int32/int64/decimal width never splits a
     # group from its rate; NULL group values never match (→ default)
     cond = None

@@ -17,7 +17,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..schemas import metrics_frame, violations_frame
+from ..schemas import local_frame, metrics_frame, violations_frame
 from .dedup import cosine
 
 
@@ -388,10 +388,8 @@ def ivf_index_write(
     )
     assigned.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/cells")
     spark = corpus.sparkSession
-    # pandas/Arrow transport (not a list of tuples): a local list is
-    # parallelized into defaultParallelism pickled partitions and the
-    # coalesce(1) write would drain one Python-worker pipeline per
-    # partition serially in a single task (see _wide_dims_frame)
+    # a pandas frame: local_frame hands it to createDataFrame's Arrow path
+    # as is, which turns a NaN into null (a list of rows would keep it)
     import pandas as pd
 
     cent_pdf = pd.DataFrame(
@@ -400,8 +398,8 @@ def ivf_index_write(
             "centroid": [list(map(float, c)) for c in cents],
         }
     )
-    spark.createDataFrame(
-        cent_pdf, "cell int, centroid array<double>"
+    local_frame(
+        spark, "cell int, centroid array<double>", cent_pdf
     ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
     return cents
 
@@ -679,13 +677,8 @@ def _wide_dims_frame(spark, s, q, dim: int) -> DataFrame:
     dim_idx order, matching the narrow path's chained-expression order
     bit-for-bit (and keeping the result independent of local
     parallelism)."""
-    # ship through Arrow (pandas) rather than a list-of-tuples: a local list
-    # is parallelized into defaultParallelism PICKLED partitions, and the
-    # coalesce(1) below then drains that many Python-worker pipelines
-    # serially inside one task (~150 ms each — measured 4.7 s of the wide
-    # summary's 5.5 s at local[32]); Arrow batches are read JVM-side, so the
-    # same drain is pure JVM (guide §4: control how bytes cross the
-    # boundary). Values are bit-identical float64 either way.
+    # a pandas frame: local_frame hands it to createDataFrame's Arrow path
+    # as is, which turns a NaN into null (a list of rows would keep it)
     import pandas as pd
 
     pdf = pd.DataFrame(
@@ -695,7 +688,7 @@ def _wide_dims_frame(spark, s, q, dim: int) -> DataFrame:
             "q": pd.Series(q, dtype="float64"),
         }
     )
-    return spark.createDataFrame(pdf).coalesce(1)
+    return local_frame(spark, "dim_idx int, s double, q double", pdf).coalesce(1)
 
 
 def _wide_summary_row(spark, n, nx, snorm, s, q, dim: int, dead_eps: float) -> dict:
@@ -851,13 +844,14 @@ def embedding_anisotropy(
             dim,
             dead_eps,
         )
-        return df.sparkSession.createDataFrame(
+        return local_frame(
+            df.sparkSession,
+            "rows_used bigint, rows_excluded bigint, dead_dims bigint, "
+            "mean_norm double, mean_vector_norm double, anisotropy double",
             [tuple(row[k] for k in (
                 "rows_used", "rows_excluded", "dead_dims", "mean_norm",
                 "mean_vector_norm", "anisotropy",
             ))],
-            "rows_used bigint, rows_excluded bigint, dead_dims bigint, "
-            "mean_norm double, mean_vector_norm double, anisotropy double",
         )
     return _anisotropy_from_one(_health_agg(df, vec_col, dim), dim, dead_eps)
 

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..errors import KIND_OVER_VOLUME, KIND_UNDER_VOLUME
-from ..schemas import metrics_frame, violation_columns, violations_frame
+from ..schemas import local_frame, metrics_frame, violation_columns, violations_frame
 
 
 def top_keys(df: DataFrame, column: str, k: int = 10) -> DataFrame:
@@ -267,10 +267,11 @@ def concentration_report(
     )
     top_share = _micro(max_n, scoped) / 1e6 if scoped else None
     hhi = _micro(sum_sq, scoped * scoped) / 1e6 if scoped else None
-    return df.sparkSession.createDataFrame(
-        [(column, rows, scoped, distinct, top, top_share, hhi)],
+    return local_frame(
+        df.sparkSession,
         "column string, rows bigint, n_scoped bigint, distinct_values bigint, "
         "top_value string, top_share double, hhi double",
+        [(column, rows, scoped, distinct, top, top_share, hhi)],
     )
 
 

@@ -110,6 +110,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..schemas import local_frame
 from ..spec import (
     FORMATS,
     AlignmentRule,
@@ -980,6 +981,4 @@ def suggestion_rows(spark, spec: Spec) -> DataFrame:
                     f"{r.metric} <= {r.max:.6f} (min_words={r.min_words})",
                 )
             )
-    return spark.createDataFrame(
-        rows, "column_name string, kind string, detail string"
-    )
+    return local_frame(spark, "column_name string, kind string, detail string", rows)

@@ -17,14 +17,29 @@ keyword arguments are the column names and whose result is the column list
 in contract order. In a projection a Column passes through unchanged, a
 plain Python value becomes a literal, and None becomes a typed null —
 ``partition_id`` (a global rule's row) and ``value_str`` default to it.
+
+Every frame the driver builds itself, contract or not, is made by
+``local_frame``: the rows become a pyarrow table, column by column with the
+schema's Arrow types, and ``createDataFrame`` turns that table into a JVM
+``LocalRelation``. A list of rows handed to ``createDataFrame`` would become
+a parallelized Python RDD instead, and every action over it would start
+``defaultParallelism`` Python worker tasks only to unpickle the rows back
+into the JVM — the whole Python-worker cost of a run whose rules have no
+UDF. An empty local frame is ``LocalRelation <empty>``, which the optimizer
+prunes out of a union. Rows never pass through pandas, which would turn a
+NaN into a null; a pandas frame a caller built on purpose is passed through.
 """
 
 from __future__ import annotations
 
 from functools import reduce
 
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 VIOLATIONS_DDL = (
     "run_id string, partition_id int, rule_id string, image_id string, "
@@ -45,25 +60,41 @@ VIOLATION_STRUCT_DDL = (
 )
 
 
+def local_frame(spark: SparkSession, schema, rows=()) -> DataFrame:
+    """A driver-built frame as a JVM local relation: ``schema`` is a DDL
+    string or a ``StructType``, ``rows`` are tuples in schema order (or a
+    pandas frame, passed through as is)."""
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    if isinstance(rows, pd.DataFrame):
+        return spark.createDataFrame(rows, struct)
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    table = pa.Table.from_arrays(
+        [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def violations_frame(spark: SparkSession, rows=()) -> DataFrame:
     """Violations frame of driver-built row tuples in contract order."""
-    return spark.createDataFrame(list(rows), VIOLATIONS_DDL)
+    return local_frame(spark, VIOLATIONS_DDL, rows)
 
 
 def metrics_frame(spark: SparkSession, rows=()) -> DataFrame:
     """Metrics frame of driver-built row tuples in contract order."""
-    return spark.createDataFrame(list(rows), METRICS_DDL)
+    return local_frame(spark, METRICS_DDL, rows)
 
 
 def manifest_frame(spark: SparkSession, rows=()) -> DataFrame:
     """Manifest frame of ``Manifest.rows()``."""
-    return spark.createDataFrame(list(rows), MANIFEST_DDL)
+    return local_frame(spark, MANIFEST_DDL, rows)
 
 
 def _union(spark: SparkSession, ddl: str, frames) -> DataFrame:
     frames = [f for f in frames if f is not None]
     if not frames:
-        return spark.createDataFrame([], ddl)
+        return local_frame(spark, ddl)
     return reduce(lambda a, b: a.unionByName(b), frames)
 
 

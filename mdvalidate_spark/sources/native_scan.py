@@ -27,6 +27,8 @@ from collections.abc import Callable, Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from ..schemas import local_frame
+
 
 def parquet_files(df: DataFrame) -> list[str]:
     """Physical parquet files behind a DataFrame ([] if not file-backed)."""
@@ -202,10 +204,7 @@ def native_parquet_map(
             splits = row_group_splits(files, footer_cache)
         else:
             splits = [(f, 0, -1) for f in sorted(files)]
-    fdf = spark.createDataFrame(
-        [(f, lo, hi) for f, lo, hi in splits],
-        "path string, rg_lo int, rg_hi int",
-    )
+    fdf = local_frame(spark, "path string, rg_lo int, rg_hi int", splits)
     fdf = fdf.repartition(max(len(splits), 1))
 
     def scan(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

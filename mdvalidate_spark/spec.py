@@ -59,6 +59,7 @@ from .errors import (
     MixedLiteralAndBoundsError,
     SchemaError,
 )
+from .schemas import local_frame
 
 
 def _column_type(schema, path: str):
@@ -109,7 +110,7 @@ def _compile_regex(rule_id: str, pattern: str):
 def _empty_frame(spark: SparkSession, schema: StructType):
     """The empty frame a spec's expressions are analyzed against: one per
     schema, not one driver round trip per expression."""
-    return spark.createDataFrame([], schema)
+    return local_frame(spark, schema)
 
 
 def _analyze_expr(rule, schema, expr: str, label: str, required_type=None,

@@ -36,7 +36,7 @@ from ..errors import SchemaError
 from ..operators.row_rules import with_partition_id
 from ..plans.manifest import write_json
 from ..run import ValidationRun, _require_dims
-from ..schemas import union_metrics, union_violations
+from ..schemas import local_frame, union_metrics, union_violations
 from ..spec import Spec, VolumeRule
 
 #: a volume rule judges a partition manifest file mode never keeps
@@ -92,7 +92,7 @@ class FileIncrementalValidator:
         pending = self.pending_files()
         footer = _footer_schema(pending[0]) if pending else None
         schema = (
-            with_partition_id(spark.createDataFrame([], footer), spec).schema
+            with_partition_id(local_frame(spark, footer), spec).schema
             if footer is not None
             else None
         )

@@ -40,6 +40,7 @@ from ..schemas import (
     MANIFEST_DDL,
     METRICS_DDL,
     VIOLATIONS_DDL,
+    local_frame,
     union_metrics,
     union_violations,
     violation_columns,
@@ -86,7 +87,7 @@ def _read_sink(spark, checkpoint_dir: str, name: str, schema) -> DataFrame:
     schema = StructType([*schema.fields, StructField("batch_id", IntegerType())])
     path = os.path.join(checkpoint_dir, name)
     if not os.path.exists(path):
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, schema)
     return spark.read.schema(schema).parquet(path)
 
 
@@ -189,7 +190,7 @@ def stream_finalize(spark, spec: Spec, checkpoint_dir: str, run_id: str = "strea
         run = ValidationRun(
             spark,
             merged,
-            spark.createDataFrame([], schema),
+            local_frame(spark, schema),
             run_id=run_id,
         )
         for fam in _INCREMENTAL_FAMILIES:

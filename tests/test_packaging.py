@@ -65,3 +65,22 @@ def test_output_contract_is_declared_in_schemas_only():
             if typed_null in re.sub(r"\s", "", src):
                 offenders.append((os.path.relpath(path, pkg), typed_null))
     assert offenders == []
+
+
+def test_driver_built_frames_go_through_local_frame():
+    """``createDataFrame`` is called in ``schemas.py`` alone: every other
+    module builds its driver-side frames with ``schemas.local_frame``, so
+    none of them becomes a parallelized Python RDD."""
+    from mdvalidate_spark import schemas
+
+    pkg = os.path.dirname(schemas.__file__)
+    offenders = []
+    for root, _, names in os.walk(pkg):
+        for name in names:
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == schemas.__file__:
+                continue
+            with open(path) as f:
+                if "createDataFrame(" in f.read():
+                    offenders.append(os.path.relpath(path, pkg))
+    assert offenders == []
